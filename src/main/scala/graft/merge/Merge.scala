@@ -1,6 +1,7 @@
 package graft.merge
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,34 +40,81 @@ object Merge {
       case None => base
     }
 
+  /** A rename that fails loudly: Hadoop filesystems may report a
+    * failed rename (HDFS: a missing source) as `false`, not throw. */
+  def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new IOException(s"could not rename $src to $dst")
+
+  /** THE crash-safe directory swap every rewrite here uses — the
+    * filesystem stand-in for the reference's atomic `CREATE OR REPLACE
+    * TABLE`: drop a stale `bak`, move `live` (if any) to `bak`, move the
+    * complete `staged` dir to `live`, roll back if that fails. A crash
+    * between the renames leaves `bak` without `live`: see [[heal]]. The
+    * caller deletes `bak` or keeps it as a rollback. */
+  def publish(fs: FileSystem, staged: Path, live: Path, bak: Path): Unit = {
+    fs.delete(bak, true)
+    val displaced = fs.exists(live)
+    if (displaced) rename(fs, live, bak)
+    try rename(fs, staged, live)
+    catch {
+      case e: IOException =>
+        if (displaced) fs.rename(bak, live) // roll back
+        throw e
+    }
+  }
+
+  /** Converge an interrupted [[publish]]: `bak` without `live` is
+    * restored (the previous generation is the safe root; the rewrite
+    * re-runs); `bak` beside `live` is debris and deleted. Staging dirs
+    * are the caller's. True when `bak` was restored. */
+  def heal(fs: FileSystem, live: Path, bak: Path): Boolean =
+    fs.exists(bak) && {
+      if (fs.exists(live)) { fs.delete(bak, true); false }
+      else { rename(fs, bak, live); true }
+    }
+
+  /** [[heal]] every `<bakPrefix><k>` child of `root` against its
+    * `<livePrefix><k>` sibling — the per-partition form shared by the
+    * `pmonth=` and `bucket=` layouts. Returns the number restored. */
+  private[graft] def healChildren(fs: FileSystem, root: Path,
+                                  livePrefix: String, bakPrefix: String): Int =
+    if (!fs.exists(root)) 0
+    else fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.startsWith(bakPrefix))
+      .count(name => heal(fs,
+        new Path(root, livePrefix + name.stripPrefix(bakPrefix)),
+        new Path(root, name)))
+
   /** S7 — overwrite-own-input table rewrite. BigQuery's
     * `CREATE OR REPLACE TABLE old AS (… FROM old …)` reads and replaces
     * the same table in one statement; Spark cannot overwrite a path it is
-    * reading, so: write to a sibling temp dir, then swap via filesystem
-    * renames (rename is atomic on HDFS/local within one volume). The
+    * reading, so: write to a sibling temp dir, then [[publish]]. The
     * displaced old data survives at `<path>.bak` until the next rewrite —
     * a cheap poor-man's version for rollback. */
   def overwriteAtomic(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(path)
+    val fs = fsOf(df.sparkSession, path)
     val tmp = new Path(path + ".tmp")
-    val bak = new Path(path + ".bak")
     fs.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(bak, true)
-    if (fs.exists(target) && !fs.rename(target, bak))
-      throw new java.io.IOException(s"could not displace $target")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(bak, target) // roll back
-      throw new java.io.IOException(s"could not publish $tmp to $target")
-    }
+    publish(fs, tmp, new Path(path), new Path(path + ".bak"))
   }
+
+  /** Heal an [[overwriteAtomic]] interrupted between its renames. Every
+    * caller that reads `path` before rewriting it runs this first:
+    * unhealed, the absent `path` reads as a missing (or empty) table and
+    * the rewrite's own `.bak` delete destroys the last good generation. */
+  def healOverwrite(spark: SparkSession, path: String): Unit =
+    heal(fsOf(spark, path), new Path(path), new Path(path + ".bak"))
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The full update step (reference `update_table`, `config.py:201-212`):
     * read base, merge staging in, atomically rewrite base. */
   def updateTable(spark: SparkSession, basePath: String,
                   staging: DataFrame, dateCol: String): Unit = {
+    healOverwrite(spark, basePath)
     val base = spark.read.parquet(basePath)
     // The write job scans basePath while writing the sibling tmp dir —
     // the input is only displaced by the rename AFTER the job completes,
@@ -162,13 +210,11 @@ object Merge {
     * than maxFiles·targetBytes — is skipped on re-run, so large healthy
     * partitions are never re-rewritten.
     *
-    * Crash contract: every run begins with [[recoverCompaction]], so a
-    * kill at ANY point — including between the displace and publish
-    * renames, where the partition is momentarily absent — is healed by
-    * the next run (the original generation is restored from the
-    * dot-prefixed backup). Temp/backup dirs are dot-prefixed, so
-    * partition discovery never lists them and a crashed run never
-    * double-counts rows.
+    * Crash contract: each partition is swapped in by [[publish]] and
+    * every run begins with [[recoverCompaction]], so a kill at ANY
+    * point is healed by the next run. Temp/backup dirs are
+    * dot-prefixed, so partition discovery never lists them and a
+    * crashed run never double-counts rows.
     *
     * Reader contract (single-maintainer, like every rewrite here):
     * compaction of partition A never touches partition B — concurrent
@@ -181,8 +227,7 @@ object Merge {
   def compactPartitions(spark: SparkSession, basePath: String,
                         maxFiles: Int = 8,
                         targetBytes: Long = 128L << 20): Int = {
-    val fs = new Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, basePath)
     recoverCompaction(spark, basePath)
     val parts = fs.listStatus(new Path(basePath)).toSeq
       .filter(_.isDirectory)
@@ -202,13 +247,7 @@ object Merge {
         // source is only displaced by the renames after it completes
         spark.read.parquet(p.getPath.toString).coalesce(n)
           .write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(bak, true)
-        if (!fs.rename(p.getPath, bak))
-          throw new java.io.IOException(s"could not displace ${p.getPath}")
-        if (!fs.rename(tmp, p.getPath)) {
-          fs.rename(bak, p.getPath) // roll back
-          throw new java.io.IOException(s"could not publish $tmp")
-        }
+        publish(fs, tmp, p.getPath, bak)
         fs.delete(bak, true)
         compacted += 1
       }
@@ -216,45 +255,20 @@ object Merge {
     compacted
   }
 
-  /** Heal a compaction interrupted by a crash. The swap sequence is
-    * `write tmp → delete bak → rename(partition→bak) →
-    * rename(tmp→partition) → delete bak`; each possible crash point
-    * leaves a distinct, recognizable state:
-    *
-    *  - bak present, partition ABSENT — died between the two renames
-    *    (the dangerous window: the month is invisible to readers and,
-    *    unhealed, to every later merge). Restore the original
-    *    generation: rename bak back to the live name.
-    *  - bak present, partition present — died after publish, before the
-    *    backup delete. The compacted generation is live; drop the bak.
-    *  - tmp present (any time) — an incomplete or superseded write;
-    *    delete it. When a bak was just restored this discards a fully
-    *    written compacted generation, deliberately: the original data
-    *    is the safe root, and the next run simply re-compacts.
-    *
-    * Invoked automatically as the first step of [[compactPartitions]];
-    * public so a restarting pipeline can also heal without compacting. */
+  /** Heal a compaction interrupted by a crash: [[heal]] each
+    * `.compact-bak-<m>` against `pmonth=<m>` and delete every
+    * `.compact-tmp-<m>` (an incomplete or superseded write — when a
+    * backup was just restored, the next run simply re-compacts).
+    * Returns the number of partitions restored. Invoked as the first
+    * step of [[compactPartitions]]; public so a restarting pipeline
+    * can also heal without compacting. */
   def recoverCompaction(spark: SparkSession, basePath: String): Int = {
-    val fs = new Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = fs.listStatus(new Path(basePath)).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-    var healed = 0
-    entries.filter(_.startsWith(".compact-bak-")).foreach { name =>
-      val month = name.stripPrefix(".compact-bak-")
-      val live = new Path(basePath, s"pmonth=$month")
-      if (!fs.exists(live)) {
-        if (!fs.rename(new Path(basePath, name), live))
-          throw new java.io.IOException(
-            s"could not restore $name to $live")
-        healed += 1
-      } else {
-        fs.delete(new Path(basePath, name), true)
-      }
-    }
-    entries.filter(_.startsWith(".compact-tmp-")).foreach { name =>
-      fs.delete(new Path(basePath, name), true)
-    }
+    val fs = fsOf(spark, basePath)
+    val root = new Path(basePath)
+    val healed = healChildren(fs, root, "pmonth=", ".compact-bak-")
+    fs.listStatus(root).map(_.getPath)
+      .filter(_.getName.startsWith(".compact-tmp-"))
+      .foreach(fs.delete(_, true))
     healed
   }
 

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   * clock here so replay at any order stays exact.)
   *
   * Store layout/merge: `pmod(key, N)` bucketed, touched-bucket
-  * union + re-reduce, recoverable two-rename publish — the shared
-  * [[BucketedMonoidStore]] contract. Per-batch work is
+  * union + re-reduce, [[graft.merge.Merge.publish]] per bucket — the
+  * shared [[BucketedMonoidStore]] contract. Per-batch work is
   * O(batch + touched buckets), independent of store size and log
   * depth; store size is |touched keys|, never log volume (the
   * per-batch map-side max_by collapses the log before anything is

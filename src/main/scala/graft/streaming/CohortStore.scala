@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.StructType
   *    the same monoid properties.
   *
   * Both stores are bucketed `pmod(user_id, N)` and merged only in the
-  * buckets a batch touches (union + re-reduce, published by the
-  * recoverable two-rename swap every store here uses), so per-batch
+  * buckets a batch touches (union + re-reduce, published by
+  * [[graft.merge.Merge.publish]] per bucket), so per-batch
   * work is O(batch + touched buckets) and redelivery is a value no-op.
   * Store sizes are |users| and |distinct (user, week)| — the same
   * bounds the batch operator's shuffles have, NOT event volume: the

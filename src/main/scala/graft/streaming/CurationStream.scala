@@ -27,10 +27,10 @@ import graft.merge.Merge
   * form (atomic sibling-dir rewrite, `.bak` rollback);
   * [[mergeCuratedBatchPartitioned]] is the 100 TB form — the store
   * partitioned by the dedup key's hash bucket, each merge touching only
-  * delivered buckets, published by the same recoverable two-rename swap
-  * as [[graft.merge.Merge.compactPartitions]]. Checkpointed source
-  * offsets + an idempotent, order-independent, crash-recoverable merge
-  * ⇒ effectively-once, the same contract as the reference pipeline's
+  * delivered buckets, each swapped in by [[graft.merge.Merge.publish]]
+  * like every rewrite here. Checkpointed source offsets + an
+  * idempotent, order-independent, crash-recoverable merge ⇒
+  * effectively-once, the same contract as the reference pipeline's
   * merge stage. Single-maintainer, like every rewrite in this engine.
   */
 object CurationStream {
@@ -43,6 +43,7 @@ object CurationStream {
                         storePath: String): Unit = {
     val fs = new Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.healOverwrite(spark, storePath)
     val unioned =
       if (fs.exists(new Path(storePath)))
         spark.read.parquet(storePath).unionByName(batch)
@@ -74,29 +75,15 @@ object CurationStream {
         org.apache.spark.sql.functions.col("scrubbed"), 1, 40)),
     org.apache.spark.sql.functions.lit(storeBuckets.toLong))
 
-  /** Heal a partitioned-store merge interrupted by a crash — same state
-    * machine as [[graft.merge.Merge.recoverCompaction]]: a
-    * `.merge-bak-<b>` whose `bucket=<b>` is missing means the swap died
-    * between its two renames (restore the backup); one whose live dir
-    * exists is post-publish debris (delete); a leftover staging dir is
-    * an incomplete write (delete). Runs automatically at the start of
-    * every [[mergeCuratedBatchPartitioned]]. */
+  /** Heal a partitioned-store merge interrupted by a crash:
+    * [[graft.merge.Merge.heal]] each `.merge-bak-<b>` against
+    * `bucket=<b>` and delete the staging dir. Returns the number of
+    * buckets restored. Runs at the start of every bucket-store merge. */
   def recoverStore(spark: SparkSession, storePath: String): Int = {
     val fs = new Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(storePath))) return 0
-    var healed = 0
-    fs.listStatus(new Path(storePath)).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith(".merge-bak-"))
-      .foreach { name =>
-        val live = new Path(storePath,
-          s"bucket=${name.stripPrefix(".merge-bak-")}")
-        if (!fs.exists(live)) {
-          if (!fs.rename(new Path(storePath, name), live))
-            throw new java.io.IOException(s"could not restore $name")
-          healed += 1
-        } else fs.delete(new Path(storePath, name), true)
-      }
+    val healed =
+      Merge.healChildren(fs, new Path(storePath), "bucket=", ".merge-bak-")
     fs.delete(new Path(storePath + ".merge-tmp"), true)
     healed
   }
@@ -114,12 +101,9 @@ object CurationStream {
     * Publish is NOT Spark's dynamic partition overwrite (whose
     * delete-then-rename commit can lose a bucket's prior survivors on a
     * crash, and whose session-conf toggle would race concurrent
-    * writers): the merged generation is staged to a sibling dir, then
-    * each touched bucket is swapped in by the same recoverable
-    * two-rename sequence as compaction — [[recoverStore]] heals every
-    * crash point on the next merge. Same convergence contract as the
-    * simple form: min per key over store∪batch, idempotent under
-    * redelivery, order-independent. */
+    * writers): see [[publishTouchedBuckets]]. Same convergence
+    * contract as the simple form: min per key over store∪batch,
+    * idempotent under redelivery, order-independent. */
   def mergeCuratedBatchPartitioned(spark: SparkSession, batch: DataFrame,
                                    storePath: String): Unit = {
     import org.apache.spark.sql.functions._
@@ -151,10 +135,11 @@ object CurationStream {
     * bucket-partitioned store in the streaming pipeline (curated store,
     * signature index): stage the new generation OUTSIDE the store dir
     * (partition discovery never sees it), then swap each touched bucket
-    * in with the two-rename sequence [[recoverStore]] heals. `merged`
-    * must carry a `bucket` column and contain rows ONLY for the touched
-    * buckets (a touched bucket always stages non-empty: it holds at
-    * least the batch rows that made it touched). */
+    * in with [[graft.merge.Merge.publish]]; [[recoverStore]] heals an
+    * interrupted swap. `merged` must carry a `bucket` column and
+    * contain rows ONLY for the touched buckets (a touched bucket
+    * always stages non-empty: it holds at least the batch rows that
+    * made it touched). */
   private[graft] def publishTouchedBuckets(
       spark: SparkSession, storePath: String, merged: DataFrame,
       touched: Set[Long]): Unit = {
@@ -164,18 +149,10 @@ object CurationStream {
     fs.delete(tmp, true)
     merged.write.partitionBy("bucket").parquet(tmp.toString)
     touched.foreach { b =>
-      val live = new Path(storePath, s"bucket=$b")
       val bak = new Path(storePath, s".merge-bak-$b")
-      val staged = new Path(tmp, s"bucket=$b")
+      Merge.publish(fs, new Path(tmp, s"bucket=$b"),
+        new Path(storePath, s"bucket=$b"), bak)
       fs.delete(bak, true)
-      val displaced = fs.exists(live)
-      if (displaced && !fs.rename(live, bak))
-        throw new java.io.IOException(s"could not displace $live")
-      if (!fs.rename(staged, live)) {
-        if (displaced) fs.rename(bak, live) // roll back
-        throw new java.io.IOException(s"could not publish $staged")
-      }
-      if (displaced) fs.delete(bak, true)
     }
     fs.delete(tmp, true)
   }
@@ -342,8 +319,8 @@ object CurationStream {
     * when a later batch delivers a smaller doc_id for an existing key,
     * the dethroned survivor's signature rows and pairs are retired in
     * the same update, so the view always describes the store's current
-    * survivor set. Signature/pair stores republish through the
-    * [[graft.merge.Merge.overwriteAtomic]] two-rename swap; at 100 TB
+    * survivor set. Signature/pair stores republish through
+    * [[graft.merge.Merge.overwriteAtomic]]; at 100 TB
     * both would adopt the SAME `bucket=pmod(xxhash64(key40), N)`
     * partitioned layout and touched-bucket swap as the curated store
     * itself ([[mergeCuratedBatchPartitioned]] — signature rows are
@@ -386,6 +363,7 @@ object CurationStream {
       signaturesOf(winners.select(col("doc_id"), col("scrubbed"))))
     try {
       if (partitionedSig) recoverStore(spark, sigPath) // heal crash debris
+      else Merge.healOverwrite(spark, sigPath)
       val oldSigs =
         if (fs.exists(new Path(sigPath)))
           Some(spark.read.parquet(sigPath).drop("bucket"))
@@ -440,6 +418,7 @@ object CurationStream {
               size(array_union(col("ga.gs"), col("gb.gs")))).as("jacc"))
           .filter(col("jacc") >= nearDupMinJaccard)
         // pair view: retire dethroned ids, fold in this batch's finds
+        Merge.healOverwrite(spark, pairsPath)
         val oldPairs =
           if (fs.exists(new Path(pairsPath)))
             Some(spark.read.parquet(pairsPath))
@@ -495,6 +474,7 @@ object CurationStream {
                         clustersPath: String): Unit = {
     val fs = new Path(pairsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.healOverwrite(spark, pairsPath)
     if (!fs.exists(new Path(pairsPath))) return
     val pairs = spark.read.parquet(pairsPath).select("doc_a", "doc_b")
     val clusters = graft.operators.ConnectedComponents
@@ -839,7 +819,7 @@ object CurationStream {
     * Batch work: probe = broadcast joins against the bounded bit
     * table (map-only over the batch), update = union of ≤ 3·batch
     * distinct positions into touched buckets
-    * ([[publishTouchedBuckets]]'s recoverable two-rename publish).
+    * ([[publishTouchedBuckets]]).
     *
     * Effectively-once: novel output goes to an overwrite-own-dir
     * `batch=<id>` with a marker written AFTER the data (the
@@ -904,10 +884,10 @@ object CurationStream {
     * full-row distinct (vectors are immutable per vec_id, so a
     * redelivered row is byte-identical and distinct() makes the merge
     * idempotent; set union makes it order-independent), republished by
-    * the same recoverable two-rename swap as every store here. Serving
-    * reads the store through [[annStoreIndex]] at any moment — a query
-    * between batches sees a complete, partition-pruned index that is
-    * merely missing the not-yet-delivered vectors. */
+    * [[publishTouchedBuckets]]. Serving reads the store through
+    * [[annStoreIndex]] at any moment — a query between batches sees a
+    * complete, partition-pruned index that is merely missing the
+    * not-yet-delivered vectors. */
   def appendAnnBatch(spark: SparkSession, batch: DataFrame,
                      annPath: String,
                      centroids: Array[Array[Double]],
@@ -984,11 +964,11 @@ object CurationStream {
     * (round-8 verdict ask #7): retrain the coarse quantizer and the PQ
     * codebooks on the LIVE corpus under the sampled-fit posture,
     * re-assign and re-encode every stored vector with the new
-    * artifacts into a STAGED store, and publish by the same
-    * displace/rename/rollback swap every store here uses — a serving
-    * read through [[annStoreIndex]] sees either the old complete store
-    * or the new complete store, never a mix, so queries keep being
-    * served across the refit boundary. Returns the new
+    * artifacts into a STAGED store, and publish it through
+    * [[graft.merge.Merge.publish]] — a serving read through
+    * [[annStoreIndex]] sees either the old complete store or the new
+    * complete store, never a mix, so queries keep being served across
+    * the refit boundary. Returns the new
     * (centroids, codebooks) for the caller to relaunch its append
     * stream against (the artifacts are frozen INPUTS to the stream, so
     * a refit is the one moment the stream composition restarts — same
@@ -1002,41 +982,10 @@ object CurationStream {
     * parallel; the swap is O(1) metadata. A refit never touches the
     * source corpus — the store IS the corpus of record for serving.
     *
-    * Crash posture: a crash mid-stage leaves only `.refit-tmp` (the
-    * live store untouched — next refit deletes and restages); a crash
-    * between the two renames leaves `.refit-bak` as the complete old
-    * store and is rolled back or completed by inspection; the marker
+    * Crash posture: the swap is [[graft.merge.Merge.publish]] with
+    * `.refit-bak` as its backup, healed by [[recoverRefit]]; the marker
     * is written into the staged store BEFORE the swap, so the
     * published store is always complete-with-marker. */
-  /** Heal a refit swap interrupted by a crash — the state machine the
-    * two renames imply (mirrors [[recoverStore]], which only knows the
-    * per-bucket `.merge-bak-*` protocol and NOT this whole-store one):
-    *  - `.refit-bak` present and the live store MISSING: the crash hit
-    *    between the two renames — restore the backup (the complete old
-    *    store keeps serving; the refit simply re-runs). Without this,
-    *    the next appendAnnBatch would see no store and silently
-    *    recreate one from a single batch, and a later refit's
-    *    bak-delete would then destroy the old corpus.
-    *  - `.refit-bak` present and the live store present: post-publish
-    *    debris — delete the bak.
-    *  - `.refit-tmp`: an incomplete stage — delete.
-    * Runs at the start of every [[refitAnnStore]], [[appendAnnBatch]]
-    * and [[annStaleness]], so every reader/mutator of the store heals
-    * the swap before trusting it. */
-  def recoverRefit(spark: SparkSession, annPath: String): Unit = {
-    val fs = new Path(annPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new Path(annPath + ".refit-bak")
-    val live = new Path(annPath)
-    if (fs.exists(bak)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(bak, live))
-          throw new java.io.IOException(s"could not restore $bak")
-      } else fs.delete(bak, true)
-    }
-    fs.delete(new Path(annPath + ".refit-tmp"), true)
-  }
-
   def refitAnnStore(spark: SparkSession, annPath: String, k: Int = 16,
                     fitSample: Double = 1.0)
       : (Array[Array[Double]], graft.ext.Similarity.PqModel) = {
@@ -1064,17 +1013,23 @@ object CurationStream {
       val n = spark.read.parquet(staged.toString).count()
       fs.create(new Path(staged, annFitMarker(n)), true).close()
       val bak = new Path(annPath + ".refit-bak")
-      fs.delete(bak, true)
-      val livePath = new Path(annPath)
-      if (!fs.rename(livePath, bak))
-        throw new java.io.IOException(s"could not displace $annPath")
-      if (!fs.rename(staged, livePath)) {
-        fs.rename(bak, livePath) // roll back: old store keeps serving
-        throw new java.io.IOException(s"could not publish refit store")
-      }
+      Merge.publish(fs, staged, new Path(annPath), bak)
       fs.delete(bak, true)
       (centroids, model)
     } finally release()
+  }
+
+  /** Heal a [[refitAnnStore]] swap interrupted by a crash:
+    * [[graft.merge.Merge.heal]] the store against `.refit-bak` and
+    * delete the `.refit-tmp` stage. Runs at the start of every
+    * [[refitAnnStore]], [[appendAnnBatch]] and [[annStaleness]], so
+    * every reader/mutator of the store heals the swap before trusting
+    * it. */
+  def recoverRefit(spark: SparkSession, annPath: String): Unit = {
+    val fs = new Path(annPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, new Path(annPath), new Path(annPath + ".refit-bak"))
+    fs.delete(new Path(annPath + ".refit-tmp"), true)
   }
 
   /** Wire the index-maintenance stream: vector files under `uploadDir`

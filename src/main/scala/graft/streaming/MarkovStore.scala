@@ -159,7 +159,7 @@ object MarkovStore {
     * CRASH SAFETY is single-rename: both payloads — the collapsed
     * rows and the updated `_stitch` count table nested inside the same
     * temp dir — become visible via the one `batch=-1` rename of
-    * [[StoreCompaction]]'s protocol, whose `_ABSORBED` manifest and
+    * [[StoreCompaction.fold]], whose `_ABSORBED` manifest and
     * [[StoreCompaction.recover]] converge any interruption. There is
     * NO window where the stitch counts are installed but their source
     * segments still stitch at read time (the double-count hazard a
@@ -167,47 +167,26 @@ object MarkovStore {
     * same rename. Re-running after success is a no-op (nothing left
     * to fold). Returns the number of segment dirs absorbed. */
   def foldSegments(spark: SparkSession, storePath: String,
-                   upto: Long): Int = {
-    val segPath = s"$storePath/segments"
-    StoreCompaction.recover(spark, segPath)
-    val root = new org.apache.hadoop.fs.Path(segPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val dirs = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .filter { p =>
-        val id = p.getName.stripPrefix("batch=").toLong
-        id == StoreCompaction.baseBatchId || id <= upto
-      }
-    if (dirs.length <= 1) return 0 // nothing to fold
-    val segs = spark.read.parquet(dirs.map(_.toString): _*)
-    val stitch = stitchBase(spark, storePath)
-      .unionByName(stitchPairs(segs))
-      .groupBy("is_train", "from_type", "to_type").agg(sum("n").as("n"))
-    val collapsed = segs.groupBy("user_id").agg(
-      min(struct(col("f_ts"), col("f_eid"), col("f_type"))).as("f"),
-      max(struct(col("l_ts"), col("l_eid"), col("l_type"))).as("l"))
-      .select(col("user_id"),
-        col("f.f_ts").as("f_ts"), col("f.f_eid").as("f_eid"),
-        col("f.f_type").as("f_type"),
-        col("l.l_ts").as("l_ts"), col("l.l_eid").as("l_eid"),
-        col("l.l_type").as("l_type"))
-    val tmp = new org.apache.hadoop.fs.Path(root, s".compact-tmp-$upto")
-    // both payloads durable in the temp BEFORE the manifest: stitch is
-    // computed (it reads the old base's _stitch) before anything moves
-    collapsed.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    stitch.coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, stitchDirName).toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, StoreCompaction.manifestName), true)
-    out.write(dirs.map(_.getName).mkString("\n").getBytes("UTF-8"))
-    out.close()
-    dirs.foreach(fs.delete(_, true))
-    fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(root,
-        s"batch=${StoreCompaction.baseBatchId}"))
-    dirs.length
-  }
+                   upto: Long): Int =
+    StoreCompaction.fold(spark, s"$storePath/segments", upto,
+        foldSingle = false) { (segs, tmp) =>
+      val stitch = stitchBase(spark, storePath)
+        .unionByName(stitchPairs(segs))
+        .groupBy("is_train", "from_type", "to_type").agg(sum("n").as("n"))
+      val collapsed = segs.groupBy("user_id").agg(
+        min(struct(col("f_ts"), col("f_eid"), col("f_type"))).as("f"),
+        max(struct(col("l_ts"), col("l_eid"), col("l_type"))).as("l"))
+        .select(col("user_id"),
+          col("f.f_ts").as("f_ts"), col("f.f_eid").as("f_eid"),
+          col("f.f_type").as("f_type"),
+          col("l.l_ts").as("l_ts"), col("l.l_eid").as("l_eid"),
+          col("l.l_type").as("l_type"))
+      // both payloads durable in the temp BEFORE the manifest: stitch is
+      // computed (it reads the old base's _stitch) before anything moves
+      collapsed.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      stitch.coalesce(1).write.mode("overwrite")
+        .parquet(new org.apache.hadoop.fs.Path(tmp, stitchDirName).toString)
+    }
 
   /** Live train → serve → score readout ≡ [[MarkovEval.markovEval]]
     * over the absorbed events. */

@@ -90,9 +90,10 @@ final class MonoidStore(val path: String,
   * that needs the delta layout for replay safety; an idempotent reduce
   * makes redelivery a value no-op, so the store can BE the merged
   * view: `pmod(key, N)`-bucketed parquet, and a batch unions into only
-  * the buckets it touches (union + re-reduce + the recoverable
-  * two-rename publish). Per-batch work is O(batch + touched buckets),
-  * independent of store size; the read side pays zero fold cost.
+  * the buckets it touches (union + re-reduce + a
+  * [[graft.merge.Merge.publish]] per bucket). Per-batch work is
+  * O(batch + touched buckets), independent of store size; the read
+  * side pays zero fold cost.
   *
   * Previously hand-rolled identically by CdcStore, CohortStore and
   * KmvStore — defined once here, with each store contributing only its

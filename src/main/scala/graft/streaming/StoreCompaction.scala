@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.merge.Merge
 
 /** MONOID STORE COMPACTION — the maintenance pass every
   * per-batch-delta store ([[MonoidStore]]: [[HeavyHittersStore]],
@@ -44,13 +45,7 @@ import org.apache.spark.sql.functions._
 object StoreCompaction {
 
   val baseBatchId: Long = -1L
-  private[streaming] val manifestName = "_ABSORBED"
-
-  private def listTmp(fs: org.apache.hadoop.fs.FileSystem,
-                      root: Path): Seq[Path] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(".compact-tmp-")).toSeq
+  private val manifestName = "_ABSORBED"
 
   /** Converge a crashed compaction: finish deleting the absorbed
     * dirs named in the temp's manifest, then install the temp as the
@@ -58,22 +53,28 @@ object StoreCompaction {
   def recover(spark: SparkSession, storePath: String): Unit = {
     val root = new Path(storePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listTmp(fs, root).foreach { tmp =>
-      val mf = new Path(tmp, manifestName)
-      if (!fs.exists(mf)) fs.delete(tmp, true) // died mid-write: discard
-      else {
-        val in = fs.open(mf)
-        val absorbed = scala.io.Source.fromInputStream(in).getLines().toList
-        in.close()
-        absorbed.map(new Path(root, _)).filter(fs.exists)
-          .foreach(fs.delete(_, true))
-        // the manifest travels INTO the installed base (underscore
-        // files are invisible to parquet readers): deleting it before
-        // the rename would open a window where a crash loses both the
-        // manifest and the absorbed dirs
-        fs.rename(tmp, new Path(root, s"batch=$baseBatchId"))
+    if (fs.exists(root)) fs.listStatus(root).map(_.getPath)
+      .filter(_.getName.startsWith(".compact-tmp-")).foreach { tmp =>
+        // no manifest: died mid-write, discard
+        if (!fs.exists(new Path(tmp, manifestName))) fs.delete(tmp, true)
+        else absorb(fs, root, tmp)
       }
-    }
+  }
+
+  /** The commit step of [[fold]] and of [[recover]]: delete the dirs
+    * the temp's manifest names, then install the temp as the base. */
+  private def absorb(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+                     tmp: Path): Unit = {
+    val in = fs.open(new Path(tmp, manifestName))
+    val absorbed = try scala.io.Source.fromInputStream(in).getLines().toList
+      finally in.close()
+    absorbed.map(new Path(root, _)).filter(fs.exists)
+      .foreach(fs.delete(_, true))
+    // the manifest travels INTO the installed base (underscore
+    // files are invisible to parquet readers): deleting it before
+    // the rename would open a window where a crash loses both the
+    // manifest and the absorbed dirs
+    Merge.rename(fs, tmp, new Path(root, s"batch=$baseBatchId"))
   }
 
   /** Fold every `batch=<id>` delta with id ≤ `upto` (including a
@@ -96,7 +97,20 @@ object StoreCompaction {
     * silently retired nobody (round-16 ADVICE). */
   def compactWith(spark: SparkSession, storePath: String,
                   reduce: DataFrame => DataFrame, upto: Long,
-                  foldSingle: Boolean = false): Int = {
+                  foldSingle: Boolean = false): Int =
+    fold(spark, storePath, upto, foldSingle) { (delta, tmp) =>
+      reduce(delta)
+        .select(delta.columns.map(col): _*) // original column order
+        .coalesce(1)
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
+
+  /** The manifest fold every delta-store compaction runs: `write`
+    * gets the eligible dirs (id ≤ `upto`, plus the base) as one frame
+    * and the temp dir to fill. Returns the number of dirs absorbed. */
+  private[streaming] def fold(spark: SparkSession, storePath: String,
+                              upto: Long, foldSingle: Boolean)(
+      write: (DataFrame, Path) => Unit): Int = {
     recover(spark, storePath)
     val root = new Path(storePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -108,18 +122,13 @@ object StoreCompaction {
         id == baseBatchId || id <= upto
       }
     if (dirs.length < (if (foldSingle) 1 else 2)) return 0 // nothing to fold
-    val delta = spark.read.parquet(dirs.map(_.toString): _*)
-    val merged = reduce(delta)
-      .select(delta.columns.map(col): _*) // original column order
-      .coalesce(1)
     val tmp = new Path(root, s".compact-tmp-$upto")
-    merged.write.mode("overwrite").parquet(tmp.toString)
+    write(spark.read.parquet(dirs.map(_.toString): _*), tmp)
     // durable manifest BEFORE any delete — recovery replays from it
     val out = fs.create(new Path(tmp, manifestName), true)
     out.write(dirs.map(_.getName).mkString("\n").getBytes("UTF-8"))
     out.close()
-    dirs.foreach(fs.delete(_, true))
-    fs.rename(tmp, new Path(root, s"batch=$baseBatchId"))
+    absorb(fs, root, tmp)
     dirs.length
   }
 }

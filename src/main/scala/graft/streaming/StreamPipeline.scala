@@ -74,15 +74,19 @@ object StreamPipeline {
   def decodeMessage(df: DataFrame): DataFrame =
     df.withColumn("payload", unbase64(col("payload")).cast("string"))
 
+  /** Move the batch's raw files (URL-encoded `_metadata.file_path`
+    * URIs) into errorDir. A failed move throws: the batch then fails
+    * before its offset commits, so the file is retried instead of
+    * being stranded in uploadDir. */
   def deadLetter(spark: SparkSession, files: Seq[String], errorDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val err = new Path(errorDir)
     val fs = err.getFileSystem(conf)
     fs.mkdirs(err)
     files.foreach { f =>
-      val src = new Path(f)
+      val src = new Path(new java.net.URI(f))
       log.warn(s"dead-lettering $src -> $errorDir")
-      fs.rename(src, new Path(err, src.getName))
+      Merge.rename(fs, src, new Path(err, src.getName))
     }
   }
 
@@ -152,10 +156,13 @@ object StreamPipeline {
           .collect().map(_.getString(0)).toSeq
         log.info(s"[${conf.name}] batch $batchId: ${files.size} file(s)")
         try {
-          val cleaned = Clean.clean(fields, conf)(batch.drop("__src"))
-            .localCheckpoint() // sever lineage from files we may move
-          val kept = cleaned.count()
-          if (kept == 0 && files.nonEmpty) {
+          // sever lineage from files we may move; released after the
+          // merge so a long stream does not accumulate one cached
+          // generation per batch
+          val (cleaned, kept, release) =
+            graft.util.Checkpoints.checkpointTrackedCounted(
+              Clean.clean(fields, conf)(batch.drop("__src")))
+          try if (kept == 0 && files.nonEmpty) {
             // every row failed cleaning — treat as a poisoned file
             log.warn(s"[${conf.name}] batch $batchId cleaned to 0 rows")
             deadLetter(spark, files, dirs.errorDir)
@@ -201,7 +208,7 @@ object StreamPipeline {
                 log.warn(s"[${conf.name}] batch $batchId merge failed " +
                   s"(staging persisted, retryable): ${e.getMessage}")
             }
-          }
+          } finally release()
         } catch {
           case e: Throwable =>
             log.warn(s"[${conf.name}] batch $batchId failed: ${e.getMessage}")

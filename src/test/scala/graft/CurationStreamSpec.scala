@@ -791,6 +791,27 @@ class CurationStreamSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(annPath + ".refit-bak")))
   }
 
+  test("simple store: a republish that died between its renames keeps " +
+    "the full store") {
+    val tmp = Files.createTempDirectory("curation-heal").toFile.getAbsolutePath
+    val store = s"$tmp/store"
+    val docs = Tables(spark, dir, "documents").select("doc_id", "text")
+    val scrubbedAll = TextOps.gateAndScrub(docs)
+    CurationStream.mergeCuratedBatch(
+      spark, scrubbedAll.filter(col("doc_id") % 7 =!= 0), store)
+    // crash BETWEEN overwriteAtomic's renames: the store displaced to
+    // .bak, a complete next generation left unpublished in .tmp
+    spark.read.parquet(store).write.parquet(s"$store.tmp")
+    assert(new java.io.File(store).renameTo(new java.io.File(s"$store.bak")))
+    // the next batch must merge into the restored corpus, not
+    // republish a store built from this batch alone
+    CurationStream.mergeCuratedBatch(
+      spark, scrubbedAll.filter(col("doc_id") % 7 === 0), store)
+    val want = TextOps.dedupScrubbed(scrubbedAll)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+    assert(storeRows(store) === want)
+  }
+
   test("threshold stream: rolling exact threshold equals batch " +
     "scoreThreshold after each absorbed prefix; replay a no-op") {
     import graft.ext.CorpusOps

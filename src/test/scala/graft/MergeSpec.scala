@@ -199,6 +199,22 @@ class MergeSpec extends SparkSpec {
     assert(baseRows() === want)
   }
 
+  test("updateTable heals a rewrite that died between its renames") {
+    val dir = Files.createTempDirectory("merge-heal").toFile.getAbsolutePath
+    val basePath = s"$dir/base"
+    df(Seq("2020-01-01" -> 1, "2020-02-01" -> 2)).write.parquet(basePath)
+    // crash BETWEEN overwriteAtomic's renames: the base displaced to
+    // .bak, a complete next generation left unpublished in .tmp
+    df(Seq("2020-03-01" -> 3)).write.parquet(s"$basePath.tmp")
+    assert(new java.io.File(basePath)
+      .renameTo(new java.io.File(s"$basePath.bak")))
+    Merge.updateTable(spark, basePath, df(Seq("2020-02-01" -> 22)), "d")
+    val out = spark.read.parquet(basePath)
+      .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toSeq.sorted
+    assert(out === Seq("2020-01-01" -> 1, "2020-02-01" -> 22))
+    assert(!new java.io.File(s"$basePath.tmp").exists())
+  }
+
   test("compacting one partition leaves other partitions' files untouched") {
     // the reader contract: compaction of A never touches B, so readers
     // of other partitions are safe while a partition is being swapped

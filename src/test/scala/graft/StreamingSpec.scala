@@ -129,6 +129,48 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(stagingPath).count() === 1)
   }
 
+  test("per-batch checkpoints are released after every upload") {
+    val root = Files.createTempDirectory("stream-release").toFile.getAbsolutePath
+    val dirs = StreamDirs(
+      uploadDir = s"$root/upload", basePath = s"$root/base",
+      errorDir = s"$root/error", notifyDir = s"$root/notify",
+      checkpointDir = s"$root/ckpt")
+    new java.io.File(dirs.uploadDir).mkdirs()
+    baseDf(("P1", "2020-01-01", 10.0)).write.parquet(dirs.basePath)
+    (1 to 3).foreach { i =>
+      Files.write(new java.io.File(dirs.uploadDir, s"upload-$i.csv").toPath,
+        (s"PolicyNumber,PolicyExpiryDate,Amount\n" +
+          s"P$i,2020-0${i + 1}-01,$i.0\n").getBytes("UTF-8"))
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    assert(new java.io.File(dirs.notifyDir).list()
+      .count(_.endsWith(".msg")) === 3) // every upload merged
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("deadLetter fails loudly when the file cannot be moved") {
+    val root = Files.createTempDirectory("stream-dead").toFile.getAbsolutePath
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.hdfsrename.impl", classOf[HdfsRenameFs].getName)
+    // a source that no longer exists: rename reports false, and a silent
+    // skip would strand a poisoned file behind a committed offset
+    assertThrows[java.io.IOException] {
+      StreamPipeline.deadLetter(spark, Seq(s"hdfsrename:$root/upload/gone.csv"),
+        s"hdfsrename:$root/error")
+    }
+  }
+
+  test("deadLetter moves a file whose name the stream URL-encodes") {
+    val root = Files.createTempDirectory("stream-dead-enc").toFile
+    val bad = new java.io.File(root, "bad upload%.csv")
+    Files.write(bad.toPath, "a,b\n".getBytes("UTF-8"))
+    // the stream hands deadLetter _metadata.file_path: "bad%20upload%25.csv"
+    StreamPipeline.deadLetter(spark, Seq(bad.toURI.toString), s"$root/error")
+    assert(!bad.exists())
+    assert(new java.io.File(s"$root/error", bad.getName).exists())
+  }
+
   test("ST6: notify stage is message-triggered and effectively-once") {
     val root = Files.createTempDirectory("stream-notify").toFile.getAbsolutePath
     val notifyDir = s"$root/notify"
@@ -202,4 +244,13 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(dirs.notifyDir).list()
       .count(_.endsWith(".msg")) === 1)
   }
+}
+
+/** The local filesystem under HDFS's rename contract: a missing source
+  * is reported as `false`, not thrown. */
+class HdfsRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("hdfsrename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    exists(src) && super.rename(src, dst)
 }
