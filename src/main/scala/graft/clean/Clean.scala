@@ -33,6 +33,7 @@ object Clean {
   }
 
   /** The CSV-branch clean (`config.py:131-144`), generic over schema+conf:
+    * [[typed]] then [[dropUndated]].
     *
     *  P1  prune to schema columns (`usecols`)
     *  P8  apply config-named converters (P9 strip_excel via registry)
@@ -45,12 +46,18 @@ object Clean {
     *      try_cast keeps the reference's coerce-don't-crash posture
     *      under Spark 4's default ANSI mode
     */
-  def clean(fields: Seq[FieldSpec], conf: PipelineConf)(raw: DataFrame): DataFrame = {
+  def clean(fields: Seq[FieldSpec], conf: PipelineConf)(raw: DataFrame): DataFrame =
+    dropUndated(conf)(typed(fields, conf)(raw))
+
+  /** P1, P8/P9, P4, P3, P5: every row typed, none dropped. `carry`
+    * columns of `raw` ride along untouched after the schema columns —
+    * the stream keeps each row's source file through its one pass. */
+  def typed(fields: Seq[FieldSpec], conf: PipelineConf,
+            carry: Seq[String] = Nil)(raw: DataFrame): DataFrame = {
     val names = SchemaLoader.colNames(fields).filter(raw.columns.contains)
-    val dates = SchemaLoader.dateCols(fields).toSet
     val types = fields.map(f => f.name -> SchemaLoader.sparkType(f.bqType)).toMap
 
-    val pruned = raw.select(names.map(col): _*) // P1
+    val pruned = raw.select((names ++ carry).map(col): _*) // P1
 
     val converted = conf.convertFuncs.foldLeft(pruned) { // P8/P9
       case (df, (c, fn)) if names.contains(c) =>
@@ -58,7 +65,7 @@ object Clean {
       case (df, _) => df
     }
 
-    val cleaned = converted.select(names.map { c =>
+    converted.select(names.map { c =>
       val base = col(c)
       val nulled =
         if (converted.schema(c).dataType == StringType)
@@ -70,12 +77,14 @@ object Clean {
         case t             => nulled.try_cast(t.sql)       // P5
       }
       typed.as(c)
-    }: _*)
-
-    if (conf.dateCol.nonEmpty && names.contains(conf.dateCol))
-      cleaned.filter(col(conf.dateCol).isNotNull) // P2
-    else cleaned
+    } ++ carry.map(col): _*)
   }
+
+  /** P2: keep the rows whose key date survived typing. */
+  def dropUndated(conf: PipelineConf)(typedRows: DataFrame): DataFrame =
+    if (conf.dateCol.nonEmpty && typedRows.columns.contains(conf.dateCol))
+      typedRows.filter(col(conf.dateCol).isNotNull)
+    else typedRows
 
   /** The Excel two-sheet branch (`config.py:109-128`):
     *  P6  literal SOURCE provenance tag per sheet

@@ -2,8 +2,11 @@ package graft.merge
 
 import java.io.IOException
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A1/A2/S7 — the reference's core state-update semantic
   * (`config.py:180-212`): load a staging batch, take MIN(date_col) as the
@@ -127,75 +130,125 @@ object Merge {
     * partitions on/after the cutoff month — everything older is not
     * read, not shuffled, and not rewritten.
     *
-    * Mechanics: rows to publish = (base rows in overlap partitions
-    * still below the exact cutoff) ∪ staging; written with
-    * `partitionOverwriteMode=dynamic`, which replaces exactly the
-    * partitions present in the written data and leaves all others'
-    * files byte-identical (spec-asserted). The unpartitioned
+    * Mechanics: one pass over `staging` checkpoints it and yields its
+    * cutoff and months ([[batchStats]]); [[mergePartitioned]] then
+    * publishes (cutoff-month base rows still below the exact cutoff) ∪
+    * staging with `partitionOverwriteMode=dynamic`, which replaces
+    * exactly the partitions present in the written data and leaves all
+    * others' files byte-identical (spec-asserted). The unpartitioned
     * [[updateTable]] rewrites the whole table per batch — correct, but
     * O(table); this variant is O(overlap), which is what makes a daily
-    * merge into a years-deep 100 TB table feasible. Reading the
-    * partitions being overwritten is safe: the source files are
-    * replaced only at job commit.
+    * merge into a years-deep 100 TB table feasible.
     *
     * Semantics are IDENTICAL to [[merge]] (MergeSpec cross-checks the
     * resulting table): cutoff-month base rows below the exact cutoff
     * survive, everything on/after the cutoff is replaced by staging.
     *
-    * Dynamic partition overwrite only replaces partitions PRESENT in the
-    * written data — a base partition on/after the cutoff month where no
-    * base row survives the exact cutoff AND staging delivers no rows
-    * would silently keep its stale files (rows [[merge]] deletes). So
-    * the overlap partition dirs are listed BEFORE the write (a pure
-    * filesystem metadata call, O(#overlap months)) and any of them the
-    * output months did not cover is deleted after the write commits.
+    * The output months ARE the staging months: the cutoff is the
+    * staging MIN date, so every surviving base row lies in the cutoff's
+    * own month, which staging covers. Dynamic partition overwrite only
+    * replaces partitions PRESENT in the written data — a base partition
+    * after the cutoff month that staging does not cover would silently
+    * keep its stale files (rows [[merge]] deletes). So the overlap
+    * partition dirs are listed BEFORE the write (a pure filesystem
+    * metadata call, O(#overlap months)) and any of them the staging
+    * months do not cover is deleted after the write commits.
     * Delete-after-commit keeps the crash contract: a failure mid-step
     * leaves at worst stale extra rows, and the merge is idempotent —
-    * re-running it converges. */
+    * re-running it converges. A missing base is an empty one: the
+    * first batch creates it. */
   def updateTablePartitioned(spark: SparkSession, basePath: String,
-                             staging: DataFrame, dateCol: String): Unit =
-    cutoff(staging, dateCol) match {
-      case Some(cut) =>
-        val pmonth = date_format(col(dateCol), "yyyy-MM")
-        val cutMonth = staging.sparkSession.range(1)
-          .select(date_format(lit(cut), "yyyy-MM")).first().getString(0)
-        val fs = new Path(basePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val overlapMonths = fs.listStatus(new Path(basePath)).toSeq
-          .filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .filter(_.startsWith("pmonth="))
-          .map(_.stripPrefix("pmonth="))
-          .filter(_ >= cutMonth)
-        val base = spark.read.parquet(basePath)
-        // the checkpoint materializes the surviving overlap rows BEFORE
-        // the write starts: it is what keeps this off Spark's
-        // "cannot overwrite a path being read from" hazard, and it is
-        // bounded by the overlap window — O(overlap), never O(table).
-        // Tracked + released: a streamed pipeline calls this per
-        // micro-batch, and un-releasable Dataset.localCheckpoint blocks
-        // would accumulate for the life of the stream.
-        val (out, release) = graft.util.Checkpoints.checkpointTracked(
-          base
-            .filter(col("pmonth") >= cutMonth && col(dateCol) < lit(cut))
-            .drop("pmonth")
-            .unionByName(staging)
-            .withColumn("pmonth", pmonth))
-        try {
-          val outMonths = out.select("pmonth").distinct()
-            .collect().map(_.getString(0)).toSet
-          // per-WRITE option, not the session conf: toggling the session
-          // setting would race any concurrent partitioned overwrite on
-          // the same SparkSession (and clobber a caller's own setting)
-          out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pmonth").parquet(basePath)
-          overlapMonths.filterNot(outMonths).foreach { m =>
-            fs.delete(new Path(basePath, s"pmonth=$m"), true)
+                             staging: DataFrame, dateCol: String): Unit = {
+    val (batch, stats, release) =
+      graft.util.Checkpoints.checkpointTrackedWith(staging)(batchStats(_, dateCol))
+    try stats.cut.foreach(mergePartitioned(spark, basePath, batch, dateCol, _, stats.months))
+    finally release()
+  }
+
+  /** What one pass over a merge batch yields: its source files (when a
+    * source column rides along), its dated-row count, its cutoff (MIN
+    * date; None when no row is dated) and the `yyyy-MM` months its
+    * dated rows cover. */
+  private[graft] final case class BatchStats(files: Set[String], kept: Long,
+                              cut: Option[Any], months: Set[String]) {
+    def ++(o: BatchStats): BatchStats = BatchStats(files ++ o.files,
+      kept + o.kept, (cut ++ o.cut).reduceOption(earliest), months ++ o.months)
+  }
+
+  /** The `pmonth` partition value of a row. */
+  private def monthOf(dateCol: String) = date_format(col(dateCol), "yyyy-MM")
+
+  private def earliest(a: Any, b: Any): Any =
+    if (a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0) a else b
+
+  /** [[BatchStats]] of `batch` as ONE single-stage job — per-partition
+    * folds combined on the driver, no exchange — so as the
+    * materializing pass of a
+    * [[graft.util.Checkpoints.checkpointTrackedWith]] it is also the
+    * pass that fills the cache. */
+  private[graft] def batchStats(batch: DataFrame, dateCol: String,
+                 srcCol: Option[String] = None): BatchStats =
+    batch.select(Seq(col(dateCol), monthOf(dateCol)) ++ srcCol.map(col): _*)
+      .rdd.mapPartitions { rows =>
+        val files = scala.collection.mutable.Set[String]()
+        val months = scala.collection.mutable.Set[String]()
+        var kept = 0L
+        var cut: Option[Any] = None
+        rows.foreach { r =>
+          if (r.length > 2) files += r.getString(2)
+          if (!r.isNullAt(0)) {
+            kept += 1
+            cut = Some(cut.fold(r.get(0))(earliest(_, r.get(0))))
+            months += r.getString(1)
           }
-        } finally release()
-      case None => ()
-    }
+        }
+        Iterator(BatchStats(files.toSet, kept, cut, months.toSet))
+      }.collect().foldLeft(BatchStats(Set.empty, 0L, None, Set.empty))(_ ++ _)
+
+  /** The partitioned merge of a batch whose cutoff `cut` and months
+    * (`yyyy-MM`, the cutoff's included) are already known — a cached
+    * batch is read once more, by the write. Only `pmonth=<cut month>`
+    * of the base is read, with the batch's schema (no inference, no
+    * scan of the whole base); its rows below `cut` are checkpointed
+    * before the write starts, which is what keeps this off Spark's
+    * "cannot overwrite a path being read from" hazard, and they are
+    * bounded by one month. Tracked + released: a streamed pipeline
+    * calls this per micro-batch, and un-releasable
+    * Dataset.localCheckpoint blocks would accumulate for the life of
+    * the stream. */
+  private[graft] def mergePartitioned(spark: SparkSession, basePath: String,
+                                      batch: DataFrame, dateCol: String,
+                                      cut: Any, months: Set[String]): Unit = {
+    val cutMonth = months.min
+    val fs = fsOf(spark, basePath)
+    val root = new Path(basePath)
+    val overlapMonths =
+      if (!fs.exists(root)) Nil
+      else fs.listStatus(root).toSeq
+        .filter(_.isDirectory)
+        .map(_.getPath.getName)
+        .filter(_.startsWith("pmonth="))
+        .map(_.stripPrefix("pmonth="))
+        .filter(_ >= cutMonth)
+    val survivors = Option.when(overlapMonths.contains(cutMonth))(
+      graft.util.Checkpoints.checkpointTracked(
+        spark.read.schema(batch.schema)
+          .parquet(new Path(root, s"pmonth=$cutMonth").toString)
+          .filter(col(dateCol) < lit(cut))))
+    try {
+      // per-WRITE option, not the session conf: toggling the session
+      // setting would race any concurrent partitioned overwrite on
+      // the same SparkSession (and clobber a caller's own setting)
+      survivors.fold(batch)(_._1.unionByName(batch))
+        .withColumn("pmonth", monthOf(dateCol))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("pmonth").parquet(basePath)
+      overlapMonths.filterNot(months).foreach { m =>
+        fs.delete(new Path(basePath, s"pmonth=$m"), true)
+      }
+    } finally survivors.foreach(_._2())
+  }
 
   /** Small-file compaction for the month-partitioned base — the
     * maintenance pass a streamed-into table needs: per-batch merges
@@ -245,7 +298,9 @@ object Merge {
         fs.delete(tmp, true)
         // the write job reads the live partition while writing tmp; the
         // source is only displaced by the renames after it completes
-        spark.read.parquet(p.getPath.toString).coalesce(n)
+        sparkSchema(spark, files.head.getPath)
+          .fold(spark.read)(spark.read.schema(_))
+          .parquet(p.getPath.toString).coalesce(n)
           .write.mode("overwrite").parquet(tmp.toString)
         publish(fs, tmp, p.getPath, bak)
         fs.delete(bak, true)
@@ -253,6 +308,18 @@ object Merge {
       }
     }
     compacted
+  }
+
+  /** The schema Spark stored in a parquet file's footer, read on the
+    * driver — schema inference would run a Spark job to read the same
+    * footer. None for a file another writer produced. */
+  private def sparkSchema(spark: SparkSession, file: Path): Option[StructType] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    finally reader.close()
   }
 
   /** Heal a compaction interrupted by a crash: [[heal]] each
@@ -274,7 +341,7 @@ object Merge {
 
   /** Initial load for the partitioned layout. */
   def writePartitioned(df: DataFrame, basePath: String, dateCol: String): Unit =
-    df.withColumn("pmonth", date_format(col(dateCol), "yyyy-MM"))
+    df.withColumn("pmonth", monthOf(dateCol))
       .write.mode("overwrite").partitionBy("pmonth").parquet(basePath)
 
   /** S5 retry path — merge from the PERSISTED staging table. The
@@ -290,7 +357,9 @@ object Merge {
     updateTable(spark, basePath, spark.read.parquet(stagingPath), dateCol)
 
   /** [[updateFromStaging]] against a month-partitioned base — the same
-    * retryable/idempotent contract, O(overlap) per attempt. */
+    * retryable/idempotent contract, O(overlap) per attempt. The stream
+    * merges its cached batch directly ([[mergePartitioned]]); this is
+    * the retry over the persisted `table_new`. */
   def updateFromStagingPartitioned(spark: SparkSession, basePath: String,
                                    stagingPath: String, dateCol: String): Unit =
     updateTablePartitioned(spark, basePath,

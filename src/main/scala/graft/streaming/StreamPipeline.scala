@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.slf4j.LoggerFactory
+import scala.util.Try
 import graft.clean.Clean
 import graft.config.PipelineConf
 import graft.merge.Merge
 import graft.schema.SchemaLoader.FieldSpec
+import graft.util.Checkpoints
 
 /** The reference's event-driven pipeline (`main.py:18-63`) as one
   * Structured Streaming program:
@@ -34,7 +36,8 @@ import graft.schema.SchemaLoader.FieldSpec
   *  ST7  stage-transition logging via slf4j
   *
   * Scale: each micro-batch is the same narrow clean + merge dataflow as
-  * batch mode; state lives in the base table + checkpoint dir only.
+  * batch mode, reading its upload once (see [[run]]); state lives in
+  * the base table + checkpoint dir only.
   */
 object StreamPipeline {
 
@@ -90,6 +93,9 @@ object StreamPipeline {
     }
   }
 
+  /** ST6 — publish `batch-<id>.msg`: written whole under a dot-prefixed
+    * name (file sources skip hidden files), then renamed in, so the
+    * notify stage never lists a half-written message. */
   private def notify(spark: SparkSession, notifyDir: String,
                      batchId: Long, name: String): Unit = {
     val dir = new Path(notifyDir)
@@ -97,9 +103,13 @@ object StreamPipeline {
     fs.mkdirs(dir)
     val payload = java.util.Base64.getEncoder
       .encodeToString(name.getBytes("UTF-8"))
-    val out = fs.create(new Path(dir, s"batch-$batchId.msg"), true)
-    out.write(s"""{"payload":"$payload"}""".getBytes("UTF-8"))
-    out.close()
+    val tmp = new Path(dir, s".batch-$batchId.msg.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s"""{"payload":"$payload"}""".getBytes("UTF-8"))
+    finally out.close()
+    val msg = new Path(dir, s"batch-$batchId.msg")
+    fs.delete(msg, false) // a re-run batch replaces its message
+    Merge.rename(fs, tmp, msg)
   }
 
   /** ST6/S10 — the DECOUPLED second stage: a `readStream` on notifyDir,
@@ -110,7 +120,8 @@ object StreamPipeline {
     * payload is decoded to the data-type name, and `onMessage(name)`
     * runs the downstream step (view refresh, in the reference). The
     * checkpoint makes message consumption effectively-once across
-    * restarts, like a Pub/Sub ack.
+    * restarts, like a Pub/Sub ack. A message without a payload (a
+    * corrupt file) is logged and skipped.
     *
     * Scale: message files are tiny and per-batch; the stream's state is
     * the checkpointed file offsets only. The downstream work runs as
@@ -125,9 +136,12 @@ object StreamPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         decodeMessage(batch).select("payload")
-          .collect().map(_.getString(0)).foreach { name =>
-            log.info(s"notify stage: batch $batchId message '$name'")
-            onMessage(name)
+          .collect().map(_.getString(0)).foreach {
+            case null =>
+              log.warn(s"notify stage: batch $batchId skipped a message without payload")
+            case name =>
+              log.info(s"notify stage: batch $batchId message '$name'")
+              onMessage(name)
           }
       }
       .start()
@@ -136,13 +150,25 @@ object StreamPipeline {
   /** Wire the full pipeline; returns the started query (caller awaits).
     * Processes everything currently in uploadDir, then stops
     * (Trigger.AvailableNow); restart with the same checkpoint to pick up
-    * only new files. */
+    * only new files.
+    *
+    * One micro-batch reads its upload ONCE: the typed rows
+    * ([[graft.clean.Clean.typed]], each row's source file still
+    * attached, undated rows kept) are checkpointed, and the pass that
+    * fills that checkpoint also yields the batch's files, dated-row
+    * count, cutoff and months ([[graft.merge.Merge.batchStats]]).
+    * Everything after reads the cached rows: the dated ones are the
+    * cleaned batch, written as the cleaned CSV artifact and the staging
+    * table, and merged straight into the base — a partitioned base
+    * reads only its cutoff month
+    * ([[graft.merge.Merge.mergePartitioned]]). */
   def run(spark: SparkSession, fields: Seq[FieldSpec], conf: PipelineConf,
           dirs: StreamDirs): org.apache.spark.sql.streaming.StreamingQuery = {
     val stringSchema = StructType(
       fields.map(f => StructField(f.name, StringType, nullable = true)))
     val raw = spark.readStream
       .option("header", true)
+      .option("multiLine", true) // allow_quoted_newlines, as Clean.readRawCsv
       .option("maxFilesPerTrigger", 1) // one batch per uploaded file
       .schema(stringSchema)
       .csv(dirs.uploadDir)
@@ -152,21 +178,26 @@ object StreamPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", dirs.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val files = batch.select("__src").distinct()
-          .collect().map(_.getString(0)).toSeq
+        // ONE pass over the upload: it fills the checkpoint that severs
+        // lineage from files we may move (released after the merge so a
+        // long stream does not accumulate one cached generation per
+        // batch) and yields the batch's files, kept count, cutoff and
+        // months
+        val pass = Try(Checkpoints.checkpointTrackedWith(
+          Clean.typed(fields, conf, carry = Seq("__src"))(batch))(
+          Merge.batchStats(_, conf.dateCol, srcCol = Some("__src"))))
+        // a failed pass listed no files: list them alone to dead-letter
+        val files = pass.map(_._2.files.toSeq).getOrElse(
+          batch.select("__src").distinct().collect().map(_.getString(0)).toSeq)
         log.info(s"[${conf.name}] batch $batchId: ${files.size} file(s)")
         try {
-          // sever lineage from files we may move; released after the
-          // merge so a long stream does not accumulate one cached
-          // generation per batch
-          val (cleaned, kept, release) =
-            graft.util.Checkpoints.checkpointTrackedCounted(
-              Clean.clean(fields, conf)(batch.drop("__src")))
-          try if (kept == 0 && files.nonEmpty) {
+          val (typed, stats, release) = pass.get
+          try if (stats.kept == 0 && files.nonEmpty) {
             // every row failed cleaning — treat as a poisoned file
             log.warn(s"[${conf.name}] batch $batchId cleaned to 0 rows")
             deadLetter(spark, files, dirs.errorDir)
           } else {
+            val cleaned = Clean.dropUndated(conf)(typed).drop("__src")
             // S4: durable cleaned artifact (reference writes the cleaned
             // file to a second bucket, config.py:146) — inspectable
             // between stages, overwritten per batch like the reference's
@@ -175,9 +206,9 @@ object StreamPipeline {
               .csv(s"${dirs.cleanedOrDefault}/${conf.name}")
             // S5: truncate-load the staging table (WRITE_TRUNCATE,
             // config.py:161-171). table_new survives the batch and is
-            // queryable; the merge below consumes the PERSISTED artifact.
+            // queryable: the merge-retry source.
             Merge.overwriteAtomic(cleaned, dirs.stagingOrDefault)
-            log.info(s"[${conf.name}] batch $batchId staged $kept rows " +
+            log.info(s"[${conf.name}] batch $batchId staged ${stats.kept} rows " +
               s"at ${dirs.stagingOrDefault}")
             // Reference semantics (main.py:50-62): a load failure
             // dead-letters, but a MERGE failure only logs — staging is
@@ -187,11 +218,10 @@ object StreamPipeline {
               // partitionedBase routes through the O(overlap) dynamic-
               // partition-overwrite merge — the 100 TB base-table layout
               if (dirs.partitionedBase)
-                Merge.updateFromStagingPartitioned(
-                  spark, dirs.basePath, dirs.stagingOrDefault, conf.dateCol)
-              else Merge.updateFromStaging(
-                spark, dirs.basePath, dirs.stagingOrDefault, conf.dateCol)
-              log.info(s"[${conf.name}] batch $batchId merged $kept rows")
+                stats.cut.foreach(Merge.mergePartitioned(
+                  spark, dirs.basePath, cleaned, conf.dateCol, _, stats.months))
+              else Merge.updateTable(spark, dirs.basePath, cleaned, conf.dateCol)
+              log.info(s"[${conf.name}] batch $batchId merged ${stats.kept} rows")
               if (dirs.partitionedBase && dirs.compactEveryBatches > 0 &&
                   (batchId + 1) % dirs.compactEveryBatches == 0)
                 try {

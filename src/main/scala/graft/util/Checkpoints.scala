@@ -1,6 +1,8 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftshim.InternalRowDF
 import org.apache.spark.storage.StorageLevel
 
@@ -28,8 +30,7 @@ object Checkpoints {
     * the caller's first action materializes it. Shared with
     * [[graft.operators.PrefixSum]]. */
   private[graft] def checkpointInternalRdd(
-      df: DataFrame): org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow] =
+      df: DataFrame): RDD[InternalRow] =
     InternalRowDF.toInternalRdd(df)
       .mapPartitions(it => it.map(_.copy()), preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
@@ -44,16 +45,34 @@ object Checkpoints {
     * materialization pass already computed — iterative fixpoint loops
     * (KCore) use it instead of paying a second count action per round. */
   def checkpointTrackedCounted(
-      df: DataFrame): (DataFrame, Long, () => Unit) = {
+      df: DataFrame): (DataFrame, Long, () => Unit) =
+    track(df)(_.count())
+
+  /** Same as [[checkpointTracked]], but the pass that fills the cache is
+    * `materialize` over the checkpointed rows, and its result comes
+    * back — a micro-batch's statistics then cost no second pass over
+    * the cached (serialized, unprunable) rows. `materialize` must read
+    * every partition; a single-stage action does it in one job. */
+  def checkpointTrackedWith[A](df: DataFrame)(
+      materialize: DataFrame => A): (DataFrame, A, () => Unit) =
+    track(df)(rdd => materialize(
+      InternalRowDF.fromInternalRdd(df.sparkSession, rdd, df.schema)))
+
+  private def track[A](df: DataFrame)(
+      materialize: RDD[InternalRow] => A): (DataFrame, A, () => Unit) = {
     val rdd = checkpointInternalRdd(df)
-    val n = rdd.count() // materialize NOW (checkpoint happens on first action)
+    val release = () => { rdd.unpersist(blocking = false); () }
+    // materialize NOW (checkpoint happens on first action); a failed
+    // pass releases the blocks it already cached
+    val a = try materialize(rdd) catch {
+      case e: Throwable => release(); throw e
+    }
     // Round-17: the wrapped frame CARRIES the origin plan's output
     // partitioning/ordering (resolved post-AQE, valid because the rdd
     // is already materialized), so downstream joins/aggregations keyed
     // the way the data already lies skip their Exchange (+ Sort) — the
     // metadata can only remove exchanges, never change results.
     // (InternalRowDF drops DEGENERATE partition claims — see there.)
-    (InternalRowDF.fromInternalRddPreserving(rdd, df), n,
-      () => rdd.unpersist(blocking = false))
+    (InternalRowDF.fromInternalRddPreserving(rdd, df), a, release)
   }
 }

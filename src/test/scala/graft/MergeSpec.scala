@@ -294,4 +294,53 @@ class MergeSpec extends SparkSpec {
     Merge.updateFromStagingPartitioned(spark, basePath, stagingPath, "d")
     assert(baseRows() === Seq("2020-01-01" -> 1, "2020-02-01" -> 22))
   }
+
+  test("streamed merge equals replaying updateFromStagingPartitioned from staging") {
+    import org.apache.spark.sql.functions.{col, to_date}
+    val dir = Files.createTempDirectory("merge-streamed").toFile.getAbsolutePath
+    val dirs = graft.streaming.StreamPipeline.StreamDirs(s"$dir/upload",
+      s"$dir/streamed", s"$dir/error", s"$dir/notify", s"$dir/ckpt",
+      partitionedBase = true)
+    val replayed = s"$dir/replayed"
+    val fields = Seq(graft.schema.SchemaLoader.FieldSpec("d", "DATE", "NULLABLE"),
+      graft.schema.SchemaLoader.FieldSpec("v", "INTEGER", "NULLABLE"))
+    val conf = graft.config.PipelineConf(name = "t", jsonfile = "",
+      dateCol = "d", convertFuncs = Map.empty, tableNew = "", tableOld = "",
+      uri1 = None, uri2 = None)
+    val base = Seq("2020-01-10" -> 1L, "2020-01-20" -> 2L, "2020-02-01" -> 3L,
+      "2020-02-10" -> 4L, "2020-02-20" -> 5L, "2020-04-05" -> 6L,
+      "2020-06-01" -> 7L).toDF("d", "v").withColumn("d", to_date(col("d")))
+    Merge.writePartitioned(base, dirs.basePath, "d")
+    Merge.writePartitioned(base, replayed, "d")
+    new java.io.File(dirs.uploadDir).mkdirs()
+
+    def table(path: String) = spark.read.parquet(path).collect()
+      .map(r => (r.getAs[String]("pmonth"), r.getAs[java.sql.Date]("d").toString,
+        r.getAs[Long]("v"))).toSeq.sorted
+    def months(path: String) =
+      new java.io.File(path).list().filter(_.startsWith("pmonth=")).toSeq.sorted
+    Seq(
+      // cut month in the base (June 1st survives), July new
+      Seq("2020-06-15" -> 10, "2020-07-01" -> 11),
+      // cut month absent; April, June and July lie after it and go
+      Seq("2020-03-10" -> 12, "2020-03-20" -> 13),
+      // cut month in the base (February 1st and 10th survive), March goes
+      Seq("2020-02-15" -> 14)
+    ).zipWithIndex.foreach { case (rows, i) =>
+      Files.write(new java.io.File(dirs.uploadDir, s"u$i.csv").toPath,
+        ("d,v\n" + rows.map { case (d, v) => s"$d,$v" }.mkString("\n"))
+          .getBytes("UTF-8"))
+      graft.streaming.StreamPipeline.run(spark, fields, conf, dirs)
+        .awaitTermination(120000)
+      assert(new java.io.File(dirs.notifyDir).list()
+        .count(_.endsWith(".msg")) === i + 1) // merged, not merge-failed
+      Merge.updateFromStagingPartitioned(spark, replayed,
+        dirs.stagingOrDefault, "d")
+      assert(table(dirs.basePath) === table(replayed))
+      assert(months(dirs.basePath) === months(replayed))
+    }
+    assert(table(dirs.basePath).map(r => (r._2, r._3)) === Seq(
+      "2020-01-10" -> 1L, "2020-01-20" -> 2L, "2020-02-01" -> 3L,
+      "2020-02-10" -> 4L, "2020-02-15" -> 14L))
+  }
 }

@@ -226,6 +226,120 @@ class StreamingSpec extends SparkSpec {
     assert(janFiles() <= 8)
   }
 
+  test("multiLine: quoted embedded newlines survive the stream (allow_quoted_newlines)") {
+    val root = Files.createTempDirectory("stream-multiline").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt")
+    new java.io.File(dirs.uploadDir).mkdirs()
+    baseDf(("P1", "2020-01-01", 1.0)).write.parquet(dirs.basePath)
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      "PolicyNumber,PolicyExpiryDate,Amount\n\"P0\n01\",2020-02-01,2.0\n"
+        .getBytes("UTF-8"))
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    val base = spark.read.parquet(dirs.basePath).collect()
+      .map(r => r.getAs[String]("PolicyNumber") -> r.getAs[Double]("Amount")).toSet
+    assert(base === Set("P1" -> 1.0, "P0\n01" -> 2.0))
+  }
+
+  test("partitioned base: the first upload creates a missing base") {
+    val root = Files.createTempDirectory("stream-first").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt", partitionedBase = true)
+    new java.io.File(dirs.uploadDir).mkdirs()
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      ("PolicyNumber,PolicyExpiryDate,Amount\n" +
+        "P1,2020-01-05,1.0\nP2,2020-02-01,2.0\n").getBytes("UTF-8"))
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    val base = spark.read.parquet(dirs.basePath).collect()
+      .map(r => (r.getAs[String]("PolicyNumber"), r.getAs[String]("pmonth"))).toSet
+    assert(base === Set("P1" -> "2020-01", "P2" -> "2020-02"))
+    assert(new java.io.File(dirs.notifyDir).list()
+      .count(_.endsWith(".msg")) === 1) // the merge did not fail
+  }
+
+  test("ST6: a corrupt message never reaches onMessage; notify leaves no temp file") {
+    val root = Files.createTempDirectory("stream-corrupt").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt")
+    new java.io.File(dirs.uploadDir).mkdirs()
+    baseDf(("P1", "2020-01-01", 1.0)).write.parquet(dirs.basePath)
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      "PolicyNumber,PolicyExpiryDate,Amount\nP2,2020-02-01,2.0\n".getBytes("UTF-8"))
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    assert(new java.io.File(dirs.notifyDir).list().toSeq
+      .filterNot(_.endsWith(".crc")) === Seq("batch-0.msg"))
+    // a message caught half-written: no payload field to decode
+    Files.write(new java.io.File(dirs.notifyDir, "batch-9.msg").toPath,
+      "{\"payl".getBytes("UTF-8"))
+    val fired = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    StreamPipeline.runNotifyStage(spark, dirs.notifyDir, s"$root/nckpt") {
+      name => fired.add(name)
+    }.awaitTermination(120000)
+    assert(fired.toArray.toSeq === Seq("RenewalList.CSV"))
+  }
+
+  test("ST5: a batch whose one pass throws is still dead-lettered") {
+    val root = Files.createTempDirectory("stream-pass-fails").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt", partitionedBase = true)
+    new java.io.File(dirs.uploadDir).mkdirs()
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      "PolicyNumber,PolicyExpiryDate,Amount\nP1,2020-01-05,1.0\n".getBytes("UTF-8"))
+    // the clean step throws, so the pass yields no file list
+    val broken = conf.copy(convertFuncs = Map("PolicyNumber" -> "no_such_converter"))
+    StreamPipeline.run(spark, fields, broken, dirs).awaitTermination(120000)
+    assert(new java.io.File(dirs.errorDir).list().toSeq === Seq("u.csv"))
+    assert(!new java.io.File(dirs.basePath).exists())
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus is
+    * asynchronous but ordered: a marker job run after `body` arrives
+    * after every job `body` started. */
+  private def sparkJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .getOrElse(""))
+    }
+    def jobsBefore(marker: String): Int = {
+      sc.setLocalProperty(key, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      Iterator.continually(Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail(s"marker job $marker never seen")))
+        .takeWhile(_ != marker).size
+    }
+    sc.addSparkListener(listener)
+    try { jobsBefore("before"); body; jobsBefore("after") }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("one good upload into a partitioned base reads it in one pass: 5 Spark jobs") {
+    val root = Files.createTempDirectory("stream-jobs").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt", partitionedBase = true)
+    new java.io.File(dirs.uploadDir).mkdirs()
+    graft.merge.Merge.writePartitioned(baseDf(("P1", "2020-01-01", 1.0),
+      ("P2", "2020-02-01", 2.0), ("P3", "2020-03-01", 3.0)), dirs.basePath,
+      conf.dateCol)
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      ("PolicyNumber,PolicyExpiryDate,Amount\n" +
+        "P4,2020-02-15,4.0\nP5,2020-02-20,5.0\nbad,not-a-date,0.0\n").getBytes("UTF-8"))
+    // the parse that checkpoints the batch and yields its statistics,
+    // the cleaned CSV, the staging table, the cutoff month's surviving
+    // base rows, the partitioned write
+    val jobs = sparkJobs {
+      StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    }
+    val base = spark.read.parquet(dirs.basePath).collect()
+      .map(r => r.getAs[String]("PolicyNumber")).toSet
+    assert(base === Set("P1", "P2", "P4", "P5")) // February cut at the 15th
+    assert(jobs <= 5, s"$jobs Spark jobs for one upload")
+  }
+
   test("ST3: restart with same checkpoint reprocesses nothing") {
     val root = Files.createTempDirectory("stream-spec2").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
