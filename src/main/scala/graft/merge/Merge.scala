@@ -1,12 +1,13 @@
 package graft.merge
 
-import java.io.IOException
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.{FileNotFoundException, IOException}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.util.Checkpoints
 
 /** A1/A2/S7 — the reference's core state-update semantic
   * (`config.py:180-212`): load a staging batch, take MIN(date_col) as the
@@ -18,15 +19,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * story (ST4): re-delivered rows in the overlap window win.
   *
   * Scale shape: the filter is a narrow map; the union is free (no
-  * shuffle); the trailing sort is one range-partition exchange. With the
-  * base table date-partitioned at rest, the cutoff filter becomes
-  * partition pruning and the rewrite touches only overlap partitions.
+  * shuffle); the trailing sort is one range-partition exchange. A
+  * month-partitioned base rewrites only its overlap months.
   */
 object Merge {
 
   /** A1 — scalar MIN cutoff (`config.py:180-187`). Single-row collect:
     * the aggregation is distributed (partial mins per partition); only
-    * the one-row result reaches the driver. */
+    * the one-row result reaches the driver. [[merge]]'s alone: the table
+    * updates take theirs from [[batchStats]]. */
   def cutoff(staging: DataFrame, dateCol: String): Option[Any] =
     Option(staging.agg(min(col(dateCol))).first().get(0))
 
@@ -35,13 +36,15 @@ object Merge {
     * reference would interpolate a Python `None` into SQL there; we make
     * the no-op explicit instead. */
   def merge(base: DataFrame, staging: DataFrame, dateCol: String): DataFrame =
-    cutoff(staging, dateCol) match {
-      case Some(cut) =>
-        base.filter(col(dateCol) < lit(cut))
-          .unionByName(staging)
-          .orderBy(col(dateCol).asc)
-      case None => base
-    }
+    cutoff(staging, dateCol).fold(base)(mergeAt(base, staging, dateCol, _))
+
+  /** [[merge]] at a known cutoff: base rows below `cut` ∪ staging, by
+    * date. A base whose columns differ from staging's fails here. */
+  private def mergeAt(base: DataFrame, staging: DataFrame,
+                      dateCol: String, cut: Any): DataFrame =
+    base.filter(col(dateCol) < lit(cut))
+      .unionByName(staging)
+      .orderBy(col(dateCol).asc)
 
   /** A rename that fails loudly: Hadoop filesystems may report a
     * failed rename (HDFS: a missing source) as `false`, not throw. */
@@ -82,12 +85,22 @@ object Merge {
     * `pmonth=` and `bucket=` layouts. Returns the number restored. */
   private[graft] def healChildren(fs: FileSystem, root: Path,
                                   livePrefix: String, bakPrefix: String): Int =
-    if (!fs.exists(root)) 0
-    else fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith(bakPrefix))
-      .count(name => heal(fs,
-        new Path(root, livePrefix + name.stripPrefix(bakPrefix)),
-        new Path(root, name)))
+    healListed(fs, root, childNames(fs, root), livePrefix, bakPrefix)
+
+  /** [[healChildren]] over `names`, already listed from `root`. */
+  private def healListed(fs: FileSystem, root: Path, names: Seq[String],
+                         livePrefix: String, bakPrefix: String): Int =
+    names.filter(_.startsWith(bakPrefix)).count(name => heal(fs,
+      new Path(root, livePrefix + name.stripPrefix(bakPrefix)),
+      new Path(root, name)))
+
+  /** `path`'s children (a file lists itself); None when it is missing. */
+  private def listing(fs: FileSystem, path: Path): Option[Seq[FileStatus]] =
+    try Some(fs.listStatus(path).toSeq)
+    catch { case _: FileNotFoundException => None }
+
+  private def childNames(fs: FileSystem, dir: Path): Seq[String] =
+    listing(fs, dir).getOrElse(Nil).map(_.getPath.getName)
 
   /** S7 — overwrite-own-input table rewrite. BigQuery's
     * `CREATE OR REPLACE TABLE old AS (… FROM old …)` reads and replaces
@@ -113,55 +126,28 @@ object Merge {
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The full update step (reference `update_table`, `config.py:201-212`):
-    * read base, merge staging in, atomically rewrite base. */
+  /** The full update step (reference `update_table`,
+    * `config.py:201-212`) on a whole-table base: one pass checkpoints
+    * `staging` and yields its cutoff ([[batchStats]]), then
+    * [[mergeBatch]] heals, reads and rewrites the base. */
   def updateTable(spark: SparkSession, basePath: String,
-                  staging: DataFrame, dateCol: String): Unit = {
-    healOverwrite(spark, basePath)
-    val base = spark.read.parquet(basePath)
-    // The write job scans basePath while writing the sibling tmp dir —
-    // the input is only displaced by the rename AFTER the job completes,
-    // so no checkpoint/self-overwrite hazard exists.
-    overwriteAtomic(merge(base, staging, dateCol), basePath)
-  }
+                  staging: DataFrame, dateCol: String): Unit =
+    update(spark, basePath, staging, dateCol, partitioned = false)
 
-  /** The 100 TB merge: base laid out partitioned by month
-    * (`pmonth=yyyy-MM` directories) and the rewrite touches ONLY the
-    * partitions on/after the cutoff month — everything older is not
-    * read, not shuffled, and not rewritten.
-    *
-    * Mechanics: one pass over `staging` checkpoints it and yields its
-    * cutoff and months ([[batchStats]]); [[mergePartitioned]] then
-    * publishes (cutoff-month base rows still below the exact cutoff) ∪
-    * staging with `partitionOverwriteMode=dynamic`, which replaces
-    * exactly the partitions present in the written data and leaves all
-    * others' files byte-identical (spec-asserted). The unpartitioned
-    * [[updateTable]] rewrites the whole table per batch — correct, but
-    * O(table); this variant is O(overlap), which is what makes a daily
-    * merge into a years-deep 100 TB table feasible.
-    *
-    * Semantics are IDENTICAL to [[merge]] (MergeSpec cross-checks the
-    * resulting table): cutoff-month base rows below the exact cutoff
-    * survive, everything on/after the cutoff is replaced by staging.
-    *
-    * The output months ARE the staging months: the cutoff is the
-    * staging MIN date, so every surviving base row lies in the cutoff's
-    * own month, which staging covers. Dynamic partition overwrite only
-    * replaces partitions PRESENT in the written data — a base partition
-    * after the cutoff month that staging does not cover would silently
-    * keep its stale files (rows [[merge]] deletes). So the overlap
-    * partition dirs are listed BEFORE the write (a pure filesystem
-    * metadata call, O(#overlap months)) and any of them the staging
-    * months do not cover is deleted after the write commits.
-    * Delete-after-commit keeps the crash contract: a failure mid-step
-    * leaves at worst stale extra rows, and the merge is idempotent —
-    * re-running it converges. A missing base is an empty one: the
-    * first batch creates it. */
+  /** [[updateTable]] on the 100 TB layout: a base partitioned by month
+    * (`pmonth=yyyy-MM` dirs), of which only the months on/after the
+    * cutoff month are touched — O(overlap) per batch where the whole
+    * table is O(table). Semantics IDENTICAL to [[merge]] (MergeSpec
+    * cross-checks the tables). */
   def updateTablePartitioned(spark: SparkSession, basePath: String,
-                             staging: DataFrame, dateCol: String): Unit = {
+                             staging: DataFrame, dateCol: String): Unit =
+    update(spark, basePath, staging, dateCol, partitioned = true)
+
+  private def update(spark: SparkSession, basePath: String, staging: DataFrame,
+                     dateCol: String, partitioned: Boolean): Unit = {
     val (batch, stats, release) =
-      graft.util.Checkpoints.checkpointTrackedWith(staging)(batchStats(_, dateCol))
-    try stats.cut.foreach(mergePartitioned(spark, basePath, batch, dateCol, _, stats.months))
+      Checkpoints.checkpointTrackedWith(staging)(batchStats(_, dateCol))
+    try mergeBatch(spark, basePath, batch, dateCol, stats, partitioned)
     finally release()
   }
 
@@ -182,10 +168,9 @@ object Merge {
     if (a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0) a else b
 
   /** [[BatchStats]] of `batch` as ONE single-stage job — per-partition
-    * folds combined on the driver, no exchange — so as the
-    * materializing pass of a
-    * [[graft.util.Checkpoints.checkpointTrackedWith]] it is also the
-    * pass that fills the cache. */
+    * folds combined on the driver, no exchange — so as the materializing
+    * pass of a [[graft.util.Checkpoints.checkpointTrackedWith]] it is
+    * also the pass that fills the cache. */
   private[graft] def batchStats(batch: DataFrame, dateCol: String,
                  srcCol: Option[String] = None): BatchStats =
     batch.select(Seq(col(dateCol), monthOf(dateCol)) ++ srcCol.map(col): _*)
@@ -205,50 +190,75 @@ object Merge {
         Iterator(BatchStats(files.toSet, kept, cut, months.toSet))
       }.collect().foldLeft(BatchStats(Set.empty, 0L, None, Set.empty))(_ ++ _)
 
-  /** The partitioned merge of a batch whose cutoff `cut` and months
-    * (`yyyy-MM`, the cutoff's included) are already known — a cached
-    * batch is read once more, by the write. Only `pmonth=<cut month>`
-    * of the base is read, with the batch's schema (no inference, no
-    * scan of the whole base); its rows below `cut` are checkpointed
-    * before the write starts, which is what keeps this off Spark's
-    * "cannot overwrite a path being read from" hazard, and they are
-    * bounded by one month. Tracked + released: a streamed pipeline
-    * calls this per micro-batch, and un-releasable
-    * Dataset.localCheckpoint blocks would accumulate for the life of
-    * the stream. */
-  private[graft] def mergePartitioned(spark: SparkSession, basePath: String,
-                                      batch: DataFrame, dateCol: String,
-                                      cut: Any, months: Set[String]): Unit = {
-    val cutMonth = months.min
-    val fs = fsOf(spark, basePath)
-    val root = new Path(basePath)
-    val overlapMonths =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith("pmonth="))
-        .map(_.stripPrefix("pmonth="))
-        .filter(_ >= cutMonth)
-    val survivors = Option.when(overlapMonths.contains(cutMonth))(
-      graft.util.Checkpoints.checkpointTracked(
-        spark.read.schema(batch.schema)
-          .parquet(new Path(root, s"pmonth=$cutMonth").toString)
-          .filter(col(dateCol) < lit(cut))))
-    try {
-      // per-WRITE option, not the session conf: toggling the session
-      // setting would race any concurrent partitioned overwrite on
-      // the same SparkSession (and clobber a caller's own setting)
-      survivors.fold(batch)(_._1.unionByName(batch))
-        .withColumn("pmonth", monthOf(dateCol))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pmonth").parquet(basePath)
-      overlapMonths.filterNot(months).foreach { m =>
-        fs.delete(new Path(basePath, s"pmonth=$m"), true)
+  /** THE cutoff merge, both layouts: publish (base rows below the
+    * batch's cutoff) ∪ `batch`. `batch` is cached and `stats` is its
+    * [[batchStats]]: nothing re-derives the cutoff; no dated row, no-op.
+    *  1. Heal first — the whole table by [[healOverwrite]]'s rule, the
+    *     partitioned base by [[recoverCompaction]]'s, from the one root
+    *     listing that also yields the overlap months (unhealed, a month
+    *     a crashed compaction displaced is rewritten from the batch
+    *     alone and its rows below the cutoff are lost).
+    *  2. A missing base is an empty one: the first batch creates it.
+    *  3. The base (partitioned: its cutoff month only) is read with its
+    *     own footer schema — no inference job; differing columns fail
+    *     the union loudly.
+    *  4. Whole table: [[overwriteAtomic]] of [[mergeAt]]. Partitioned:
+    *     the cutoff month's survivors are checkpointed (off Spark's
+    *     overwrite-a-path-being-read hazard) and written with the batch
+    *     by dynamic partition overwrite: exactly the batch's months are
+    *     replaced, older ones stay byte-identical. Overlap months the
+    *     batch does not cover are deleted after the write commits (a
+    *     crash leaves at worst stale rows; re-running converges). */
+  private[graft] def mergeBatch(spark: SparkSession, basePath: String,
+                                batch: DataFrame, dateCol: String,
+                                stats: BatchStats, partitioned: Boolean): Unit =
+    stats.cut.foreach { cut =>
+      val fs = fsOf(spark, basePath)
+      val root = new Path(basePath)
+      if (!partitioned) {
+        healOverwrite(spark, basePath)
+        // the base is read by the write, and displaced only after it
+        overwriteAtomic(mergeAt(readBase(spark, fs, root)
+          .getOrElse(batch.limit(0)), batch, dateCol, cut), basePath)
+      } else {
+        val names = childNames(fs, root)
+        healCompaction(fs, root, names)
+        val cutMonth = stats.months.min
+        // a healed `.compact-bak-<m>` is `pmonth=<m>` again
+        val overlap = names.collect {
+          case n if n.startsWith("pmonth=") => n.stripPrefix("pmonth=")
+          case n if n.startsWith(".compact-bak-") => n.stripPrefix(".compact-bak-")
+        }.distinct.filter(_ >= cutMonth)
+        val survivors = overlap.find(_ == cutMonth)
+          .flatMap(m => readBase(spark, fs, new Path(root, s"pmonth=$m")))
+          .map(b => Checkpoints.checkpointTracked(b.filter(col(dateCol) < lit(cut))))
+        try {
+          // a per-write option: toggling the session conf would race a
+          // concurrent overwrite on the session and clobber its setting
+          survivors.fold(batch)(_._1.unionByName(batch))
+            .withColumn("pmonth", monthOf(dateCol))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("pmonth").parquet(basePath)
+          overlap.filterNot(stats.months).foreach { m =>
+            fs.delete(new Path(root, s"pmonth=$m"), true)
+          }
+        } finally survivors.foreach(_._2())
       }
-    } finally survivors.foreach(_._2())
-  }
+    }
+
+  /** The parquet table at `path`, read with the schema Spark stored in
+    * the footer of one of its files ([[sparkSchema]]; inferred only for
+    * files another writer produced). None when `path` is missing. */
+  private def readBase(spark: SparkSession, fs: FileSystem,
+                       path: Path): Option[DataFrame] =
+    listing(fs, path).map(files => readWithFooter(spark, path, files
+      .find(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)))
+
+  private def readWithFooter(spark: SparkSession, dir: Path,
+                             file: Option[Path]): DataFrame =
+    file.flatMap(sparkSchema(spark, _))
+      .fold(spark.read)(spark.read.schema(_)).parquet(dir.toString)
 
   /** Small-file compaction for the month-partitioned base — the
     * maintenance pass a streamed-into table needs: per-batch merges
@@ -298,9 +308,7 @@ object Merge {
         fs.delete(tmp, true)
         // the write job reads the live partition while writing tmp; the
         // source is only displaced by the renames after it completes
-        sparkSchema(spark, files.head.getPath)
-          .fold(spark.read)(spark.read.schema(_))
-          .parquet(p.getPath.toString).coalesce(n)
+        readWithFooter(spark, p.getPath, Some(files.head.getPath)).coalesce(n)
           .write.mode("overwrite").parquet(tmp.toString)
         publish(fs, tmp, p.getPath, bak)
         fs.delete(bak, true)
@@ -332,10 +340,14 @@ object Merge {
   def recoverCompaction(spark: SparkSession, basePath: String): Int = {
     val fs = fsOf(spark, basePath)
     val root = new Path(basePath)
-    val healed = healChildren(fs, root, "pmonth=", ".compact-bak-")
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(".compact-tmp-"))
-      .foreach(fs.delete(_, true))
+    healCompaction(fs, root, childNames(fs, root))
+  }
+
+  /** [[recoverCompaction]] over `names`, already listed from `root`. */
+  private def healCompaction(fs: FileSystem, root: Path, names: Seq[String]): Int = {
+    val healed = healListed(fs, root, names, "pmonth=", ".compact-bak-")
+    names.filter(_.startsWith(".compact-tmp-"))
+      .foreach(n => fs.delete(new Path(root, n), true))
     healed
   }
 
@@ -357,9 +369,7 @@ object Merge {
     updateTable(spark, basePath, spark.read.parquet(stagingPath), dateCol)
 
   /** [[updateFromStaging]] against a month-partitioned base — the same
-    * retryable/idempotent contract, O(overlap) per attempt. The stream
-    * merges its cached batch directly ([[mergePartitioned]]); this is
-    * the retry over the persisted `table_new`. */
+    * retryable/idempotent contract, O(overlap) per attempt. */
   def updateFromStagingPartitioned(spark: SparkSession, basePath: String,
                                    stagingPath: String, dateCol: String): Unit =
     updateTablePartitioned(spark, basePath,

@@ -53,7 +53,7 @@ object CurationStream {
     // survivor-join assumes unique doc_ids — without this, redelivery
     // would duplicate every surviving row. The tracked checkpoint cuts
     // the self-read lineage before the overwrite (same hazard note as
-    // Merge.updateTablePartitioned) and is RELEASED after the publish,
+    // Merge.mergeBatch) and is RELEASED after the publish,
     // so a long stream never accumulates store-sized cached
     // generations (the round-4 GC lesson).
     val (ck, release) =

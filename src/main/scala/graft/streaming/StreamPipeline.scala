@@ -159,9 +159,9 @@ object StreamPipeline {
     * count, cutoff and months ([[graft.merge.Merge.batchStats]]).
     * Everything after reads the cached rows: the dated ones are the
     * cleaned batch, written as the cleaned CSV artifact and the staging
-    * table, and merged straight into the base — a partitioned base
-    * reads only its cutoff month
-    * ([[graft.merge.Merge.mergePartitioned]]). */
+    * table, and merged by [[graft.merge.Merge.mergeBatch]] with that
+    * pass's statistics — the one cutoff merge, `partitionedBase` naming
+    * the layout. */
   def run(spark: SparkSession, fields: Seq[FieldSpec], conf: PipelineConf,
           dirs: StreamDirs): org.apache.spark.sql.streaming.StreamingQuery = {
     val stringSchema = StructType(
@@ -179,10 +179,9 @@ object StreamPipeline {
       .option("checkpointLocation", dirs.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // ONE pass over the upload: it fills the checkpoint that severs
-        // lineage from files we may move (released after the merge so a
-        // long stream does not accumulate one cached generation per
-        // batch) and yields the batch's files, kept count, cutoff and
-        // months
+        // lineage from files we may move (released after the merge: a
+        // long stream must not accumulate a cached generation per batch)
+        // and yields the batch's files, kept count, cutoff and months
         val pass = Try(Checkpoints.checkpointTrackedWith(
           Clean.typed(fields, conf, carry = Seq("__src"))(batch))(
           Merge.batchStats(_, conf.dateCol, srcCol = Some("__src"))))
@@ -215,12 +214,8 @@ object StreamPipeline {
             // committed, so the merge alone is retryable
             // (Merge.updateFromStaging).
             try {
-              // partitionedBase routes through the O(overlap) dynamic-
-              // partition-overwrite merge — the 100 TB base-table layout
-              if (dirs.partitionedBase)
-                stats.cut.foreach(Merge.mergePartitioned(
-                  spark, dirs.basePath, cleaned, conf.dateCol, _, stats.months))
-              else Merge.updateTable(spark, dirs.basePath, cleaned, conf.dateCol)
+              Merge.mergeBatch(spark, dirs.basePath, cleaned, conf.dateCol,
+                stats, dirs.partitionedBase)
               log.info(s"[${conf.name}] batch $batchId merged ${stats.kept} rows")
               if (dirs.partitionedBase && dirs.compactEveryBatches > 0 &&
                   (batchId + 1) % dirs.compactEveryBatches == 0)

@@ -109,28 +109,37 @@ object Views {
   def transactions(spark: SparkSession, dir: String): DataFrame =
     transactionsCore(spark, dir).orderBy(col("EntryDateTime").asc) // O2
 
+  /** The TRANSACTIONS projection (F9/F4/F1) over its four LEFT joins
+    * (J5) — the one SQL text of it, spliced into [[transactionsInnerSql]]
+    * and [[transactionsScaledSql]]. */
+  private val projectedSql: String =
+    """SELECT
+      |  l_shipdate AS EntryDateTime,
+      |  l_orderkey AS PolicyNumber,
+      |  l_linenumber AS LineNumber,
+      |  l_partkey AS VIN_A,
+      |  s_name AS AgencyName,
+      |  COALESCE(p_brand, 'NOBRAND') AS Brand,
+      |  COALESCE(n_name, 'NONE') AS Channel,
+      |  COALESCE(r_name, 'NA_OR_OUT') AS Geo,
+      |  l_extendedprice AS CommTotal
+      |FROM lineitem
+      |LEFT JOIN supplier ON l_suppkey = s_suppkey
+      |LEFT JOIN part ON l_partkey = p_partkey
+      |LEFT JOIN nation ON s_nationkey = n_nationkey
+      |LEFT JOIN region ON n_regionkey = r_regionkey""".stripMargin
+
+  private def indent(sql: String, n: Int): String =
+    sql.linesIterator.map(" " * n + _).mkString("\n")
+
   val transactionsInnerSql: String =
-    """SELECT *, CASE WHEN Id = MinId THEN 'N' ELSE 'E' END AS IsNew
+    s"""SELECT *, CASE WHEN Id = MinId THEN 'N' ELSE 'E' END AS IsNew
       |FROM (
       |  SELECT *, MIN(Id) OVER (PARTITION BY PolicyNumber) AS MinId
       |  FROM (
       |    SELECT *, ROW_NUMBER() OVER (ORDER BY EntryDateTime, PolicyNumber, LineNumber, VIN_A, CommTotal, AgencyName) AS Id
       |    FROM (
-      |      SELECT
-      |        l_shipdate AS EntryDateTime,
-      |        l_orderkey AS PolicyNumber,
-      |        l_linenumber AS LineNumber,
-      |        l_partkey AS VIN_A,
-      |        s_name AS AgencyName,
-      |        COALESCE(p_brand, 'NOBRAND') AS Brand,
-      |        COALESCE(n_name, 'NONE') AS Channel,
-      |        COALESCE(r_name, 'NA_OR_OUT') AS Geo,
-      |        l_extendedprice AS CommTotal
-      |      FROM lineitem
-      |      LEFT JOIN supplier ON l_suppkey = s_suppkey
-      |      LEFT JOIN part ON l_partkey = p_partkey
-      |      LEFT JOIN nation ON s_nationkey = n_nationkey
-      |      LEFT JOIN region ON n_regionkey = r_regionkey
+      |${indent(projectedSql, 6)}
       |    ) AS projected
       |  ) AS with_id
       |) AS with_min""".stripMargin
@@ -167,22 +176,8 @@ object Views {
     * ViewsSqlSpec proves row equality with the verbatim view and asserts
     * the plan contains no SinglePartition exchange. */
   val transactionsScaledSql: String =
-    """WITH projected AS (
-      |  SELECT
-      |    l_shipdate AS EntryDateTime,
-      |    l_orderkey AS PolicyNumber,
-      |    l_linenumber AS LineNumber,
-      |    l_partkey AS VIN_A,
-      |    s_name AS AgencyName,
-      |    COALESCE(p_brand, 'NOBRAND') AS Brand,
-      |    COALESCE(n_name, 'NONE') AS Channel,
-      |    COALESCE(r_name, 'NA_OR_OUT') AS Geo,
-      |    l_extendedprice AS CommTotal
-      |  FROM lineitem
-      |  LEFT JOIN supplier ON l_suppkey = s_suppkey
-      |  LEFT JOIN part ON l_partkey = p_partkey
-      |  LEFT JOIN nation ON s_nationkey = n_nationkey
-      |  LEFT JOIN region ON n_regionkey = r_regionkey
+    s"""WITH projected AS (
+      |${indent(projectedSql, 2)}
       |),
       |bucketed AS (
       |  SELECT *, date_trunc('month', EntryDateTime) AS bkt FROM projected
@@ -314,10 +309,14 @@ object Views {
   }
 
   val autoOptiomSql: String =
+    autoOptiomOver(s"(\n${indent(transactionsInnerSql, 2)}\n)")
+
+  /** AUTO_OPTIOM over the TRANSACTIONS rows `tx` (a subquery, or the
+    * registered view): the optiom subquery, the VIN join (J6), the F6
+    * date filter and the O3 order — one SQL text for both surfaces. */
+  private def autoOptiomOver(tx: String): String =
     s"""SELECT tx.*, op.VIN_OP, op.OP_Date, op.OP_Premium, op.OP_Status
-       |FROM (
-       |${transactionsInnerSql.linesIterator.map("  " + _).mkString("\n")}
-       |) AS tx
+       |FROM $tx AS tx
        |LEFT JOIN (
        |  SELECT
        |    o_orderkey AS VIN_OP,
@@ -360,18 +359,6 @@ object Views {
       s"CREATE OR REPLACE TEMP VIEW RETENTION AS\n$retentionSql")
     // View-on-view: re-reference TRANSACTIONS rather than inlining it.
     spark.sql(
-      s"""CREATE OR REPLACE TEMP VIEW AUTO_OPTIOM AS
-         |SELECT tx.*, op.VIN_OP, op.OP_Date, op.OP_Premium, op.OP_Status
-         |FROM TRANSACTIONS AS tx
-         |LEFT JOIN (
-         |  SELECT
-         |    o_orderkey AS VIN_OP,
-         |    o_orderdate AS OP_Date,
-         |    o_totalprice AS OP_Premium,
-         |    o_orderstatus AS OP_Status
-         |  FROM orders
-         |) AS op ON tx.VIN_A = op.VIN_OP
-         |WHERE EntryDateTime >= TIMESTAMP '1996-06-01 00:00:00'
-         |ORDER BY EntryDateTime DESC""".stripMargin)
+      s"CREATE OR REPLACE TEMP VIEW AUTO_OPTIOM AS\n${autoOptiomOver("TRANSACTIONS")}")
   }
 }

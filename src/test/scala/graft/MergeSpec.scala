@@ -215,6 +215,60 @@ class MergeSpec extends SparkSpec {
     assert(!new java.io.File(s"$basePath.tmp").exists())
   }
 
+  test("updateTable on a missing base creates it") {
+    val dir = Files.createTempDirectory("merge-first").toFile.getAbsolutePath
+    val basePath = s"$dir/base"
+    Merge.updateTable(spark, basePath, df(Seq("2020-02-01" -> 2, "2020-01-01" -> 1)), "d")
+    val out = spark.read.parquet(basePath)
+      .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toSeq
+    assert(out === Seq("2020-01-01" -> 1, "2020-02-01" -> 2)) // ordered by date
+  }
+
+  test("updateTable merges into a base that is one parquet file") {
+    val dir = Files.createTempDirectory("merge-file").toFile.getAbsolutePath
+    df(Seq("2020-01-01" -> 1, "2020-02-01" -> 2)).coalesce(1).write.parquet(s"$dir/w")
+    val part = new java.io.File(s"$dir/w").listFiles().find(_.getName.endsWith(".parquet")).get
+    val basePath = s"$dir/base.parquet"
+    assert(part.renameTo(new java.io.File(basePath)))
+    Merge.updateTable(spark, basePath, df(Seq("2020-02-01" -> 22)), "d")
+    val out = spark.read.parquet(basePath)
+      .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toSeq.sorted
+    assert(out === Seq("2020-01-01" -> 1, "2020-02-01" -> 22))
+  }
+
+  test("partitioned merge heals a compaction that died between its renames") {
+    val dir = Files.createTempDirectory("merge-heal-compact").toFile.getAbsolutePath
+    val basePath = s"$dir/base"
+    val rows = (1 to 10).map(d => (f"2020-01-$d%02d", d)) :+ ("2020-02-01" -> 99)
+    Merge.writePartitioned(df(rows), basePath, "d")
+    // crash between compaction's renames: January displaced to its
+    // backup, a complete rewrite left unpublished
+    df(rows.take(10)).coalesce(1).write.parquet(s"$basePath/.compact-tmp-2020-01")
+    assert(new java.io.File(s"$basePath/pmonth=2020-01")
+      .renameTo(new java.io.File(s"$basePath/.compact-bak-2020-01")))
+    // the cutoff (January 5th) falls inside the displaced month
+    Merge.updateTablePartitioned(spark, basePath, df(Seq("2020-01-05" -> 50)), "d")
+    val got = spark.read.parquet(basePath).drop("pmonth")
+      .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toSeq.sorted
+    assert(got === (1 to 4).map(d => (f"2020-01-$d%02d", d)) :+ ("2020-01-05" -> 50))
+    assert(!new java.io.File(basePath).list().exists(_.startsWith(".compact-")))
+  }
+
+  test("a base whose columns differ from the batch's fails the merge, both layouts") {
+    val dir = Files.createTempDirectory("merge-columns").toFile.getAbsolutePath
+    val wide = df(Seq("2020-01-01" -> 1)).withColumn("extra", $"v" * 2)
+    wide.write.parquet(s"$dir/whole")
+    Merge.writePartitioned(wide, s"$dir/part", "d")
+    val batch = df(Seq("2020-01-05" -> 5))
+    intercept[org.apache.spark.sql.AnalysisException](
+      Merge.updateTable(spark, s"$dir/whole", batch, "d"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      Merge.updateTablePartitioned(spark, s"$dir/part", batch, "d"))
+    // neither base was touched: the extra column is still there
+    assert(spark.read.parquet(s"$dir/whole").columns.contains("extra"))
+    assert(spark.read.parquet(s"$dir/part").columns.contains("extra"))
+  }
+
   test("compacting one partition leaves other partitions' files untouched") {
     // the reader contract: compaction of A never touches B, so readers
     // of other partitions are safe while a partition is being swapped

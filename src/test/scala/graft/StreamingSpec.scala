@@ -242,19 +242,27 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("partitioned base: the first upload creates a missing base") {
-    val root = Files.createTempDirectory("stream-first").toFile.getAbsolutePath
-    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
-      s"$root/notify", s"$root/ckpt", partitionedBase = true)
-    new java.io.File(dirs.uploadDir).mkdirs()
-    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
-      ("PolicyNumber,PolicyExpiryDate,Amount\n" +
-        "P1,2020-01-05,1.0\nP2,2020-02-01,2.0\n").getBytes("UTF-8"))
-    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
-    val base = spark.read.parquet(dirs.basePath).collect()
-      .map(r => (r.getAs[String]("PolicyNumber"), r.getAs[String]("pmonth"))).toSet
-    assert(base === Set("P1" -> "2020-01", "P2" -> "2020-02"))
-    assert(new java.io.File(dirs.notifyDir).list()
-      .count(_.endsWith(".msg")) === 1) // the merge did not fail
+    // both layouts: the partitioned base and the whole-table one
+    Seq(true, false).foreach { partitioned =>
+      val root = Files.createTempDirectory("stream-first").toFile.getAbsolutePath
+      val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+        s"$root/notify", s"$root/ckpt", partitionedBase = partitioned)
+      new java.io.File(dirs.uploadDir).mkdirs()
+      Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+        ("PolicyNumber,PolicyExpiryDate,Amount\n" +
+          "P1,2020-01-05,1.0\nP2,2020-02-01,2.0\n").getBytes("UTF-8"))
+      StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+      val rows = spark.read.parquet(dirs.basePath).collect()
+      if (partitioned)
+        assert(rows.map(r => (r.getAs[String]("PolicyNumber"),
+          r.getAs[String]("pmonth"))).toSet === Set("P1" -> "2020-01", "P2" -> "2020-02"))
+      else
+        assert(rows.map(r => (r.getAs[String]("PolicyNumber"),
+          r.getAs[java.sql.Date]("PolicyExpiryDate").toString)).toSet ===
+          Set("P1" -> "2020-01-05", "P2" -> "2020-02-01"))
+      assert(new java.io.File(dirs.notifyDir).list()
+        .count(_.endsWith(".msg")) === 1) // the merge did not fail
+    }
   }
 
   test("ST6: a corrupt message never reaches onMessage; notify leaves no temp file") {
@@ -338,6 +346,28 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getAs[String]("PolicyNumber")).toSet
     assert(base === Set("P1", "P2", "P4", "P5")) // February cut at the 15th
     assert(jobs <= 5, s"$jobs Spark jobs for one upload")
+  }
+
+  test("one good upload into an unpartitioned base: no cutoff or inference job, 6 Spark jobs") {
+    val root = Files.createTempDirectory("stream-jobs-whole").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt")
+    new java.io.File(dirs.uploadDir).mkdirs()
+    baseDf(("P1", "2020-01-01", 1.0), ("P2", "2020-02-01", 2.0),
+      ("P3", "2020-03-01", 3.0)).write.parquet(dirs.basePath)
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      ("PolicyNumber,PolicyExpiryDate,Amount\n" +
+        "P4,2020-02-15,4.0\nP5,2020-02-20,5.0\nbad,not-a-date,0.0\n").getBytes("UTF-8"))
+    // the parse that checkpoints the batch and yields its statistics,
+    // the cleaned CSV, the staging table, then the ordered rewrite: two
+    // range-boundary sampling jobs and the write
+    val jobs = sparkJobs {
+      StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    }
+    val base = spark.read.parquet(dirs.basePath).collect()
+      .map(r => r.getAs[String]("PolicyNumber")).toSet
+    assert(base === Set("P1", "P2", "P4", "P5")) // cut at February 15th
+    assert(jobs <= 6, s"$jobs Spark jobs for one upload")
   }
 
   test("ST3: restart with same checkpoint reprocesses nothing") {
