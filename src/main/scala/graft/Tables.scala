@@ -22,8 +22,9 @@ object Tables {
     * immutable PLAN (no data is cached; every execution still scans
     * the parquet), so serving the same object per (session, dir, name)
     * is semantically identical. Keyed via [[graft.util.SessionCache]],
-    * so test sessions that rewrite a dir follow the established
-    * convention (SessionCache.clear between rewrites). */
+    * so a caller that rewrites a dir refreshes with
+    * [[graft.views.Views.createAll]] (which drops the dir's memos) or
+    * SessionCache.clear. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.util.SessionCache.memoize(spark, s"table:$name", dir) {
       load(spark, dir, name)

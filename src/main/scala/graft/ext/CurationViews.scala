@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions.col
   * cluster table, RowNumbering's distributed global order — so a SQL
   * user gets the 100 TB plans, not a single-partition window. Temp views
   * over already-materialized artifacts (the memoized pair set, the
-  * contraction's checkpointed fixpoint) serve from those blocks;
-  * re-registering after a table rewrite = new session or
-  * [[graft.util.SessionCache.clear]], like any materialized view. */
+  * contraction's checkpointed fixpoint) serve from those blocks. After
+  * a table rewrite, [[graft.views.Views.createAll]] drops the dir's
+  * memos (those blocks too); call this again after it to re-register,
+  * like any materialized view awaiting REFRESH. */
 object CurationViews {
 
   /** Register the CHEAP curation views — `dup_pairs`, `dup_clusters`,

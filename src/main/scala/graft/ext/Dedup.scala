@@ -121,9 +121,11 @@ object Dedup {
     * ([[graft.streaming.CurationStream.updateNearDupView]]). The final
     * pair table is checkpointed (it is tiny — duplicate-output-sized),
     * so consumers re-read a materialized (long, long, double) table
-    * rather than re-running the inverted-index pipeline; refresh = new
-    * session or [[graft.util.SessionCache.clear]], like any
-    * materialized view awaiting REFRESH. */
+    * rather than re-running the inverted-index pipeline; refresh =
+    * [[graft.util.SessionCache.evictDir]] (which
+    * [[graft.views.Views.createAll]] calls), a new session or
+    * [[graft.util.SessionCache.clear]], like any materialized view
+    * awaiting REFRESH. */
   def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
     graft.util.SessionCache.memoize(spark, "jacpairs", dir) {
       candidateJaccard(spark, dir).filter(col("jacc") >= 0.2)

@@ -60,12 +60,14 @@ object StreamPipeline {
       cleanedDir: String = "",
       partitionedBase: Boolean = false,
       /** When > 0 (requires partitionedBase): run
-        * [[graft.merge.Merge.compactPartitions]] after every Nth
-        * successfully merged batch — per-batch dynamic overwrites
-        * fragment the overlap partitions, and the pipeline maintains
-        * itself instead of leaning on an external maintenance job. A
-        * compaction failure only logs: the data is correct either way,
-        * and the next trigger retries. */
+        * [[graft.merge.Merge.compactPartitions]] after a successfully
+        * merged batch whose stream batch id + 1 is a multiple of N —
+        * per-batch dynamic overwrites fragment the overlap partitions,
+        * and the pipeline maintains itself instead of leaning on an
+        * external maintenance job. Batch ids count every micro-batch,
+        * dead-lettered ones included, so when that batch does not merge
+        * the round skips its compaction. A compaction failure only logs:
+        * the data is correct either way, and the next round retries. */
       compactEveryBatches: Int = 0) {
     def stagingOrDefault: String =
       if (stagingPath.nonEmpty) stagingPath else basePath + "_update"

@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * values recur after GC and could serve a new session an artifact
   * backed by a dead context's blocks.
   *
-  * Eviction, three routes so stopped/discarded sessions don't leak
-  * their checkpoint blocks across a long-lived JVM:
+  * Eviction, four routes so stopped/discarded sessions and rewritten
+  * dirs don't leak their checkpoint blocks across a long-lived JVM:
   *  - [[evictSession]] — a driver that cycles `newSession()` per unit
   *    of work calls it when retiring a session, unpersisting exactly
   *    that session's memo blocks. This is deliberately EXPLICIT, not
@@ -26,15 +26,15 @@ import org.apache.spark.sql.SparkSession
   *    building session, so a weak-reference sweep could never fire
   *    (the cache itself would keep every session reachable — verified
   *    by SessionCacheSpec);
+  *  - [[evictDir]] — the refresh after a write: one session's memos
+  *    for one dir;
   *  - a listener registered once per SparkContext clears everything at
   *    context end;
   *  - [[clear]] for tests/maintenance.
   */
 object SessionCache {
 
-  private final case class Entry(value: AnyRef,
-                                 sessionKey: String,
-                                 ownedIds: Set[Int],
+  private final case class Entry(value: AnyRef, ownedIds: Set[Int],
                                  ownedRdds: Seq[RDD[_]])
 
   private val entries = new ConcurrentHashMap[String, Entry]()
@@ -46,8 +46,9 @@ object SessionCache {
   /** Last-value-wins session tag (round 17: Tables.registerAll's
     * idempotence marker). Returns true when `value` DIFFERS from the
     * tag's previous value for this session — i.e. the caller's side
-    * effect must (re-)run. Cleared with [[clear]]/[[evictSession]] so a
-    * test that rewrites data and clears the cache re-registers. */
+    * effect must (re-)run. Cleared with [[clear]]/[[evictSession]], and
+    * a tag whose value is a dir with [[evictDir]], so a caller that
+    * rewrites data and evicts re-registers. */
   def tagChanged(spark: SparkSession, tag: String, value: String): Boolean =
     sessionTags.put(s"${sessionKey(spark)}|$tag", value) != value
 
@@ -68,13 +69,22 @@ object SessionCache {
     })
   }
 
-  /** Retire one session's artifacts: remove its entries and unpersist
-    * the blocks they own. Call when discarding a session in a
+  /** Retire one session's artifacts: remove its entries and its tags and
+    * unpersist the blocks they own. Call when discarding a session in a
     * long-lived JVM. */
-  def evictSession(spark: SparkSession): Unit = {
-    val sk = sessionKey(spark)
-    entries.forEach { (key, e) => if (e.sessionKey == sk) evict(key, e) }
-    sessionTags.keySet.removeIf(_.startsWith(sk + "|"))
+  def evictSession(spark: SparkSession): Unit = retire(spark, None)
+
+  /** Retire one session's artifacts for one dir: every memo keyed on
+    * `dir` (any scope) and every tag whose value is `dir`. Other dirs
+    * and other sessions keep serving. The refresh after a write to
+    * `dir` ([[graft.views.Views.createAll]]). */
+  def evictDir(spark: SparkSession, dir: String): Unit = retire(spark, Some(dir))
+
+  private def retire(spark: SparkSession, dir: Option[String]): Unit = {
+    val sk = sessionKey(spark) + "|"
+    entries.forEach { (key, e) =>
+      if (key.startsWith(sk) && dir.forall(d => key.endsWith(s"|$d"))) evict(key, e) }
+    sessionTags.entrySet.removeIf(t => t.getKey.startsWith(sk) && dir.forall(_ == t.getValue))
   }
 
   /** Build-once-per-(session, scope, dir) memoization.
@@ -133,8 +143,7 @@ object SessionCache {
     val created = (spark.sparkContext.getPersistentRDDs -- before.keySet)
       .filter { case (id, _) =>
         reachable.contains(id) && !ownedRdds.contains(id) }
-    val e = Entry(built, sessionKey(spark),
-      created.keySet.toSet, created.values.toSeq)
+    val e = Entry(built, created.keySet.toSet, created.values.toSeq)
     val prev = entries.putIfAbsent(key, e)
     if (prev != null) {
       // lost a concurrent race: drop this duplicate's blocks (only

@@ -42,13 +42,11 @@ object Views {
     * Memoized per (session, dir): the row-number step materializes a
     * checkpoint of the whole joined/projected fact (see
     * [[graft.operators.RowNumbering]]), and a warehouse builds that
-    * materialization ONCE per table version, not once per query —
-    * without the memo every `transactions`/`autoOptiom` call re-built
-    * and re-persisted a fresh checkpoint generation, which both slowed
-    * the caller and accumulated dead cached blocks across a many-query
-    * JVM. Rewritten data at the same dir keeps serving the built view by
-    * design (refresh = new session or [[graft.util.SessionCache.clear]]),
-    * exactly like a materialized view awaiting REFRESH. */
+    * materialization ONCE per table version, not once per query. Every
+    * surface reads this one build: [[transactions]], [[autoOptiom]] and
+    * the `TRANSACTIONS`/`AUTO_OPTIOM` views [[createAll]] registers.
+    * Rewritten data at the same dir keeps serving the built view, like a
+    * materialized view awaiting REFRESH; [[createAll]] is that refresh. */
   def transactionsCore(spark: SparkSession, dir: String): DataFrame =
     graft.util.SessionCache.memoize(spark, "txcore", dir) {
       buildTransactionsCore(spark, dir)
@@ -151,11 +149,10 @@ object Views {
     * Id semantics, no single-partition window anywhere in the plan.
     *
     * The verbatim [[transactionsSql]] keeps the reference's bare
-    * `ROW_NUMBER() OVER (ORDER BY …)` (single-partition — the one known
-    * scale trap in the registered SQL surface); this variant is the
-    * two-level rewrite a SQL-first user should adopt at scale, and it is
-    * pure ANSI SQL (it runs verbatim on DuckDB — the driver oracle-checks
-    * it):
+    * `ROW_NUMBER() OVER (ORDER BY …)` (single-partition); this variant is
+    * the two-level rewrite for an engine that must run SQL text at scale,
+    * and it is pure ANSI SQL (it runs verbatim on DuckDB — the driver
+    * oracle-checks it as `q_view_transactions_scaled`):
     *   1. bucket rows by `date_trunc('month', EntryDateTime)` — a
     *      monotone function of the LEADING sort key, so bucket order is
     *      consistent with the total order (ties stay inside one bucket;
@@ -173,7 +170,7 @@ object Views {
     *      instead of re-running the join subtree;
     *   4. Id = within-bucket row number + bucket offset.
     * The MinId/IsNew derivation and final ORDER BY are unchanged.
-    * ViewsSqlSpec proves row equality with the verbatim view and asserts
+    * ViewsSqlSpec proves row equality with the verbatim text and asserts
     * the plan contains no SinglePartition exchange. */
   val transactionsScaledSql: String =
     s"""WITH projected AS (
@@ -309,14 +306,10 @@ object Views {
   }
 
   val autoOptiomSql: String =
-    autoOptiomOver(s"(\n${indent(transactionsInnerSql, 2)}\n)")
-
-  /** AUTO_OPTIOM over the TRANSACTIONS rows `tx` (a subquery, or the
-    * registered view): the optiom subquery, the VIN join (J6), the F6
-    * date filter and the O3 order — one SQL text for both surfaces. */
-  private def autoOptiomOver(tx: String): String =
     s"""SELECT tx.*, op.VIN_OP, op.OP_Date, op.OP_Premium, op.OP_Status
-       |FROM $tx AS tx
+       |FROM (
+       |${indent(transactionsInnerSql, 2)}
+       |) AS tx
        |LEFT JOIN (
        |  SELECT
        |    o_orderkey AS VIN_OP,
@@ -328,37 +321,24 @@ object Views {
        |WHERE EntryDateTime >= TIMESTAMP '1996-06-01 00:00:00'
        |ORDER BY EntryDateTime DESC""".stripMargin
 
-  /** S6 — the reference's query surface is `CREATE OR REPLACE VIEW` SQL
-    * text executed against the warehouse (`config.py:215-221`,
-    * `settings.yaml:25,89,133`). This is that surface in-engine: register
-    * the base tables, then create each analytical view FROM SQL TEXT —
-    * AUTO_OPTIOM composes on the TRANSACTIONS view (view-on-view, as
-    * `settings.yaml:136-137` selects `FROM Database.TRANSACTIONS`).
+  /** S6 and the refresh — the reference re-creates its views from SQL
+    * text after every merge (`config.py:215-221`,
+    * `settings.yaml:25,89,133`). This registers the base tables, then
+    * `TRANSACTIONS`, `RETENTION` and `AUTO_OPTIOM` over the DataFrame
+    * builders, so SQL and DataFrame callers read the one memoized core
+    * and no registered view plans a single-partition window. It first
+    * drops this session's memos for `dir` (and the `registerAll` mark),
+    * so calling it after a write serves the new rows: it is the refresh.
+    * It builds the core, so it runs the row-numbering jobs.
     *
-    * The SQL strings are the SAME ANSI text the DuckDB oracle runs — one
-    * query surface, three engines (Spark SQL, DuckDB, the DataFrame
-    * builders above), cross-checked in ViewsSqlSpec.
-    *
-    * Scale note: the SQL text's bare `ROW_NUMBER() OVER (ORDER BY …)` is
-    * the reference's semantics verbatim and plans as a single-partition
-    * window; the DataFrame builders route the same total order through
-    * [[graft.operators.RowNumbering]] (range-sort + per-partition zip) —
-    * the plan you want at 100 TB. A SQL-first user adopting the
-    * registered surface at scale should query TRANSACTIONS_SCALED
-    * ([[transactionsScaledSql]] — same rows, distributed windows only);
-    * TRANSACTIONS stays reference-verbatim. Views created here are lazy
-    * (Spark temp views re-evaluate per query), matching BigQuery view
-    * semantics. */
+    * The SQL texts above stay the reference: the DuckDB oracle, the
+    * `q_view_transactions_scaled` entry and ViewsSqlSpec run them, and
+    * ViewsSqlSpec proves they return the builders' rows. */
   def createAll(spark: SparkSession, dir: String): Unit = {
+    graft.util.SessionCache.evictDir(spark, dir)
     graft.Tables.registerAll(spark, dir)
-    spark.sql(
-      s"CREATE OR REPLACE TEMP VIEW TRANSACTIONS AS\n$transactionsSql")
-    spark.sql(
-      s"CREATE OR REPLACE TEMP VIEW TRANSACTIONS_SCALED AS\n$transactionsScaledSql")
-    spark.sql(
-      s"CREATE OR REPLACE TEMP VIEW RETENTION AS\n$retentionSql")
-    // View-on-view: re-reference TRANSACTIONS rather than inlining it.
-    spark.sql(
-      s"CREATE OR REPLACE TEMP VIEW AUTO_OPTIOM AS\n${autoOptiomOver("TRANSACTIONS")}")
+    transactions(spark, dir).createOrReplaceTempView("TRANSACTIONS")
+    retention(spark, dir).createOrReplaceTempView("RETENTION")
+    autoOptiom(spark, dir).createOrReplaceTempView("AUTO_OPTIOM")
   }
 }

@@ -117,6 +117,44 @@ class SessionCacheSpec extends SparkSpec {
     SessionCache.dropTransientBlocks(spark)
   }
 
+  test("evictDir retires one dir of one session; other dirs and sessions keep serving") {
+    SessionCache.clear()
+    val other = spark.newSession()
+    def memo(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
+      SessionCache.memoize(s, "spec-dir", dir) { s.range(n).toDF("n").localCheckpoint() }
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val a = memo(spark, "/w/a", 10)
+      val aOwned = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val b = memo(spark, "/w/b", 20)
+      val c = memo(spark, "/x/w/a", 25) // ends with the evicted dir
+      val o = memo(other, "/w/a", 30)
+      SessionCache.tagChanged(spark, "spec-tag", "/w/a")
+      SessionCache.tagChanged(spark, "spec-tag-b", "/w/b")
+      SessionCache.tagChanged(other, "spec-tag", "/w/a")
+      assert(aOwned.nonEmpty)
+
+      SessionCache.evictDir(spark, "/w/a")
+      val now = spark.sparkContext.getPersistentRDDs.keySet
+      aOwned.foreach(id => assert(!now.contains(id), "evicted dir's block survived"))
+      // the other dirs and the other session's memo are hits that serve
+      assert(memo(spark, "/w/b", 0) eq b)
+      assert(memo(spark, "/x/w/a", 0) eq c)
+      assert(memo(other, "/w/a", 0) eq o)
+      assert(b.count() === 20 && c.count() === 25 && o.count() === 30)
+      // the evicted dir rebuilds; only its own tag is gone
+      val rebuilt = memo(spark, "/w/a", 5)
+      assert(!(rebuilt eq a) && rebuilt.count() === 5)
+      assert(SessionCache.tagChanged(spark, "spec-tag", "/w/a"))
+      assert(!SessionCache.tagChanged(spark, "spec-tag-b", "/w/b"))
+      assert(!SessionCache.tagChanged(other, "spec-tag", "/w/a"))
+    } finally {
+      SessionCache.evictSession(other)
+      SessionCache.clear()
+      SessionCache.dropTransientBlocks(spark)
+    }
+  }
+
   test("round-8 sweep telemetry: access log drains per query, pinned " +
     "bytes track owned blocks, evictKeys releases and rebuilds") {
     SessionCache.clear()
