@@ -203,12 +203,15 @@ object Merge {
     *     own footer schema — no inference job; differing columns fail
     *     the union loudly.
     *  4. Whole table: [[overwriteAtomic]] of [[mergeAt]]. Partitioned:
-    *     the cutoff month's survivors are checkpointed (off Spark's
-    *     overwrite-a-path-being-read hazard) and written with the batch
-    *     by dynamic partition overwrite: exactly the batch's months are
-    *     replaced, older ones stay byte-identical. Overlap months the
-    *     batch does not cover are deleted after the write commits (a
-    *     crash leaves at worst stale rows; re-running converges). */
+    *     the cutoff month's survivors and the batch are written to
+    *     `.merge-tmp` (read by the write, displaced only after it), and
+    *     each of the batch's months is swapped in by [[publish]], its
+    *     old generation at `.compact-bak-<m>` until the swap is done:
+    *     exactly the batch's months are replaced, older ones stay
+    *     byte-identical, and a failure at any step leaves a base that
+    *     step 1 heals and a re-run converges. Overlap months the batch
+    *     does not cover are deleted after the swaps (a crash leaves at
+    *     worst stale rows; re-running converges). */
   private[graft] def mergeBatch(spark: SparkSession, basePath: String,
                                 batch: DataFrame, dateCol: String,
                                 stats: BatchStats, partitioned: Boolean): Unit =
@@ -229,21 +232,22 @@ object Merge {
           case n if n.startsWith("pmonth=") => n.stripPrefix("pmonth=")
           case n if n.startsWith(".compact-bak-") => n.stripPrefix(".compact-bak-")
         }.distinct.filter(_ >= cutMonth)
-        val survivors = overlap.find(_ == cutMonth)
+        val tmp = new Path(root, ".merge-tmp")
+        fs.delete(tmp, true)
+        overlap.find(_ == cutMonth)
           .flatMap(m => readBase(spark, fs, new Path(root, s"pmonth=$m")))
-          .map(b => Checkpoints.checkpointTracked(b.filter(col(dateCol) < lit(cut))))
-        try {
-          // a per-write option: toggling the session conf would race a
-          // concurrent overwrite on the session and clobber its setting
-          survivors.fold(batch)(_._1.unionByName(batch))
-            .withColumn("pmonth", monthOf(dateCol))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pmonth").parquet(basePath)
-          overlap.filterNot(stats.months).foreach { m =>
-            fs.delete(new Path(root, s"pmonth=$m"), true)
-          }
-        } finally survivors.foreach(_._2())
+          .fold(batch)(_.filter(col(dateCol) < lit(cut)).unionByName(batch))
+          .withColumn("pmonth", monthOf(dateCol))
+          .write.mode("overwrite").partitionBy("pmonth").parquet(tmp.toString)
+        stats.months.foreach { m =>
+          val bak = new Path(root, s".compact-bak-$m")
+          publish(fs, new Path(tmp, s"pmonth=$m"), new Path(root, s"pmonth=$m"), bak)
+          fs.delete(bak, true)
+        }
+        overlap.filterNot(stats.months).foreach { m =>
+          fs.delete(new Path(root, s"pmonth=$m"), true)
+        }
+        fs.delete(tmp, true)
       }
     }
 
@@ -330,7 +334,8 @@ object Merge {
     finally reader.close()
   }
 
-  /** Heal a compaction interrupted by a crash: [[heal]] each
+  /** Heal a month swap (a compaction's, or a partitioned merge's)
+    * interrupted by a crash: [[heal]] each
     * `.compact-bak-<m>` against `pmonth=<m>` and delete every
     * `.compact-tmp-<m>` (an incomplete or superseded write — when a
     * backup was just restored, the next run simply re-compacts).
@@ -355,23 +360,4 @@ object Merge {
   def writePartitioned(df: DataFrame, basePath: String, dateCol: String): Unit =
     df.withColumn("pmonth", monthOf(dateCol))
       .write.mode("overwrite").partitionBy("pmonth").parquet(basePath)
-
-  /** S5 retry path — merge from the PERSISTED staging table. The
-    * reference truncate-loads `table_new` and keeps it queryable
-    * (`config.py:161-171`, `settings.yaml:20`); a merge failure leaves
-    * staging committed so the merge alone can be re-run
-    * (`main.py:50-62`: load failure dead-letters, merge failure only
-    * logs). This is that retry: no re-clean, no re-upload — just re-read
-    * `table_new` and redo the cutoff merge (idempotent, MergeSpec
-    * property). */
-  def updateFromStaging(spark: SparkSession, basePath: String,
-                        stagingPath: String, dateCol: String): Unit =
-    updateTable(spark, basePath, spark.read.parquet(stagingPath), dateCol)
-
-  /** [[updateFromStaging]] against a month-partitioned base — the same
-    * retryable/idempotent contract, O(overlap) per attempt. */
-  def updateFromStagingPartitioned(spark: SparkSession, basePath: String,
-                                   stagingPath: String, dateCol: String): Unit =
-    updateTablePartitioned(spark, basePath,
-      spark.read.parquet(stagingPath), dateCol)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.slf4j.LoggerFactory
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
 import graft.clean.Clean
 import graft.config.PipelineConf
 import graft.merge.Merge
@@ -19,7 +19,9 @@ import graft.util.Checkpoints
   *  ST1  file-arrival trigger: `readStream` on the upload dir with
   *       `Trigger.AvailableNow` + maxFilesPerTrigger=1 — one micro-batch
   *       per uploaded file, mirroring one Cloud-Function invocation per
-  *       GCS Finalize event
+  *       GCS Finalize event. Spark's file source keys the files it has
+  *       seen by path, so an upload needs a name the stream has not seen:
+  *       a file re-uploaded under a seen name is never read
   *  ST2  the second stage (load→merge→views) runs in the same
   *       foreachBatch — the Pub/Sub hop becomes an in-job dataflow edge
   *  ST3  effectively-once table update: checkpointed source offsets +
@@ -27,10 +29,15 @@ import graft.util.Checkpoints
   *       base table)
   *  ST4  late/overlapping data: staging rows win the overlap window
   *       (Merge semantics)
-  *  ST5  failure path: any batch error, or a batch whose rows ALL fail
-  *       cleaning, dead-letters the raw file(s) into errorDir (`S8`,
-  *       reference `config.py:223-234`)
-  *  ST6  post-update notification: one message file per processed batch
+  *  ST5  each micro-batch ends in one of three ways: merged (merge,
+  *       then notify); dead-lettered — the load (the pass, the cleaned
+  *       CSV, staging) failed or no row is dated, and the raw file(s)
+  *       move into errorDir (`S8`, reference `config.py:223-234`,
+  *       `main.py:52-53`); or failed before its offset commits — the
+  *       merge or notify threw, the query stops, and the restart replays
+  *       the batch (same rows, idempotent merge). A merge that keeps
+  *       failing stops the stream until the base is repaired
+  *  ST6  post-update notification: one message file per merged batch
   *       in notifyDir, base64-encoded payload (`S9`/`S10` analog — a
   *       downstream `readStream` on notifyDir is the second trigger)
   *  ST7  stage-transition logging via slf4j
@@ -43,37 +50,30 @@ object StreamPipeline {
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** stagingPath = the persisted `table_new` analog (S5, truncate-loaded
-    * every batch, queryable between batches, merge-retry source);
-    * cleanedDir = the cleaned-output bucket analog (S4, one durable
-    * cleaned CSV artifact per data type). Both default to siblings of
-    * basePath, mirroring the reference's `<type>_update` staging-table
-    * naming (`settings.yaml:20`) and second-bucket cleaned file
-    * (`config.py:146`). */
+  /** Where one stream reads and writes. Beside `basePath` the pipeline
+    * keeps two fixed siblings, mirroring the reference's `<type>_update`
+    * staging table (`settings.yaml:20`) and second-bucket cleaned file
+    * (`config.py:146`): `<basePath>_update`, the persisted `table_new`
+    * analog (S5, truncate-loaded by every loaded batch, queryable
+    * between batches), and `<basePath>_cleaned/<name>`, the cleaned CSV
+    * artifact (S4). */
   final case class StreamDirs(
       uploadDir: String,
       basePath: String,
       errorDir: String,
       notifyDir: String,
       checkpointDir: String,
-      stagingPath: String = "",
-      cleanedDir: String = "",
       partitionedBase: Boolean = false,
       /** When > 0 (requires partitionedBase): run
         * [[graft.merge.Merge.compactPartitions]] after a successfully
         * merged batch whose stream batch id + 1 is a multiple of N —
-        * per-batch dynamic overwrites fragment the overlap partitions,
+        * per-batch merges fragment the overlap partitions,
         * and the pipeline maintains itself instead of leaning on an
         * external maintenance job. Batch ids count every micro-batch,
         * dead-lettered ones included, so when that batch does not merge
         * the round skips its compaction. A compaction failure only logs:
         * the data is correct either way, and the next round retries. */
-      compactEveryBatches: Int = 0) {
-    def stagingOrDefault: String =
-      if (stagingPath.nonEmpty) stagingPath else basePath + "_update"
-    def cleanedOrDefault: String =
-      if (cleanedDir.nonEmpty) cleanedDir else basePath + "_cleaned"
-  }
+      compactEveryBatches: Int = 0)
 
   /** S10 — decode a notify-message DataFrame (column `payload` base64). */
   def decodeMessage(df: DataFrame): DataFrame =
@@ -152,7 +152,8 @@ object StreamPipeline {
   /** Wire the full pipeline; returns the started query (caller awaits).
     * Processes everything currently in uploadDir, then stops
     * (Trigger.AvailableNow); restart with the same checkpoint to pick up
-    * only new files.
+    * only new files — or to replay a batch whose merge or notify failed
+    * (ST5): its `awaitTermination` throws, and the restart is the retry.
     *
     * One micro-batch reads its upload ONCE: the typed rows
     * ([[graft.clean.Clean.typed]], each row's source file still
@@ -175,11 +176,13 @@ object StreamPipeline {
       .schema(stringSchema)
       .csv(dirs.uploadDir)
       .withColumn("__src", col("_metadata.file_path"))
+    val staging = dirs.basePath + "_update"
 
     raw.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", dirs.checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val tag = s"[${conf.name}] batch $batchId"
         // ONE pass over the upload: it fills the checkpoint that severs
         // lineage from files we may move (released after the merge: a
         // long stream must not accumulate a cached generation per batch)
@@ -190,57 +193,49 @@ object StreamPipeline {
         // a failed pass listed no files: list them alone to dead-letter
         val files = pass.map(_._2.files.toSeq).getOrElse(
           batch.select("__src").distinct().collect().map(_.getString(0)).toSeq)
-        log.info(s"[${conf.name}] batch $batchId: ${files.size} file(s)")
+        log.info(s"$tag: ${files.size} file(s)")
         try {
-          val (typed, stats, release) = pass.get
-          try if (stats.kept == 0 && files.nonEmpty) {
-            // every row failed cleaning — treat as a poisoned file
-            log.warn(s"[${conf.name}] batch $batchId cleaned to 0 rows")
-            deadLetter(spark, files, dirs.errorDir)
-          } else {
+          // the load (main.py:52-53): with no dated row — every row failed
+          // cleaning, or a replayed batch whose file was already moved —
+          // nothing stages; a failure or an empty batch dead-letters
+          val loaded = pass.flatMap { case (typed, stats, _) => Try {
+            require(stats.kept > 0, "no dated row")
             val cleaned = Clean.dropUndated(conf)(typed).drop("__src")
             // S4: durable cleaned artifact (reference writes the cleaned
             // file to a second bucket, config.py:146) — inspectable
             // between stages, overwritten per batch like the reference's
             // fixed per-type uri2.
             cleaned.write.mode("overwrite").option("header", true)
-              .csv(s"${dirs.cleanedOrDefault}/${conf.name}")
+              .csv(s"${dirs.basePath}_cleaned/${conf.name}")
             // S5: truncate-load the staging table (WRITE_TRUNCATE,
-            // config.py:161-171). table_new survives the batch and is
-            // queryable: the merge-retry source.
-            Merge.overwriteAtomic(cleaned, dirs.stagingOrDefault)
-            log.info(s"[${conf.name}] batch $batchId staged ${stats.kept} rows " +
-              s"at ${dirs.stagingOrDefault}")
-            // Reference semantics (main.py:50-62): a load failure
-            // dead-letters, but a MERGE failure only logs — staging is
-            // committed, so the merge alone is retryable
-            // (Merge.updateFromStaging).
-            try {
+            // config.py:161-171); table_new survives the batch, queryable
+            Merge.overwriteAtomic(cleaned, staging)
+            log.info(s"$tag staged ${stats.kept} rows at $staging")
+            (cleaned, stats)
+          }}
+          loaded match {
+            case Failure(e) =>
+              log.warn(s"$tag not loaded, dead-lettered: ${e.getMessage}")
+              deadLetter(spark, files, dirs.errorDir)
+            case Success((cleaned, stats)) =>
+              // a merge or notify failure leaves foreachBatch: the offset
+              // does not commit, and the restart replays this batch
               Merge.mergeBatch(spark, dirs.basePath, cleaned, conf.dateCol,
                 stats, dirs.partitionedBase)
-              log.info(s"[${conf.name}] batch $batchId merged ${stats.kept} rows")
+              log.info(s"$tag merged ${stats.kept} rows")
               if (dirs.partitionedBase && dirs.compactEveryBatches > 0 &&
                   (batchId + 1) % dirs.compactEveryBatches == 0)
                 try {
                   val n = Merge.compactPartitions(spark, dirs.basePath)
-                  log.info(s"[${conf.name}] batch $batchId compacted $n partition(s)")
+                  log.info(s"$tag compacted $n partition(s)")
                 } catch {
                   case e: Throwable =>
-                    log.warn(s"[${conf.name}] compaction failed " +
+                    log.warn(s"$tag compaction failed " +
                       s"(data unaffected, retried next trigger): ${e.getMessage}")
                 }
               notify(spark, dirs.notifyDir, batchId, conf.name)
-            } catch {
-              case e: Throwable =>
-                log.warn(s"[${conf.name}] batch $batchId merge failed " +
-                  s"(staging persisted, retryable): ${e.getMessage}")
-            }
-          } finally release()
-        } catch {
-          case e: Throwable =>
-            log.warn(s"[${conf.name}] batch $batchId failed: ${e.getMessage}")
-            deadLetter(spark, files, dirs.errorDir)
-        }
+          }
+        } finally pass.foreach(_._3())
       }
       .start()
   }

@@ -40,7 +40,7 @@ class AdfTestSpec extends SparkSpec {
   test("streaming view == batch on the finalized hour set") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("adf-stream")
+    val tmp = tempDir("adf-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

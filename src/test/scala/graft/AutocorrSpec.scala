@@ -36,7 +36,7 @@ class AutocorrSpec extends SparkSpec {
 
   test("streaming view == batch ACF on fully-finalized data") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("acf-stream")
+    val tmp = tempDir("acf-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

@@ -1,10 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The bench evidence channel and the three-arm retime trigger
   * (round-14 verdict asks #1/#7) — pure logic, no Spark session. */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   test("retime trigger: ratio arm fires on warm > 1.3x cold above the " +
     "absolute floor") {
@@ -37,7 +35,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("evidence file round-trips: priorWarms reads back what " +
     "evidenceJson wrote; round = max committed BENCH_r + 1") {
-    val tmp = java.nio.file.Files.createTempDirectory("bench_ev").toFile
+    val tmp = tempDir("bench_ev").toFile
     // simulate the driver's committed artifacts
     java.nio.file.Files.write(new java.io.File(tmp, "BENCH_r13.json")
       .toPath, "{}".getBytes("UTF-8"))
@@ -55,7 +53,7 @@ class BenchSpec extends AnyFunSuite {
     assert(json.indexOf("\"q_a\"") < json.indexOf("\"q_b\""))
     assert(json.contains(""""q_a":{"warm_ms":150,"cold_ms":90,"retimed":true}"""))
     // no evidence file at all: the prior arm stays silent
-    val empty = java.nio.file.Files.createTempDirectory("bench_ev2").toFile
+    val empty = tempDir("bench_ev2").toFile
     assert(BenchEvidence.priorWarms(empty) === Map.empty)
     assert(BenchEvidence.currentRound(empty) === 1)
   }

@@ -10,7 +10,7 @@ import graft.streaming.Bm25Store
 class Bm25StoreSpec extends SparkSpec {
 
   test("served scores == batch bm25 over absorbed docs; replay idempotent") {
-    val tmp = java.nio.file.Files.createTempDirectory("bm25store")
+    val tmp = tempDir("bm25store")
       .toFile.getAbsolutePath
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text")

@@ -13,7 +13,7 @@ class CalibrationStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("live views == batch isotonic/kappa under slicing, replay, compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("calstore")
+    val tmp = tempDir("calstore")
       .toFile.getAbsolutePath
     // frozen scorer: the KN model over the reference corpus, scored
     // once — slices carry the rows, never retrain
@@ -70,7 +70,7 @@ class CalibrationStoreSpec extends SparkSpec {
   }
 
   test("a range-extending batch re-buckets the curve from merged state") {
-    val tmp = java.nio.file.Files.createTempDirectory("calstore2")
+    val tmp = tempDir("calstore2")
       .toFile.getAbsolutePath
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

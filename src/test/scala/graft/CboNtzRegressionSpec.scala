@@ -28,7 +28,7 @@ class CboNtzRegressionSpec extends SparkSpec {
   test("NTZ column stats under CBO: safe path plans, symptom pinned") {
     val s2 = spark.newSession()
     org.apache.spark.sql.SparkSession.setActiveSession(s2)
-    val tmp = java.nio.file.Files.createTempDirectory("ntzcbo")
+    val tmp = tempDir("ntzcbo")
       .toFile.getAbsolutePath
     spark.sql(
       """SELECT id, TIMESTAMP_NTZ '1997-06-01 00:00:00' + make_interval(0, 0, 0, CAST(id AS INT), 0, 0, 0) AS ts

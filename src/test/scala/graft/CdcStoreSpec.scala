@@ -22,7 +22,7 @@ class CdcStoreSpec extends SparkSpec {
 
   test("cdc store: streamed applied view == batch applyCdc under " +
     "orderkey-sliced arrival; redelivery a no-op") {
-    val tmp = Files.createTempDirectory("cdc-store").toFile.getAbsolutePath
+    val tmp = tempDir("cdc-store").toFile.getAbsolutePath
     val store = s"$tmp/store"
     val base = Tables(spark, dir, "customer").select(
       col("c_custkey").as("key"),
@@ -54,7 +54,7 @@ class CdcStoreSpec extends SparkSpec {
   }
 
   test("cdc store: tombstone keeps beating a late-arriving earlier upsert") {
-    val tmp = Files.createTempDirectory("cdc-late").toFile.getAbsolutePath
+    val tmp = tempDir("cdc-late").toFile.getAbsolutePath
     val store = s"$tmp/store"
     val base = Seq((1L, 10L)).toDF("key", "value")
     // delete at seq 5 arrives FIRST, upsert at seq 3 arrives LATER

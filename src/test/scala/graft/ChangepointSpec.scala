@@ -53,7 +53,7 @@ class ChangepointSpec extends SparkSpec {
   test("streaming view == batch changepoint on the finalized hour set") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("cp-stream")
+    val tmp = tempDir("cp-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

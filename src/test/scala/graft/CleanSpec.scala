@@ -24,7 +24,7 @@ class CleanSpec extends SparkSpec {
     tableNew = "", tableOld = "", uri1 = None, uri2 = None)
 
   private def writeCsv(rows: String*): String = {
-    val dir = Files.createTempDirectory("clean-spec").toFile
+    val dir = tempDir("clean-spec").toFile
     val f = new java.io.File(dir, "in.csv")
     val header =
       "PolicyNumber,PolicyEffectiveDate,PolicyExpiryDate,LeaseIndicator,CommissionAmt,Units,Extra"

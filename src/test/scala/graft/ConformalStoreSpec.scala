@@ -13,7 +13,7 @@ class ConformalStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("live view == batch conformal under slicing, replay, compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("confstore")
+    val tmp = tempDir("confstore")
       .toFile.getAbsolutePath
     val inferred = CorpusOps.qClassifierInfer(spark, dir)
       .select("doc_id", "score", "y").localCheckpoint()

@@ -16,7 +16,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("curation and packing streams run CONCURRENTLY on one session, both correct") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("curation-conc").toFile.getAbsolutePath
+    val tmp = tempDir("curation-conc").toFile.getAbsolutePath
     val upload = s"$tmp/upload"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -55,7 +55,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("partitioned store: converges identically, untouched buckets byte-stable") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("curation-part").toFile.getAbsolutePath
+    val tmp = tempDir("curation-part").toFile.getAbsolutePath
     val store = s"$tmp/store"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     val scrubbedAll = graft.ext.TextOps.gateAndScrub(docs)
@@ -100,7 +100,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("incremental packing: one continuous token stream across batches, idempotent replay") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("pack-stream").toFile.getAbsolutePath
+    val tmp = tempDir("pack-stream").toFile.getAbsolutePath
     val upload = s"$tmp/upload"
     val packed = s"$tmp/packed"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
@@ -193,7 +193,7 @@ class CurationStreamSpec extends SparkSpec {
     def run(slices: Seq[Seq[(Long, String)]], tag: String,
             partitioned: Boolean = false)
         : (Set[(Long, Long)], Set[Long]) = {
-      val tmp = Files.createTempDirectory(s"neardup-$tag")
+      val tmp = tempDir(s"neardup-$tag")
         .toFile.getAbsolutePath
       val upload = s"$tmp/upload"
       slices.zipWithIndex.foreach { case (docs, i) =>
@@ -290,7 +290,7 @@ class CurationStreamSpec extends SparkSpec {
     val cool = docs.take(10)
     val rest = docs.drop(10)
 
-    val tmp = Files.createTempDirectory("neardup-hot").toFile.getAbsolutePath
+    val tmp = tempDir("neardup-hot").toFile.getAbsolutePath
     cool.toDF("doc_id", "text").coalesce(1).write.parquet(s"$tmp/upload/f0")
     rest.toDF("doc_id", "text").coalesce(1).write.parquet(s"$tmp/upload/f1")
     val q = CurationStream.runNearDupStream(spark, s"$tmp/upload/*",
@@ -320,7 +320,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("scoring stream: per-batch model inference equals batch scoring, replay idempotent") {
     import graft.ext.CorpusOps
-    val tmp = Files.createTempDirectory("scoring-stream").toFile.getAbsolutePath
+    val tmp = tempDir("scoring-stream").toFile.getAbsolutePath
     val docs = Tables(spark, dir, "documents")
       .select("doc_id", "text", "lang")
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
@@ -381,7 +381,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("novelty-gated curation stream: yesterday's corpus never re-enters the store") {
     import graft.operators.BloomProbe
-    val tmp = Files.createTempDirectory("novelty-stream").toFile.getAbsolutePath
+    val tmp = tempDir("novelty-stream").toFile.getAbsolutePath
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     val yesterday = docs.filter(col("doc_id") < 50)
     val bf = BloomProbe.buildFilter(
@@ -414,7 +414,7 @@ class CurationStreamSpec extends SparkSpec {
   test("line-stats stream: incremental docfreq equals batch stats; clean view " +
     "converges with retroactive displacement; redelivery is a value no-op") {
     import graft.ext.CorpusOps
-    val tmp = Files.createTempDirectory("linestats-stream").toFile.getAbsolutePath
+    val tmp = tempDir("linestats-stream").toFile.getAbsolutePath
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     // adversarial slicing: odd docs first, then even — duplicate groups
     // (the planted near-dup pairs share lines) split across batches
@@ -457,7 +457,7 @@ class CurationStreamSpec extends SparkSpec {
   }
 
   test("stream-fed store equals the batch gate+scrub+dedup output") {
-    val tmp = Files.createTempDirectory("curation-stream").toFile.getAbsolutePath
+    val tmp = tempDir("curation-stream").toFile.getAbsolutePath
     val upload = s"$tmp/upload"
     val store = s"$tmp/store"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
@@ -503,7 +503,7 @@ class CurationStreamSpec extends SparkSpec {
   test("novelty stream: cross-batch and within-batch duplicate texts " +
     "dropped, every distinct text emitted exactly once with its min-id " +
     "rep, bit store bounded; redelivery emits nothing new") {
-    val tmp = Files.createTempDirectory("novelty-stream").toFile.getAbsolutePath
+    val tmp = tempDir("novelty-stream").toFile.getAbsolutePath
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     val cutoff = docs.agg(max("doc_id")).head().getLong(0) / 2
     // slice 0 ⊂ slice 1: every lower-half text RECURS in the full-corpus
@@ -548,7 +548,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("substr-stats stream: clean view equals batch substrDedup over " +
     "the union corpus; cross-batch duplicates found; replay a no-op") {
-    val tmp = Files.createTempDirectory("substr-stream").toFile.getAbsolutePath
+    val tmp = tempDir("substr-stream").toFile.getAbsolutePath
     val statsPath = s"$tmp/winstats"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     // the twin slice duplicates every third doc under new ids — spans
@@ -585,7 +585,7 @@ class CurationStreamSpec extends SparkSpec {
     "assignment, serving from it equals serving the batch artifacts, " +
     "staleness rises to the refit trigger, replay idempotent") {
     import graft.ext.Similarity
-    val tmp = Files.createTempDirectory("ann-stream").toFile.getAbsolutePath
+    val tmp = tempDir("ann-stream").toFile.getAbsolutePath
     val annPath = s"$tmp/ann"
     val emb = Tables(spark, dir, "embeddings")
       .select("vec_id", "embedding")
@@ -660,7 +660,7 @@ class CurationStreamSpec extends SparkSpec {
     "event-sliced arrival; redelivery a no-op") {
     import graft.operators.Events
     import graft.streaming.CohortStore
-    val tmp = Files.createTempDirectory("cohort-store").toFile.getAbsolutePath
+    val tmp = tempDir("cohort-store").toFile.getAbsolutePath
     val root = s"$tmp/store"
     val ev = Tables(spark, dir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -691,7 +691,7 @@ class CurationStreamSpec extends SparkSpec {
     "staleness reset, serving continuity; exhaustive recall preserved, " +
     "cells rebalanced") {
     import graft.ext.Similarity
-    val tmp = Files.createTempDirectory("ann-refit").toFile.getAbsolutePath
+    val tmp = tempDir("ann-refit").toFile.getAbsolutePath
     val annPath = s"$tmp/ann"
     val emb = Tables(spark, dir, "embeddings").select("vec_id", "embedding")
     // frozen artifacts deliberately fit on a tiny 20-vector bootstrap —
@@ -793,7 +793,7 @@ class CurationStreamSpec extends SparkSpec {
 
   test("simple store: a republish that died between its renames keeps " +
     "the full store") {
-    val tmp = Files.createTempDirectory("curation-heal").toFile.getAbsolutePath
+    val tmp = tempDir("curation-heal").toFile.getAbsolutePath
     val store = s"$tmp/store"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     val scrubbedAll = TextOps.gateAndScrub(docs)
@@ -815,7 +815,7 @@ class CurationStreamSpec extends SparkSpec {
   test("threshold stream: rolling exact threshold equals batch " +
     "scoreThreshold after each absorbed prefix; replay a no-op") {
     import graft.ext.CorpusOps
-    val tmp = Files.createTempDirectory("thresh-stream").toFile.getAbsolutePath
+    val tmp = tempDir("thresh-stream").toFile.getAbsolutePath
     val histPath = s"$tmp/hist"
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     val sliceA = docs.filter(col("doc_id") % 3 === 0)

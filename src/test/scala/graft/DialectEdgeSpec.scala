@@ -32,7 +32,7 @@ package graft
 class DialectEdgeSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("edgecorpus")
+    val d = tempDir("edgecorpus")
       .toFile.getAbsolutePath
     EdgeCorpus.write(spark, d)
     d

@@ -62,7 +62,7 @@ class DqGateSpec extends SparkSpec {
   }
 
   test("streaming gate == batch gate, idempotent under batch replay") {
-    val tmp = java.nio.file.Files.createTempDirectory("dqgate")
+    val tmp = tempDir("dqgate")
       .toFile.getAbsolutePath
     // two uploads
     val Array(a, b) = li.randomSplit(Array(0.5, 0.5), seed = 7)

@@ -18,7 +18,7 @@ class DriftStoreSpec extends SparkSpec {
     round(col("o_totalprice") * 100).cast("long").as("cents"))
 
   test("streamed views == batch stats; replay idempotent; compaction inert") {
-    val tmp = java.nio.file.Files.createTempDirectory("driftstore")
+    val tmp = tempDir("driftstore")
       .toFile.getAbsolutePath
     val orders = spark.read.parquet(s"$dir/orders.parquet")
       .select("o_orderdate", "o_totalprice")
@@ -56,7 +56,7 @@ class DriftStoreSpec extends SparkSpec {
   }
 
   test("recover converges an interrupted state and serving proceeds") {
-    val tmp = java.nio.file.Files.createTempDirectory("driftrec")
+    val tmp = tempDir("driftrec")
       .toFile.getAbsolutePath
     val orders = spark.read.parquet(s"$dir/orders.parquet")
       .select("o_orderdate", "o_totalprice")

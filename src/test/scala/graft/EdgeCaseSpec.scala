@@ -11,7 +11,7 @@ class EdgeCaseSpec extends SparkSpec {
   import spark.implicits._
 
   test("text-stats store: an empty batch is absorbed as a no-op") {
-    val tmp = java.nio.file.Files.createTempDirectory("ts-empty")
+    val tmp = tempDir("ts-empty")
       .toFile.getAbsolutePath
     val docs = Seq((1L, "alpha beta alpha", "s1"))
       .toDF("doc_id", "text", "source")

@@ -58,7 +58,7 @@ class EventDynamicsSpec extends SparkSpec {
   test("streaming fano view == the batch fano leg on fully-finalized data") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("fano-stream")
+    val tmp = tempDir("fano-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

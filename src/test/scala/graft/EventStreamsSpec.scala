@@ -31,7 +31,7 @@ class EventStreamsSpec extends SparkSpec {
 
   /** FileStreamSource wants a directory; stage the parquet into one. */
   private def stageSourceDir(): String = {
-    val d = Files.createTempDirectory("evt-src")
+    val d = tempDir("evt-src")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("events.parquet"))
     d.toFile.getAbsolutePath
@@ -42,7 +42,7 @@ class EventStreamsSpec extends SparkSpec {
       .schema(rawSchema)
       .parquet(stageSourceDir())
       .transform(Tables.adaptEventsTs)
-    val out = Files.createTempDirectory("evt-win").toFile.getAbsolutePath
+    val out = tempDir("evt-win").toFile.getAbsolutePath
     val q = EventStreams.windowedCounts(src)
       .writeStream.format("memory").queryName("win_counts")
       .outputMode("append")
@@ -69,7 +69,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("streaming dedup: a fully re-delivered file emits no duplicates") {
     // stage the SAME parquet twice — an exact at-least-once re-delivery
-    val srcDir = Files.createTempDirectory("evt-dup")
+    val srcDir = tempDir("evt-dup")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       srcDir.resolve("events_a.parquet"))
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
@@ -78,7 +78,7 @@ class EventStreamsSpec extends SparkSpec {
       .schema(rawSchema)
       .parquet(srcDir.toFile.getAbsolutePath)
       .transform(Tables.adaptEventsTs)
-    val out = Files.createTempDirectory("evt-dup-out").toFile.getAbsolutePath
+    val out = tempDir("evt-dup-out").toFile.getAbsolutePath
     val q = graft.streaming.EventStreams.dedupEvents(src)
       .writeStream.format("memory").queryName("dedup_events")
       .outputMode("append")
@@ -99,7 +99,7 @@ class EventStreamsSpec extends SparkSpec {
     val errors = src().filter($"event_type" === "error")
     val clicks = src().filter($"event_type" === "click")
       .withColumnRenamed("ts", "cts")
-    val out = Files.createTempDirectory("evt-prox").toFile.getAbsolutePath
+    val out = tempDir("evt-prox").toFile.getAbsolutePath
     val q = graft.streaming.EventStreams.proximityJoin(errors, clicks)
       .writeStream.format("memory").queryName("prox")
       .outputMode("append")
@@ -134,7 +134,7 @@ class EventStreamsSpec extends SparkSpec {
       }.toSet
 
     def runStream(srcDir: String, name: String): Set[(Long, Int, Long)] = {
-      val out = Files.createTempDirectory(s"evt-fun-$name")
+      val out = tempDir(s"evt-fun-$name")
         .toFile.getAbsolutePath
       // schema of the files THIS TEST wrote (engine-facing, so the
       // test is agnostic to the testdata's physical ts layout)
@@ -161,7 +161,7 @@ class EventStreamsSpec extends SparkSpec {
     // PART 1: the real corpus in two time-ordered slices
     val ev = eventsDf
     val mid = ev.agg(expr("percentile(unix_micros(ts), 0.5)")).head.getDouble(0)
-    val srcDir = Files.createTempDirectory("evt-fun-src")
+    val srcDir = tempDir("evt-fun-src")
     ev.filter(unix_micros($"ts") <= mid).coalesce(1)
       .write.parquet(srcDir.resolve("a").toString)
     ev.filter(unix_micros($"ts") > mid).coalesce(1)
@@ -189,7 +189,7 @@ class EventStreamsSpec extends SparkSpec {
         (id, new java.sql.Timestamp(minute * 60000L), u, tpe, 0.0)
       }.toDF("event_id", "ts", "user_id", "event_type", "value")
     }
-    val disDir = Files.createTempDirectory("evt-fun-dis")
+    val disDir = tempDir("evt-fun-dis")
     mkEvents(Seq((1L, 1L, 10, "signup"), (1L, 2L, 200, "view")))
       .coalesce(1).write.parquet(disDir.resolve("a").toString)
     mkEvents(Seq((1L, 3L, 150, "click"), (1L, 4L, 400, "purchase"),
@@ -224,7 +224,7 @@ class EventStreamsSpec extends SparkSpec {
       }.toSet
 
     def runStream(srcDir: String, name: String) = {
-      val out = Files.createTempDirectory(s"evt-attr-$name")
+      val out = tempDir(s"evt-attr-$name")
         .toFile.getAbsolutePath
       val schema = spark.read.parquet(srcDir).schema
       val src = spark.readStream.schema(schema)
@@ -252,7 +252,7 @@ class EventStreamsSpec extends SparkSpec {
     // PART 1: real corpus, two time-ordered slices
     val ev = eventsDf
     val mid = ev.agg(expr("percentile(unix_micros(ts), 0.5)")).head.getDouble(0)
-    val srcDir = Files.createTempDirectory("evt-attr-src")
+    val srcDir = tempDir("evt-attr-src")
     ev.filter(unix_micros($"ts") <= mid).coalesce(1)
       .write.parquet(srcDir.resolve("a").toString)
     ev.filter(unix_micros($"ts") > mid).coalesce(1)
@@ -274,7 +274,7 @@ class EventStreamsSpec extends SparkSpec {
         (id, new java.sql.Timestamp(minute * 60000L), u, tpe, 1.0)
       }.toDF("event_id", "ts", "user_id", "event_type", "value")
     }
-    val disDir = Files.createTempDirectory("evt-attr-dis")
+    val disDir = tempDir("evt-attr-dis")
     mkEvents(Seq((1L, 1L, 110, "purchase")))
       .coalesce(1).write.parquet(disDir.resolve("a").toString)
     mkEvents(Seq((1L, 2L, 100, "click"),
@@ -288,9 +288,9 @@ class EventStreamsSpec extends SparkSpec {
   test("streaming anomaly monitor: view over the streamed hourly store " +
     "== batch anomaly on finalized hours") {
     import graft.operators.Events
-    val store = Files.createTempDirectory("evt-anom-store")
+    val store = tempDir("evt-anom-store")
       .toFile.getAbsolutePath
-    val ck = Files.createTempDirectory("evt-anom-ck").toFile.getAbsolutePath
+    val ck = tempDir("evt-anom-ck").toFile.getAbsolutePath
     val src = spark.readStream.schema(rawSchema)
       .parquet(stageSourceDir())
       .transform(Tables.adaptEventsTs)
@@ -318,13 +318,13 @@ class EventStreamsSpec extends SparkSpec {
     import graft.operators.Events
     val ev = eventsDf
     val mid = ev.agg(expr("percentile(unix_micros(ts), 0.5)")).head.getDouble(0)
-    val srcDir = Files.createTempDirectory("evt-trans-src")
+    val srcDir = tempDir("evt-trans-src")
     ev.filter(unix_micros($"ts") <= mid).coalesce(1)
       .write.parquet(srcDir.resolve("a").toString)
     ev.filter(unix_micros($"ts") > mid).coalesce(1)
       .write.parquet(srcDir.resolve("b").toString)
 
-    val out = Files.createTempDirectory("evt-trans-out").toFile.getAbsolutePath
+    val out = tempDir("evt-trans-out").toFile.getAbsolutePath
     val schema = spark.read.parquet(s"$srcDir/*").schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
@@ -376,7 +376,7 @@ class EventStreamsSpec extends SparkSpec {
       .transform(Tables.adaptEventsTs)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[EventStreams.Event]
-    val out = Files.createTempDirectory("evt-sess").toFile.getAbsolutePath
+    val out = tempDir("evt-sess").toFile.getAbsolutePath
     val q = EventStreams.sessionize(src)
       .writeStream.format("memory").queryName("sessions")
       .outputMode("append")
@@ -412,7 +412,7 @@ class EventStreamsSpec extends SparkSpec {
       .transform(Tables.adaptEventsTs)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[EventStreams.Event]
-    val out = Files.createTempDirectory("evt-store").toFile.getAbsolutePath
+    val out = tempDir("evt-store").toFile.getAbsolutePath
     EventStreams.runSessionStream(spark, src,
       s"$out/store", s"$out/ckpt").awaitTermination()
 

@@ -46,7 +46,7 @@ class EwmaSpec extends SparkSpec {
   test("streaming view == batch ewma on the finalized hour set") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("ewma-stream")
+    val tmp = tempDir("ewma-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

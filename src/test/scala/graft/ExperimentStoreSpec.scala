@@ -99,7 +99,7 @@ class ExperimentStoreSpec extends SparkSpec {
 
   test("every live readout == its batch test; replay idempotent; " +
     "compaction inert") {
-    val tmp = java.nio.file.Files.createTempDirectory("expstore")
+    val tmp = tempDir("expstore")
       .toFile.getAbsolutePath
     // split by EVENT id so one user's events land in several batches:
     // the served statistics are right only if the per-user deltas
@@ -133,7 +133,7 @@ class ExperimentStoreSpec extends SparkSpec {
 
   test("round-16 retention contract: retiring inactive users preserves " +
     "every view over the retained window; retained history stays whole") {
-    val tmp = java.nio.file.Files.createTempDirectory("expstore3")
+    val tmp = tempDir("expstore3")
       .toFile.getAbsolutePath
     // TIME-sliced batches (the feed shape the contract assumes:
     // time-ordered within the watermark) — a user active across slices
@@ -189,7 +189,7 @@ class ExperimentStoreSpec extends SparkSpec {
 
   test("round-17 hardening: retirement folds a single-base store, " +
     "rejects uncommitted tail dirs, and quarantines late events") {
-    val tmp = java.nio.file.Files.createTempDirectory("expstore4")
+    val tmp = tempDir("expstore4")
       .toFile.getAbsolutePath
     val st = s"$tmp/store"
     val half0 = events.filter(col("event_id") % 2 === 0).localCheckpoint()
@@ -259,7 +259,7 @@ class ExperimentStoreSpec extends SparkSpec {
   }
 
   test("the sequential walk updates as later batches flip conversions") {
-    val tmp = java.nio.file.Files.createTempDirectory("expstore2")
+    val tmp = tempDir("expstore2")
       .toFile.getAbsolutePath
     // batch 0: only the FIRST half of each user's purchases (by event
     // id parity) — many users sit below convMin; batch 1 completes

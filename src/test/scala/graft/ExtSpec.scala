@@ -267,7 +267,7 @@ class ExtSpec extends SparkSpec {
 
   test("training shards: packs never straddle files, chunks in stream order") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("shards")
+    val tmp = tempDir("shards")
       .toFile.getAbsolutePath
     TextOps.writeTrainingShards(TextOps.qPack(spark, dir), tmp, shards = 4)
     val files = new java.io.File(tmp).listFiles()
@@ -518,7 +518,7 @@ class ExtSpec extends SparkSpec {
     val built = graft.ext.Similarity.buildIvfIndex(spark, dir)
     val qv = built.cells.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).toArray
-    val tmp = java.nio.file.Files.createTempDirectory("ivf-idx")
+    val tmp = tempDir("ivf-idx")
       .toFile.getAbsolutePath
     graft.ext.Similarity.saveIvfIndex(built, tmp)
     val loaded = graft.ext.Similarity.loadIvfIndex(spark, tmp)

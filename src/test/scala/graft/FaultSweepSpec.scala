@@ -1,0 +1,175 @@
+package graft
+
+import java.io.{File, IOException}
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.config.PipelineConf
+import graft.merge.Merge
+import graft.schema.SchemaLoader.FieldSpec
+import graft.streaming.StreamPipeline
+import graft.streaming.StreamPipeline.StreamDirs
+
+/** Fault sweep of one upload: every mutating filesystem call of the
+  * pipeline fails once, in turn, and a fault-free restart must converge. All dirs but the checkpoint live
+  * on [[FaultFs]], so the k-th call is the k-th step of the program
+  * (the window between a batch's work and its offset commit is
+  * StreamingSpec's replay test). For every k, one good and one
+  * poisoned upload run into each base layout (the partitioned one
+  * compacts after the good batch); after the restart:
+  *  - the base equals a [[Merge.merge]] fold of the uploads that were
+  *    not dead-lettered;
+  *  - no upload is both merged and dead-lettered: each upload is in
+  *    errorDir or still in uploadDir, never both;
+  *  - each merged upload has exactly one notify message. */
+class FaultSweepSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val fields = Seq(
+    FieldSpec("PolicyNumber", "STRING", "NULLABLE"),
+    FieldSpec("PolicyExpiryDate", "DATE", "NULLABLE"),
+    FieldSpec("Amount", "FLOAT", "NULLABLE"))
+
+  private val conf = PipelineConf(
+    name = "RenewalList.CSV", jsonfile = "", dateCol = "PolicyExpiryDate",
+    convertFuncs = Map.empty, tableNew = "", tableOld = "", uri1 = None, uri2 = None)
+
+  private def rows(rs: (String, String, Double)*): DataFrame =
+    rs.toDF("PolicyNumber", "PolicyExpiryDate", "Amount")
+      .withColumn("PolicyExpiryDate", to_date($"PolicyExpiryDate"))
+
+  /** twelve January rows (fragmented in the partitioned base, so the
+    * merged batch's compaction rewrites January), three later ones */
+  private val seed = rows((1 to 12).map(d => (f"J$d%02d", f"2020-01-$d%02d", d * 1.0)) ++
+    Seq(("P2", "2020-02-01", 2.0), ("P3", "2020-02-20", 3.0), ("P4", "2020-03-05", 4.0)): _*)
+  /** the good upload: cuts February at the 15th, replaces P3 and P4 */
+  private val good = Seq(("P3", "2020-02-20", 30.0), ("P5", "2020-03-01", 5.0),
+    ("P6", "2020-02-15", 6.0))
+  private val uploads = Seq("u0-good.csv", "u1-poisoned.csv")
+
+  private def table(df: DataFrame): Seq[(String, String, Double)] =
+    df.select("PolicyNumber", "PolicyExpiryDate", "Amount").collect()
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2))).toSeq.sorted
+
+  spark.sparkContext.hadoopConfiguration
+    .set("fs.faultfs.impl", classOf[FaultFs].getName)
+
+  /** One scenario: seed the base, upload, run with call `k` failing
+    * (0: none), restart fault-free. Returns the faulted run's count of
+    * mutating calls. */
+  private def scenario(partitioned: Boolean, k: Int): Int = {
+    val root = tempDir("fault-sweep").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"faultfs:$root/upload", s"faultfs:$root/base",
+      s"faultfs:$root/error", s"faultfs:$root/notify", s"$root/ckpt",
+      partitionedBase = partitioned, compactEveryBatches = 1)
+    if (partitioned) Merge.writePartitioned(seed.repartition(12), s"$root/base", conf.dateCol)
+    else seed.write.parquet(s"$root/base")
+    new File(s"$root/upload").mkdirs()
+    Files.write(new File(s"$root/upload", uploads(0)).toPath,
+      ("PolicyNumber,PolicyExpiryDate,Amount\n" +
+        good.map { case (p, d, a) => s"$p,$d,$a" }.mkString("\n")).getBytes("UTF-8"))
+    Files.write(new File(s"$root/upload", uploads(1)).toPath,
+      "a,b,c\nx,y,z\n".getBytes("UTF-8"))
+    new File(s"$root/upload", uploads(1)).setLastModified(
+      new File(s"$root/upload", uploads(0)).lastModified() + 1000)
+
+    FaultFs.arm(k)
+    val calls = try {
+      try StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+      catch { case _: Exception if k > 0 => () } // the fault stops the query
+      FaultFs.calls
+    } finally FaultFs.arm(0)
+    assert(StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000))
+
+    val dead = Option(new File(s"$root/error").list()).map(_.toSet).getOrElse(Set.empty)
+    val left = new File(s"$root/upload").list().toSet
+    uploads.foreach(u => assert(dead(u) != left(u), s"k=$k: $u in error=${dead(u)}, upload=${left(u)}"))
+    assert(dead("u1-poisoned.csv"), s"k=$k")
+    val merged = uploads.filterNot(dead)
+    val msgs = Option(new File(s"$root/notify").list()).getOrElse(Array.empty[String])
+      .filter(_.endsWith(".msg"))
+    assert(msgs.length === merged.size, s"k=$k: messages ${msgs.toSeq}")
+    val want = merged.map(u => if (u == uploads(0)) rows(good: _*) else rows())
+      .foldLeft(seed)(Merge.merge(_, _, conf.dateCol))
+    assert(table(spark.read.parquet(s"$root/base")) === table(want),
+      s"k=$k, partitioned=$partitioned")
+    if (partitioned && k == 0) assert(new File(s"$root/base/pmonth=2020-01").list()
+      .count(_.endsWith(".parquet")) <= 8, "the good batch compacted January")
+    calls
+  }
+
+  Seq(false, true).foreach { partitioned =>
+    val layout = if (partitioned) "partitioned" else "whole-table"
+    test(s"fault sweep, $layout base: a failed call at any step converges on restart") {
+      val n = scenario(partitioned, 0)
+      info(s"N = $n mutating calls in one fault-free run")
+      assert(n > 0)
+      (1 to n).foreach(k => scenario(partitioned, k))
+    }
+  }
+}
+
+/** The local filesystem under its own `faultfs:` scheme, for fault
+  * injection. It keeps HDFS's rename contract (a missing source is
+  * reported as `false`, not thrown), counts its mutating calls (create,
+  * rename, delete, mkdirs) and throws an `IOException` on the one that
+  * [[FaultFs.arm]] names. */
+class FaultFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    FaultFs.tick(s"create $f")
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    FaultFs.tick(s"create $f")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def createNonRecursive(f: Path, permission: FsPermission,
+                                  flags: java.util.EnumSet[CreateFlag], bufferSize: Int,
+                                  replication: Short, blockSize: Long,
+                                  progress: Progressable): FSDataOutputStream = {
+    FaultFs.tick(s"create $f")
+    super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    FaultFs.tick(s"rename $src")
+    exists(src) && super.rename(src, dst)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    FaultFs.tick(s"delete $f")
+    super.delete(f, recursive)
+  }
+  override def mkdirs(f: Path): Boolean = {
+    FaultFs.tick(s"mkdirs $f")
+    super.mkdirs(f)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    FaultFs.tick(s"mkdirs $f")
+    super.mkdirs(f, permission)
+  }
+}
+
+object FaultFs {
+  private val count = new AtomicInteger
+  @volatile private var failAt = 0
+
+  /** Reset the count; the `k`-th mutating call from now on throws
+    * (0: none does). */
+  def arm(k: Int): Unit = { failAt = 0; count.set(0); failAt = k }
+
+  /** Mutating calls since the last [[arm]]. */
+  def calls: Int = count.get
+
+  private[graft] def tick(what: String): Unit =
+    if (count.incrementAndGet() == failAt)
+      throw new IOException(s"injected fault at mutating call $failAt: $what")
+}

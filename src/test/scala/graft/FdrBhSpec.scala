@@ -55,7 +55,7 @@ class FdrBhSpec extends SparkSpec {
   test("FdrStore: live battery == batch under slicing, replay, compaction") {
     import org.apache.spark.sql.functions._
     import graft.streaming.FdrStore
-    val tmp = java.nio.file.Files.createTempDirectory("fdrstore")
+    val tmp = tempDir("fdrstore")
       .toFile.getAbsolutePath
     val events = Tables(spark, dir, "events").localCheckpoint()
     val parts = (0 until 3).map(i =>

@@ -58,7 +58,7 @@ class ForecastSpec extends SparkSpec {
 
   test("streaming views == batch on the finalized hour set") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("brown-stream")
+    val tmp = tempDir("brown-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

@@ -10,7 +10,7 @@ import graft.operators.Forget
 class ForgetSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private lazy val out = {
-    val d = java.nio.file.Files.createTempDirectory("forget").toString
+    val d = tempDir("forget").toString
     Forget.purgeTo(spark, dir, d)
     d
   }

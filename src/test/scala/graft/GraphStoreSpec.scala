@@ -21,7 +21,7 @@ class GraphStoreSpec extends SparkSpec {
 
   test("live graph readouts == batch family under slicing, replay, " +
     "compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("graphstore")
+    val tmp = tempDir("graphstore")
       .toFile.getAbsolutePath
     val fact = li.localCheckpoint()
     // three ORDER-disjoint batches (all lines of an order together —
@@ -97,7 +97,7 @@ class GraphStoreSpec extends SparkSpec {
 
   test("runFactStream end to end: file-triggered batches + compaction " +
     "cadence converge to the batch graph") {
-    val tmp = java.nio.file.Files.createTempDirectory("graphstream")
+    val tmp = tempDir("graphstream")
       .toFile.getAbsolutePath
     val fact = li.localCheckpoint()
     // order-disjoint files (the store's contract), one per upload
@@ -120,7 +120,7 @@ class GraphStoreSpec extends SparkSpec {
   test("round-17 disjointness guard: a split order's late fragment is " +
     "quarantined and counted; the clean part of the same batch absorbs") {
     import org.apache.spark.sql.expressions.Window
-    val tmp = java.nio.file.Files.createTempDirectory("graphstore3")
+    val tmp = tempDir("graphstore3")
       .toFile.getAbsolutePath
     val fact = li.localCheckpoint()
     // two multi-line orders: one gets SPLIT (its first line held back
@@ -169,7 +169,7 @@ class GraphStoreSpec extends SparkSpec {
 
   test("store state is the reduced co-occurrence table, not fact " +
     "history: one row per ordered pair after compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("graphstore2")
+    val tmp = tempDir("graphstore2")
       .toFile.getAbsolutePath
     val fact = li.localCheckpoint()
     (0 until 3).foreach { i =>

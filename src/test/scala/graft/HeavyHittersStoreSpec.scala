@@ -14,7 +14,7 @@ class HeavyHittersStoreSpec extends SparkSpec {
 
   test("counter store: streamed counters == batch sketch; served heavy " +
     "== batch operator; replay is a value no-op") {
-    val tmp = Files.createTempDirectory("hh-store").toFile.getAbsolutePath
+    val tmp = tempDir("hh-store").toFile.getAbsolutePath
     val store = s"$tmp/store"
     val docs = Tables(spark, dir, "documents")
     (0 until 3).foreach(i => docs.filter(col("doc_id") % 3 === i)

@@ -39,7 +39,7 @@ class HistogramQuantilesSpec extends SparkSpec {
   }
 
   test("streaming store == batch estimator; replay idempotent") {
-    val tmp = java.nio.file.Files.createTempDirectory("histstore")
+    val tmp = tempDir("histstore")
       .toFile.getAbsolutePath
     val o = Tables(spark, "/root/testdata/sf0.001", "orders")
       .select(col("o_totalprice"))

@@ -13,7 +13,7 @@ class KmvStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("kmv store: streamed rolling view == batch sketch; redelivery no-op") {
-    val tmp = Files.createTempDirectory("kmv-store").toFile.getAbsolutePath
+    val tmp = tempDir("kmv-store").toFile.getAbsolutePath
     val store = s"$tmp/store"
     val ev = Tables(spark, dir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")

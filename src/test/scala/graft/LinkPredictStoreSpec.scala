@@ -19,7 +19,7 @@ class LinkPredictStoreSpec extends SparkSpec {
 
   test("served candidates == batch linkPredict under slicing, replay, " +
     "compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("lpstore")
+    val tmp = tempDir("lpstore")
       .toFile.getAbsolutePath
     val edges = und.localCheckpoint()
     // three edge-disjoint batches splitting most centers' neighbor
@@ -53,7 +53,7 @@ class LinkPredictStoreSpec extends SparkSpec {
 
   test("exact for small degrees: a d <= S center keeps every neighbor") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("lpstore2")
+    val tmp = tempDir("lpstore2")
       .toFile.getAbsolutePath
     // star around node 1 with 5 leaves, delivered one edge per batch
     val edges = (2L to 6L).map(v => (1L, v))

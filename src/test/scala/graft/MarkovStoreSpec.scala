@@ -22,7 +22,7 @@ class MarkovStoreSpec extends SparkSpec {
 
   test("live markov view == batch at every prefix; stitch pairs are " +
     "load-bearing; replay idempotent; compaction inert") {
-    val tmp = java.nio.file.Files.createTempDirectory("markovstore")
+    val tmp = tempDir("markovstore")
       .toFile.getAbsolutePath
     // time-contiguous slices: every user active in more than one slice
     // contributes at least one cross-batch transition
@@ -70,7 +70,7 @@ class MarkovStoreSpec extends SparkSpec {
 
   test("segment fold: stitch counts migrate, segments collapse, every " +
     "view unchanged; idempotent; future batches keep stitching") {
-    val tmp = java.nio.file.Files.createTempDirectory("markovfold")
+    val tmp = tempDir("markovfold")
       .toFile.getAbsolutePath
     val store = s"$tmp/store"
     val cuts = Seq("2024-01-11", "2024-01-21")
@@ -127,7 +127,7 @@ class MarkovStoreSpec extends SparkSpec {
 
   test("segment fold crash recovery: a temp without a manifest is " +
     "discarded; one with a manifest is installed — views converge") {
-    val tmp = java.nio.file.Files.createTempDirectory("markovcrash")
+    val tmp = tempDir("markovcrash")
       .toFile.getAbsolutePath
     val store = s"$tmp/store"
     val cut = "2024-01-16"
@@ -154,7 +154,7 @@ class MarkovStoreSpec extends SparkSpec {
   }
 
   test("file-stream wiring absorbs time-sliced uploads") {
-    val tmp = java.nio.file.Files.createTempDirectory("markovstore2")
+    val tmp = tempDir("markovstore2")
       .toFile.getAbsolutePath
     val cut = "2024-01-16"
     val parts = Seq(

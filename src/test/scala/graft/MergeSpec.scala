@@ -43,7 +43,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("S7: updateTable rewrites its own input atomically, keeps .bak") {
-    val dir = Files.createTempDirectory("merge-spec").toFile.getAbsolutePath
+    val dir = tempDir("merge-spec").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     df(Seq("2020-01-01" -> 1, "2020-02-01" -> 2)).write.parquet(basePath)
     val staging = df(Seq("2020-02-01" -> 22))
@@ -61,7 +61,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("partitioned merge: same semantics as merge(), old partitions untouched") {
-    val dir = Files.createTempDirectory("merge-part").toFile.getAbsolutePath
+    val dir = tempDir("merge-part").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     val base = df(Seq(
       "2020-01-01" -> 1, "2020-01-20" -> 2,
@@ -94,7 +94,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("partitioned merge deletes overlap partitions staging does not cover") {
-    val dir = Files.createTempDirectory("merge-part-stale").toFile.getAbsolutePath
+    val dir = tempDir("merge-part-stale").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     // March is entirely on/after the cutoff and staging delivers no March
     // rows: dynamic overwrite alone would leave pmonth=2020-03 untouched
@@ -115,7 +115,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("compaction: fragmented partitions rewritten, healthy ones untouched, rows identical") {
-    val dir = Files.createTempDirectory("merge-compact").toFile.getAbsolutePath
+    val dir = tempDir("merge-compact").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     // January fragmented into many files; February written compact
     val jan = (1 to 24).map(d => (f"2020-01-$d%02d", d))
@@ -163,7 +163,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("compaction recovery heals every crash point, loses no data") {
-    val dir = Files.createTempDirectory("merge-recover").toFile.getAbsolutePath
+    val dir = tempDir("merge-recover").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     val rows = (1 to 10).map(d => (f"2020-01-$d%02d", d))
     Merge.writePartitioned(df(rows), basePath, "d")
@@ -200,7 +200,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("updateTable heals a rewrite that died between its renames") {
-    val dir = Files.createTempDirectory("merge-heal").toFile.getAbsolutePath
+    val dir = tempDir("merge-heal").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     df(Seq("2020-01-01" -> 1, "2020-02-01" -> 2)).write.parquet(basePath)
     // crash BETWEEN overwriteAtomic's renames: the base displaced to
@@ -216,7 +216,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("updateTable on a missing base creates it") {
-    val dir = Files.createTempDirectory("merge-first").toFile.getAbsolutePath
+    val dir = tempDir("merge-first").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     Merge.updateTable(spark, basePath, df(Seq("2020-02-01" -> 2, "2020-01-01" -> 1)), "d")
     val out = spark.read.parquet(basePath)
@@ -225,7 +225,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("updateTable merges into a base that is one parquet file") {
-    val dir = Files.createTempDirectory("merge-file").toFile.getAbsolutePath
+    val dir = tempDir("merge-file").toFile.getAbsolutePath
     df(Seq("2020-01-01" -> 1, "2020-02-01" -> 2)).coalesce(1).write.parquet(s"$dir/w")
     val part = new java.io.File(s"$dir/w").listFiles().find(_.getName.endsWith(".parquet")).get
     val basePath = s"$dir/base.parquet"
@@ -237,7 +237,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("partitioned merge heals a compaction that died between its renames") {
-    val dir = Files.createTempDirectory("merge-heal-compact").toFile.getAbsolutePath
+    val dir = tempDir("merge-heal-compact").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     val rows = (1 to 10).map(d => (f"2020-01-$d%02d", d)) :+ ("2020-02-01" -> 99)
     Merge.writePartitioned(df(rows), basePath, "d")
@@ -255,7 +255,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("a base whose columns differ from the batch's fails the merge, both layouts") {
-    val dir = Files.createTempDirectory("merge-columns").toFile.getAbsolutePath
+    val dir = tempDir("merge-columns").toFile.getAbsolutePath
     val wide = df(Seq("2020-01-01" -> 1)).withColumn("extra", $"v" * 2)
     wide.write.parquet(s"$dir/whole")
     Merge.writePartitioned(wide, s"$dir/part", "d")
@@ -272,7 +272,7 @@ class MergeSpec extends SparkSpec {
   test("compacting one partition leaves other partitions' files untouched") {
     // the reader contract: compaction of A never touches B, so readers
     // of other partitions are safe while a partition is being swapped
-    val dir = Files.createTempDirectory("merge-reader").toFile.getAbsolutePath
+    val dir = tempDir("merge-reader").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     val fn = org.apache.spark.sql.functions
     df((1 to 24).map(d => (f"2020-01-$d%02d", d))).repartition(12)
@@ -304,7 +304,7 @@ class MergeSpec extends SparkSpec {
       Gen.chooseNum(0, 8).flatMap(n => Gen.listOfN(n, row)))
     val initial = Gen.nonEmptyListOf(row).map(_.take(12))
     forAllSamples(Gen.zip(initial, batches), 10) { case (init, bs) =>
-      val dir = Files.createTempDirectory("merge-prop").toFile.getAbsolutePath
+      val dir = tempDir("merge-prop").toFile.getAbsolutePath
       val basePath = s"$dir/base"
       Merge.writePartitioned(df(init), basePath, "d")
       var expected = df(init)
@@ -332,7 +332,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("partitioned merge from persisted staging is retryable and idempotent") {
-    val dir = Files.createTempDirectory("merge-part-retry").toFile.getAbsolutePath
+    val dir = tempDir("merge-part-retry").toFile.getAbsolutePath
     val basePath = s"$dir/base"
     val stagingPath = s"$dir/base_update"
     Merge.writePartitioned(
@@ -342,16 +342,16 @@ class MergeSpec extends SparkSpec {
     def baseRows() = spark.read.parquet(basePath).drop("pmonth")
       .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toSeq.sorted
 
-    Merge.updateFromStagingPartitioned(spark, basePath, stagingPath, "d")
+    Merge.updateTablePartitioned(spark, basePath, spark.read.parquet(stagingPath), "d")
     assert(baseRows() === Seq("2020-01-01" -> 1, "2020-02-01" -> 22))
     // double delivery — idempotent
-    Merge.updateFromStagingPartitioned(spark, basePath, stagingPath, "d")
+    Merge.updateTablePartitioned(spark, basePath, spark.read.parquet(stagingPath), "d")
     assert(baseRows() === Seq("2020-01-01" -> 1, "2020-02-01" -> 22))
   }
 
   test("streamed merge equals replaying updateFromStagingPartitioned from staging") {
     import org.apache.spark.sql.functions.{col, to_date}
-    val dir = Files.createTempDirectory("merge-streamed").toFile.getAbsolutePath
+    val dir = tempDir("merge-streamed").toFile.getAbsolutePath
     val dirs = graft.streaming.StreamPipeline.StreamDirs(s"$dir/upload",
       s"$dir/streamed", s"$dir/error", s"$dir/notify", s"$dir/ckpt",
       partitionedBase = true)
@@ -388,8 +388,8 @@ class MergeSpec extends SparkSpec {
         .awaitTermination(120000)
       assert(new java.io.File(dirs.notifyDir).list()
         .count(_.endsWith(".msg")) === i + 1) // merged, not merge-failed
-      Merge.updateFromStagingPartitioned(spark, replayed,
-        dirs.stagingOrDefault, "d")
+      Merge.updateTablePartitioned(spark, replayed,
+        spark.read.parquet(s"${dirs.basePath}_update"), "d")
       assert(table(dirs.basePath) === table(replayed))
       assert(months(dirs.basePath) === months(replayed))
     }

@@ -34,7 +34,7 @@ class MixDriftSpec extends SparkSpec {
     import graft.streaming.EventStreams
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("mix-drift-stream")
+    val tmp = tempDir("mix-drift-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

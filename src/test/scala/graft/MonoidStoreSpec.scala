@@ -22,7 +22,7 @@ class MonoidStoreSpec extends SparkSpec {
 
   test("stream with compaction cadence: view identical, dirs bounded, " +
     "restart resumes over the compacted store") {
-    val tmp = java.nio.file.Files.createTempDirectory("monoidstore")
+    val tmp = tempDir("monoidstore")
       .toFile.getAbsolutePath
     // five uploads -> five micro-batches (1 file/trigger)
     val ups = (0 until 5).map { b =>
@@ -57,7 +57,7 @@ class MonoidStoreSpec extends SparkSpec {
 
   test("min/max + sketch folds compact with their own monoid " +
     "(profile store unchanged by compaction)") {
-    val tmp = java.nio.file.Files.createTempDirectory("monoidprofile")
+    val tmp = tempDir("monoidprofile")
       .toFile.getAbsolutePath
     val mk = (lo: Long, hi: Long) => (lo to hi).map(i =>
       (i, i % 50, if (i % 11 == 0) null else s"S$i", i * 10.0,
@@ -87,7 +87,7 @@ class MonoidStoreSpec extends SparkSpec {
   }
 
   test("recover() on stream start converges a mid-delete crash") {
-    val tmp = java.nio.file.Files.createTempDirectory("monoidrecover")
+    val tmp = tempDir("monoidrecover")
       .toFile.getAbsolutePath
     val store = MonoidStore.sums(s"$tmp/store", "c")
     store.append(Seq((1L, 2L), (2L, 3L)).toDF("k", "c"), 0L)

@@ -13,7 +13,7 @@ class PcaStoreSpec extends SparkSpec {
     (m.n, m.mean.toSeq, m.vMicro.toSeq, m.vv2, m.lambda, m.explained)
 
   test("streamed model == batch fit, bit-equal; replay + compaction invariant") {
-    val tmp = java.nio.file.Files.createTempDirectory("pcastore")
+    val tmp = tempDir("pcastore")
       .toFile.getAbsolutePath
     val emb = Tables(spark, dir, "embeddings")
     val Array(a, b) = emb.randomSplit(Array(0.5, 0.5), seed = 7)

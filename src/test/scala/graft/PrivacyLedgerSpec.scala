@@ -9,7 +9,7 @@ class PrivacyLedgerSpec extends SparkSpec {
     graft.operators.DpRelease.epsSumMicro // 500000 per release
 
   test("releases spend the budget; the over-budget release is refused") {
-    val tmp = java.nio.file.Files.createTempDirectory("dpledger")
+    val tmp = tempDir("dpledger")
       .toFile.getAbsolutePath + "/store"
     val budget = 2L * cost + cost / 2 // room for exactly two releases
     val r1 = PrivacyLedger.release(spark, dir, tmp, "customer", 0L, budget)
@@ -25,7 +25,7 @@ class PrivacyLedgerSpec extends SparkSpec {
   }
 
   test("replaying a release id re-writes its own spend, not a new one") {
-    val tmp = java.nio.file.Files.createTempDirectory("dpledger2")
+    val tmp = tempDir("dpledger2")
       .toFile.getAbsolutePath + "/store"
     val budget = 10L * cost
     assert(PrivacyLedger.release(spark, dir, tmp, "customer", 0L, budget)
@@ -38,7 +38,7 @@ class PrivacyLedgerSpec extends SparkSpec {
   }
 
   test("budgets are per scope; an empty ledger reads zero") {
-    val tmp = java.nio.file.Files.createTempDirectory("dpledger3")
+    val tmp = tempDir("dpledger3")
       .toFile.getAbsolutePath + "/store"
     assert(PrivacyLedger.spent(spark, tmp, "customer") === 0L)
     assert(PrivacyLedger.release(spark, dir, tmp, "scopeA", 0L, cost)
@@ -53,7 +53,7 @@ class PrivacyLedgerSpec extends SparkSpec {
   }
 
   test("refusal lands exactly at the budget boundary") {
-    val tmp = java.nio.file.Files.createTempDirectory("dpledger4")
+    val tmp = tempDir("dpledger4")
       .toFile.getAbsolutePath + "/store"
     // budget = exactly 4 releases: the 4th spends TO the boundary and
     // is granted; the 5th would cross it and is refused
@@ -65,7 +65,7 @@ class PrivacyLedgerSpec extends SparkSpec {
     assert(PrivacyLedger.spent(spark, tmp, "s") === budget)
     assert(PrivacyLedger.release(spark, dir, tmp, "s", 4L, budget).isEmpty)
     // one micro-ε less than 4 releases: the 4th is the first refusal
-    val tmp2 = java.nio.file.Files.createTempDirectory("dpledger5")
+    val tmp2 = tempDir("dpledger5")
       .toFile.getAbsolutePath + "/store"
     (0L to 2L).foreach { i =>
       assert(PrivacyLedger
@@ -77,7 +77,7 @@ class PrivacyLedgerSpec extends SparkSpec {
 
   test("audit rows from the store loop equal the declarative composition") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("dpledger6")
+    val tmp = tempDir("dpledger6")
       .toFile.getAbsolutePath + "/store"
     val budget = 2L * cost // 2 grants then refusals, per scope
     val plan = Seq((0L, "a"), (1L, "a"), (2L, "b"), (3L, "a"), (4L, "b"))
@@ -102,7 +102,7 @@ class PrivacyLedgerSpec extends SparkSpec {
 
   test("the ledger store refuses compaction (per-release dirs are the " +
     "idempotence mechanism)") {
-    val tmp = java.nio.file.Files.createTempDirectory("dpledger7")
+    val tmp = tempDir("dpledger7")
       .toFile.getAbsolutePath + "/store"
     assert(PrivacyLedger.release(spark, dir, tmp, "s", 0L, 10L * cost)
       .isDefined)

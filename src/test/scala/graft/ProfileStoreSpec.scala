@@ -14,7 +14,7 @@ class ProfileStoreSpec extends SparkSpec {
       Option(r.get(4)), Option(r.get(5)), Option(r.get(6)), Option(r.get(7)))
 
   test("streamed store == batch profile on the union corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("profile-store")
+    val tmp = tempDir("profile-store")
       .toFile.getAbsolutePath
     val orders = Tables(spark, "/root/testdata/sf0.001", "orders")
     // three uneven slices arriving as separate files

@@ -34,7 +34,7 @@ class SeasonalitySpec extends SparkSpec {
   test("streaming view == batch seasonality on the finalized hour set") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("season-stream")
+    val tmp = tempDir("season-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

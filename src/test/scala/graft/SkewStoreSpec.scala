@@ -11,7 +11,7 @@ class SkewStoreSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed profile == batch profile; replay idempotent; salts served") {
-    val tmp = java.nio.file.Files.createTempDirectory("skewstore")
+    val tmp = tempDir("skewstore")
       .toFile.getAbsolutePath
     // two uploads with a hot key concentrated in the second
     val up0 = (1L to 3000L).map(i => (i % 100, i)).toDF("fk", "v")

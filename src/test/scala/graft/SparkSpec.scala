@@ -11,6 +11,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def fixture(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
 
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp dir, deleted with its contents after the spec's last
+    * test. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
+
   /** Minimal property-check harness over a scalacheck Gen (the offline
     * cache has scalacheck but not the scalatestplus bridge): evaluate
     * `f` over `n` deterministic samples. */

@@ -12,7 +12,7 @@ class SqGridStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("streamed grid == batch fit; compacted-batch replay is safe") {
-    val tmp = java.nio.file.Files.createTempDirectory("sqgrid")
+    val tmp = tempDir("sqgrid")
       .toFile.getAbsolutePath
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val parts = (0 until 3).map(i =>
@@ -43,7 +43,7 @@ class SqGridStoreSpec extends SparkSpec {
   }
 
   test("served scores through the live grid match the batch operator") {
-    val tmp = java.nio.file.Files.createTempDirectory("sqgrid2")
+    val tmp = tempDir("sqgrid2")
       .toFile.getAbsolutePath
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     SqGridStore.appendGridBatch(spark, emb, s"$tmp/store", 0L)

@@ -14,7 +14,7 @@ class StoreCompactionSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration)
 
   test("histogram store: view identical after compaction; newer deltas kept") {
-    val tmp = java.nio.file.Files.createTempDirectory("compact-hist")
+    val tmp = tempDir("compact-hist")
       .toFile.getAbsolutePath
     val store = s"$tmp/store"
     // five batches; compact the first three (committed), keep 3..4
@@ -42,7 +42,7 @@ class StoreCompactionSpec extends SparkSpec {
   }
 
   test("skew store: profile and salting decision survive compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("compact-skew")
+    val tmp = tempDir("compact-skew")
       .toFile.getAbsolutePath
     val store = s"$tmp/store"
     (0 until 4).foreach { i =>
@@ -61,7 +61,7 @@ class StoreCompactionSpec extends SparkSpec {
   }
 
   test("crash recovery: interrupted compaction converges without loss") {
-    val tmp = java.nio.file.Files.createTempDirectory("compact-crash")
+    val tmp = tempDir("compact-crash")
       .toFile.getAbsolutePath
     val store = s"$tmp/store"
     (0 until 3).foreach { i =>

@@ -27,7 +27,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("PolicyExpiryDate", to_date($"PolicyExpiryDate"))
 
   test("e2e: good file merges (staging wins overlap), bad file dead-letters, notify emitted") {
-    val root = Files.createTempDirectory("stream-spec").toFile.getAbsolutePath
+    val root = tempDir("stream-spec").toFile.getAbsolutePath
     val dirs = StreamDirs(
       uploadDir = s"$root/upload", basePath = s"$root/base",
       errorDir = s"$root/error", notifyDir = s"$root/notify",
@@ -85,7 +85,7 @@ class StreamingSpec extends SparkSpec {
 
     // S5: staging table_new persisted past the batch and queryable —
     // holds exactly the last GOOD batch (the poisoned batch never stages)
-    val staging = spark.read.parquet(dirs.stagingOrDefault)
+    val staging = spark.read.parquet(s"${dirs.basePath}_update")
       .collect()
       .map(r => (r.getAs[String]("PolicyNumber"),
         r.getAs[java.sql.Date]("PolicyExpiryDate").toString,
@@ -94,14 +94,14 @@ class StreamingSpec extends SparkSpec {
 
     // S4: durable cleaned CSV artifact in the cleaned "bucket"
     val cleanedBack = spark.read.option("header", true)
-      .csv(s"${dirs.cleanedOrDefault}/RenewalList.CSV")
+      .csv(s"${dirs.basePath}_cleaned/RenewalList.CSV")
     assert(cleanedBack.count() === 2)
     assert(cleanedBack.columns.toSeq ===
       Seq("PolicyNumber", "PolicyExpiryDate", "Amount"))
   }
 
   test("S5: merge failure leaves staging committed; updateFromStaging retries") {
-    val root = Files.createTempDirectory("stream-spec3").toFile.getAbsolutePath
+    val root = tempDir("stream-spec3").toFile.getAbsolutePath
     val basePath = s"$root/base"
     val stagingPath = s"$root/base_update"
     baseDf(("P1", "2020-01-01", 1.0), ("P2", "2020-02-01", 2.0))
@@ -120,17 +120,17 @@ class StreamingSpec extends SparkSpec {
     assert(baseRows() === Set(("P1", 1.0), ("P2", 2.0)))
 
     // retry the merge alone, from the persisted artifact
-    graft.merge.Merge.updateFromStaging(spark, basePath, stagingPath, "PolicyExpiryDate")
+    graft.merge.Merge.updateTable(spark, basePath, spark.read.parquet(stagingPath), "PolicyExpiryDate")
     assert(baseRows() === Set(("P1", 1.0), ("P2", 22.0)))
 
     // retry again (double-delivery) — idempotent, staging still present
-    graft.merge.Merge.updateFromStaging(spark, basePath, stagingPath, "PolicyExpiryDate")
+    graft.merge.Merge.updateTable(spark, basePath, spark.read.parquet(stagingPath), "PolicyExpiryDate")
     assert(baseRows() === Set(("P1", 1.0), ("P2", 22.0)))
     assert(spark.read.parquet(stagingPath).count() === 1)
   }
 
   test("per-batch checkpoints are released after every upload") {
-    val root = Files.createTempDirectory("stream-release").toFile.getAbsolutePath
+    val root = tempDir("stream-release").toFile.getAbsolutePath
     val dirs = StreamDirs(
       uploadDir = s"$root/upload", basePath = s"$root/base",
       errorDir = s"$root/error", notifyDir = s"$root/notify",
@@ -150,19 +150,20 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("deadLetter fails loudly when the file cannot be moved") {
-    val root = Files.createTempDirectory("stream-dead").toFile.getAbsolutePath
+    val root = tempDir("stream-dead").toFile.getAbsolutePath
     spark.sparkContext.hadoopConfiguration
-      .set("fs.hdfsrename.impl", classOf[HdfsRenameFs].getName)
-    // a source that no longer exists: rename reports false, and a silent
-    // skip would strand a poisoned file behind a committed offset
+      .set("fs.faultfs.impl", classOf[FaultFs].getName)
+    // a source that no longer exists: rename reports false (HDFS's
+    // contract, kept by FaultFs), and a silent skip would strand a
+    // poisoned file behind a committed offset
     assertThrows[java.io.IOException] {
-      StreamPipeline.deadLetter(spark, Seq(s"hdfsrename:$root/upload/gone.csv"),
-        s"hdfsrename:$root/error")
+      StreamPipeline.deadLetter(spark, Seq(s"faultfs:$root/upload/gone.csv"),
+        s"faultfs:$root/error")
     }
   }
 
   test("deadLetter moves a file whose name the stream URL-encodes") {
-    val root = Files.createTempDirectory("stream-dead-enc").toFile
+    val root = tempDir("stream-dead-enc").toFile
     val bad = new java.io.File(root, "bad upload%.csv")
     Files.write(bad.toPath, "a,b\n".getBytes("UTF-8"))
     // the stream hands deadLetter _metadata.file_path: "bad%20upload%25.csv"
@@ -172,7 +173,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST6: notify stage is message-triggered and effectively-once") {
-    val root = Files.createTempDirectory("stream-notify").toFile.getAbsolutePath
+    val root = tempDir("stream-notify").toFile.getAbsolutePath
     val notifyDir = s"$root/notify"
     new java.io.File(notifyDir).mkdirs()
     // the message IS the trigger: no first stage runs in this test
@@ -195,7 +196,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("partitioned base: streamed merge + in-pipeline compaction") {
-    val root = Files.createTempDirectory("stream-part").toFile.getAbsolutePath
+    val root = tempDir("stream-part").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt",
       partitionedBase = true, compactEveryBatches = 1)
@@ -227,7 +228,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("multiLine: quoted embedded newlines survive the stream (allow_quoted_newlines)") {
-    val root = Files.createTempDirectory("stream-multiline").toFile.getAbsolutePath
+    val root = tempDir("stream-multiline").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt")
     new java.io.File(dirs.uploadDir).mkdirs()
@@ -244,7 +245,7 @@ class StreamingSpec extends SparkSpec {
   test("partitioned base: the first upload creates a missing base") {
     // both layouts: the partitioned base and the whole-table one
     Seq(true, false).foreach { partitioned =>
-      val root = Files.createTempDirectory("stream-first").toFile.getAbsolutePath
+      val root = tempDir("stream-first").toFile.getAbsolutePath
       val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
         s"$root/notify", s"$root/ckpt", partitionedBase = partitioned)
       new java.io.File(dirs.uploadDir).mkdirs()
@@ -266,7 +267,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST6: a corrupt message never reaches onMessage; notify leaves no temp file") {
-    val root = Files.createTempDirectory("stream-corrupt").toFile.getAbsolutePath
+    val root = tempDir("stream-corrupt").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt")
     new java.io.File(dirs.uploadDir).mkdirs()
@@ -287,7 +288,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST5: a batch whose one pass throws is still dead-lettered") {
-    val root = Files.createTempDirectory("stream-pass-fails").toFile.getAbsolutePath
+    val root = tempDir("stream-pass-fails").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt", partitionedBase = true)
     new java.io.File(dirs.uploadDir).mkdirs()
@@ -326,7 +327,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("one good upload into a partitioned base reads it in one pass: 5 Spark jobs") {
-    val root = Files.createTempDirectory("stream-jobs").toFile.getAbsolutePath
+    val root = tempDir("stream-jobs").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt", partitionedBase = true)
     new java.io.File(dirs.uploadDir).mkdirs()
@@ -349,7 +350,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("one good upload into an unpartitioned base: no cutoff or inference job, 6 Spark jobs") {
-    val root = Files.createTempDirectory("stream-jobs-whole").toFile.getAbsolutePath
+    val root = tempDir("stream-jobs-whole").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt")
     new java.io.File(dirs.uploadDir).mkdirs()
@@ -371,7 +372,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ST3: restart with same checkpoint reprocesses nothing") {
-    val root = Files.createTempDirectory("stream-spec2").toFile.getAbsolutePath
+    val root = tempDir("stream-spec2").toFile.getAbsolutePath
     val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
       s"$root/notify", s"$root/ckpt")
     new java.io.File(dirs.uploadDir).mkdirs()
@@ -388,13 +389,68 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(dirs.notifyDir).list()
       .count(_.endsWith(".msg")) === 1)
   }
-}
 
-/** The local filesystem under HDFS's rename contract: a missing source
-  * is reported as `false`, not thrown. */
-class HdfsRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("hdfsrename:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean =
-    exists(src) && super.rename(src, dst)
+  private def messages(dirs: StreamDirs): Seq[String] =
+    Option(new java.io.File(dirs.notifyDir).list()).map(_.toSeq).getOrElse(Nil)
+      .filter(_.endsWith(".msg")).sorted
+
+  private def stagedRows(dirs: StreamDirs) =
+    spark.read.parquet(s"${dirs.basePath}_update").collect()
+      .map(r => r.getAs[String]("PolicyNumber") -> r.getAs[Double]("Amount")).toSet
+
+  test("ST5: a replayed batch with no dated row never stages, merges or notifies") {
+    val root = tempDir("stream-replay-empty").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt")
+    new java.io.File(dirs.uploadDir).mkdirs()
+    baseDf(("P1", "2020-01-01", 1.0)).write.parquet(dirs.basePath)
+    val good = new java.io.File(dirs.uploadDir, "u0.csv")
+    Files.write(good.toPath,
+      "PolicyNumber,PolicyExpiryDate,Amount\nP2,2020-02-01,2.0\n".getBytes("UTF-8"))
+    val poisoned = new java.io.File(dirs.uploadDir, "u1.csv")
+    Files.write(poisoned.toPath, "a,b,c\nx,y,z\n".getBytes("UTF-8"))
+    poisoned.setLastModified(good.lastModified() + 1000) // batch 1
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    assert(messages(dirs) === Seq("batch-0.msg"))
+    // a crash after the dead-letter's move, before batch 1's offset
+    // commits: the restart replays batch 1, whose file is gone
+    Seq("1", ".1.crc").foreach(f => new java.io.File(s"${dirs.checkpointDir}/commits", f).delete())
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    assert(messages(dirs) === Seq("batch-0.msg"))
+    assert(stagedRows(dirs) === Set("P2" -> 2.0)) // still the good batch
+    assert(new java.io.File(dirs.errorDir).list().toSeq === Seq("u1.csv"))
+    assert(spark.read.parquet(dirs.basePath).count() === 2)
+  }
+
+  test("ST5: a failed merge fails its batch before the offset commits; the restart retries it") {
+    val root = tempDir("stream-merge-fails").toFile.getAbsolutePath
+    val dirs = StreamDirs(s"$root/upload", s"$root/base", s"$root/error",
+      s"$root/notify", s"$root/ckpt", partitionedBase = true)
+    new java.io.File(dirs.uploadDir).mkdirs()
+    val seed = baseDf(("P1", "2020-01-01", 1.0), ("P2", "2020-02-01", 2.0))
+    // the base's columns differ from the upload's: the merge throws
+    graft.merge.Merge.writePartitioned(seed.withColumn("extra", lit(1)),
+      dirs.basePath, conf.dateCol)
+    Files.write(new java.io.File(dirs.uploadDir, "u.csv").toPath,
+      "PolicyNumber,PolicyExpiryDate,Amount\nP2,2020-02-01,22.0\n".getBytes("UTF-8"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    }
+    assert(new java.io.File(dirs.uploadDir, "u.csv").exists())
+    assert(!new java.io.File(dirs.errorDir, "u.csv").exists())
+    assert(messages(dirs).isEmpty)
+    assert(stagedRows(dirs) === Set("P2" -> 22.0))
+
+    // the operator repairs the base; the restart replays the batch
+    def baseRows() = spark.read.parquet(dirs.basePath).collect()
+      .map(r => r.getAs[String]("PolicyNumber") -> r.getAs[Double]("Amount")).toSet
+    graft.merge.Merge.writePartitioned(seed, dirs.basePath, conf.dateCol)
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    assert(baseRows() === Set("P1" -> 1.0, "P2" -> 22.0))
+    assert(messages(dirs) === Seq("batch-0.msg"))
+    // the batch is committed now: a second restart changes nothing
+    StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
+    assert(baseRows() === Set("P1" -> 1.0, "P2" -> 22.0))
+    assert(messages(dirs) === Seq("batch-0.msg"))
+  }
 }

@@ -19,7 +19,7 @@ class SurvivalStoreSpec extends SparkSpec {
 
   test("all three live survival readouts == batch; replay idempotent; " +
     "compaction inert") {
-    val tmp = java.nio.file.Files.createTempDirectory("survstore")
+    val tmp = tempDir("survstore")
       .toFile.getAbsolutePath
     // split by EVENT id: one user's first/last/first-big events land
     // in different batches, so the lattice merge is load-bearing
@@ -59,7 +59,7 @@ class SurvivalStoreSpec extends SparkSpec {
   test("censoring extends and the event time moves earlier as batches " +
     "arrive") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("survstore2")
+    val tmp = tempDir("survstore2")
       .toFile.getAbsolutePath
     def ev(id: Long, u: Long, ts: String, tpe: String, v: Double) =
       (id, u, ts, tpe, v)

@@ -14,7 +14,7 @@ class TextStatsStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("all four views == batch at every prefix; replay; compaction") {
-    val tmp = java.nio.file.Files.createTempDirectory("textstats")
+    val tmp = tempDir("textstats")
       .toFile.getAbsolutePath
     val docs = Tables(spark, dir, "documents").localCheckpoint()
     val parts = (0 until 3).map(i =>

@@ -117,7 +117,7 @@ class TimeSeriesPairSpec extends SparkSpec {
   test("streaming xcorr/granger views == batch on fully-finalized data") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("tsp-stream")
+    val tmp = tempDir("tsp-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

@@ -51,7 +51,7 @@ class TrendSpec extends SparkSpec {
   test("streaming view == batch trend on the finalized hour set") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("trend-stream")
+    val tmp = tempDir("trend-stream")
       .toFile.getAbsolutePath
     val ev = Tables(spark, dir, "events")
     ev.coalesce(1).write.parquet(s"$tmp/src/part0")

@@ -13,7 +13,7 @@ class TypeStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("streamed models == batch training, bit-equal; replay + compaction invariant") {
-    val tmp = java.nio.file.Files.createTempDirectory("typestore")
+    val tmp = tempDir("typestore")
       .toFile.getAbsolutePath
     val docs = Tables(spark, dir, "documents")
     val Array(a, b) = docs.randomSplit(Array(0.5, 0.5), seed = 11)

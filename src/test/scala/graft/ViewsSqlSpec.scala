@@ -77,7 +77,7 @@ class ViewsSqlSpec extends SparkSpec {
 
   test("createAll after a write serves the merged rows, no SessionCache.clear") {
     val src = Path.of(dir)
-    val copy = Files.createTempDirectory("views-refresh").resolve("sf")
+    val copy = tempDir("views-refresh").resolve("sf")
     val walk = Files.walk(src)
     try walk.forEach(p => Files.copy(p, copy.resolve(src.relativize(p).toString)))
     finally walk.close()

@@ -57,7 +57,7 @@ class XlsxSpec extends SparkSpec {
         |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>
         |<Relationship Id="rId2" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet2.xml"/>
         |</Relationships>""".stripMargin
-    val dir = Files.createTempDirectory("xlsx-spec").toFile
+    val dir = tempDir("xlsx-spec").toFile
     val f = new java.io.File(dir, "ProductionRpt.xlsx")
     val zos = new ZipOutputStream(new java.io.FileOutputStream(f))
     def put(name: String, content: String): Unit = {
