@@ -7,7 +7,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import graft.util.Checkpoints
+import graft.util.{Checkpoints, Parallel}
 
 /** A1/A2/S7 — the reference's core state-update semantic
   * (`config.py:180-212`): load a staging batch, take MIN(date_col) as the
@@ -105,15 +105,22 @@ object Merge {
   /** S7 — overwrite-own-input table rewrite. BigQuery's
     * `CREATE OR REPLACE TABLE old AS (… FROM old …)` reads and replaces
     * the same table in one statement; Spark cannot overwrite a path it is
-    * reading, so: write to a sibling temp dir, then [[publish]]. The
-    * displaced old data survives at `<path>.bak` until the next rewrite —
-    * a cheap poor-man's version for rollback. */
-  def overwriteAtomic(df: DataFrame, path: String): Unit = {
+    * reading, so: write to the sibling `<path>.tmp` ([[stageOverwrite]]),
+    * then [[publish]] it. The displaced old data survives at
+    * `<path>.bak` until the next rewrite — a cheap poor-man's version
+    * for rollback. */
+  def overwriteAtomic(df: DataFrame, path: String): Unit =
+    stageOverwrite(df, path)()
+
+  /** The write half of [[overwriteAtomic]]: `df` written whole to
+    * `<path>.tmp` (a stale one deleted first); returns the [[publish]]
+    * that swaps it in. Until that runs, `path` is untouched. */
+  private def stageOverwrite(df: DataFrame, path: String): () => Unit = {
     val fs = fsOf(df.sparkSession, path)
     val tmp = new Path(path + ".tmp")
     fs.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
-    publish(fs, tmp, new Path(path), new Path(path + ".bak"))
+    () => publish(fs, tmp, new Path(path), new Path(path + ".bak"))
   }
 
   /** Heal an [[overwriteAtomic]] interrupted between its renames. Every
@@ -193,6 +200,18 @@ object Merge {
   /** THE cutoff merge, both layouts: publish (base rows below the
     * batch's cutoff) ∪ `batch`. `batch` is cached and `stats` is its
     * [[batchStats]]: nothing re-derives the cutoff; no dated row, no-op.
+    * [[stageMerge]] heals and writes the merged rows beside the base,
+    * then its publish step swaps them in. */
+  private[graft] def mergeBatch(spark: SparkSession, basePath: String,
+                                batch: DataFrame, dateCol: String,
+                                stats: BatchStats, partitioned: Boolean): Unit =
+    stageMerge(spark, basePath, batch, dateCol, stats, partitioned)()
+
+  /** [[mergeBatch]] up to its publish, which it returns: the base stays
+    * as it was until the returned step runs, so a caller can stage the
+    * merge beside other writes and publish only once those committed
+    * (never running it leaves a staged dir that the next merge deletes
+    * before it writes).
     *  1. Heal first — the whole table by [[healOverwrite]]'s rule, the
     *     partitioned base by [[recoverCompaction]]'s, from the one root
     *     listing that also yields the overlap months (unhealed, a month
@@ -202,26 +221,28 @@ object Merge {
     *  3. The base (partitioned: its cutoff month only) is read with its
     *     own footer schema — no inference job; differing columns fail
     *     the union loudly.
-    *  4. Whole table: [[overwriteAtomic]] of [[mergeAt]]. Partitioned:
-    *     the cutoff month's survivors and the batch are written to
-    *     `.merge-tmp` (read by the write, displaced only after it), and
-    *     each of the batch's months is swapped in by [[publish]], its
-    *     old generation at `.compact-bak-<m>` until the swap is done:
-    *     exactly the batch's months are replaced, older ones stay
-    *     byte-identical, and a failure at any step leaves a base that
-    *     step 1 heals and a re-run converges. Overlap months the batch
-    *     does not cover are deleted after the swaps (a crash leaves at
-    *     worst stale rows; re-running converges). */
-  private[graft] def mergeBatch(spark: SparkSession, basePath: String,
+    *  4. The staged write. Whole table: [[mergeAt]] to `<base>.tmp`
+    *     ([[stageOverwrite]]). Partitioned: the cutoff month's survivors
+    *     and the batch to `.merge-tmp`. Either is read by the write and
+    *     displaced only by the publish.
+    *  5. The publish (returned). Whole table: [[publish]] of
+    *     `<base>.tmp`. Partitioned: each of the batch's months is swapped
+    *     in by [[publish]], its old generation at `.compact-bak-<m>`
+    *     until the swap is done: exactly the batch's months are
+    *     replaced, older ones stay byte-identical, and a failure at any
+    *     step leaves a base that step 1 heals and a re-run converges.
+    *     Overlap months the batch does not cover are deleted after the
+    *     swaps (a crash leaves at worst stale rows; re-running
+    *     converges). */
+  private[graft] def stageMerge(spark: SparkSession, basePath: String,
                                 batch: DataFrame, dateCol: String,
-                                stats: BatchStats, partitioned: Boolean): Unit =
-    stats.cut.foreach { cut =>
+                                stats: BatchStats, partitioned: Boolean): () => Unit =
+    stats.cut.fold(() => ()) { cut =>
       val fs = fsOf(spark, basePath)
       val root = new Path(basePath)
       if (!partitioned) {
         healOverwrite(spark, basePath)
-        // the base is read by the write, and displaced only after it
-        overwriteAtomic(mergeAt(readBase(spark, fs, root)
+        stageOverwrite(mergeAt(readBase(spark, fs, root)
           .getOrElse(batch.limit(0)), batch, dateCol, cut), basePath)
       } else {
         val names = childNames(fs, root)
@@ -239,15 +260,17 @@ object Merge {
           .fold(batch)(_.filter(col(dateCol) < lit(cut)).unionByName(batch))
           .withColumn("pmonth", monthOf(dateCol))
           .write.mode("overwrite").partitionBy("pmonth").parquet(tmp.toString)
-        stats.months.foreach { m =>
-          val bak = new Path(root, s".compact-bak-$m")
-          publish(fs, new Path(tmp, s"pmonth=$m"), new Path(root, s"pmonth=$m"), bak)
-          fs.delete(bak, true)
+        () => {
+          stats.months.foreach { m =>
+            val bak = new Path(root, s".compact-bak-$m")
+            publish(fs, new Path(tmp, s"pmonth=$m"), new Path(root, s"pmonth=$m"), bak)
+            fs.delete(bak, true)
+          }
+          overlap.filterNot(stats.months).foreach { m =>
+            fs.delete(new Path(root, s"pmonth=$m"), true)
+          }
+          fs.delete(tmp, true)
         }
-        overlap.filterNot(stats.months).foreach { m =>
-          fs.delete(new Path(root, s"pmonth=$m"), true)
-        }
-        fs.delete(tmp, true)
       }
     }
 
@@ -277,11 +300,16 @@ object Merge {
     * than maxFiles·targetBytes — is skipped on re-run, so large healthy
     * partitions are never re-rewritten.
     *
-    * Crash contract: each partition is swapped in by [[publish]] and
-    * every run begins with [[recoverCompaction]], so a kill at ANY
-    * point is healed by the next run. Temp/backup dirs are
-    * dot-prefixed, so partition discovery never lists them and a
-    * crashed run never double-counts rows.
+    * The fragmented partitions are rewritten at once, on at most
+    * `defaultParallelism` threads ([[graft.util.Parallel.all]]); the
+    * first failure is thrown once every rewrite has ended.
+    *
+    * Crash contract: each partition is written to its own
+    * `.compact-tmp-<m>`, then swapped in by [[publish]], and every run
+    * begins with [[recoverCompaction]], so a kill at ANY point is
+    * healed by the next run. Temp/backup dirs are dot-prefixed, so
+    * partition discovery never lists them and a crashed run never
+    * double-counts rows.
     *
     * Reader contract (single-maintainer, like every rewrite here):
     * compaction of partition A never touches partition B — concurrent
@@ -299,13 +327,12 @@ object Merge {
     val parts = fs.listStatus(new Path(basePath)).toSeq
       .filter(_.isDirectory)
       .filter(_.getPath.getName.startsWith("pmonth="))
-    var compacted = 0
-    parts.foreach { p =>
+    val rewrites = parts.flatMap { p =>
       val files = fs.listStatus(p.getPath).toSeq.filter(f =>
         f.isFile && f.getPath.getName.endsWith(".parquet"))
       val n = math.max(1,
         math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
-      if (files.length > math.max(maxFiles, n)) {
+      Option.when(files.length > math.max(maxFiles, n)) { () =>
         val month = p.getPath.getName.stripPrefix("pmonth=")
         val tmp = new Path(basePath, s".compact-tmp-$month")
         val bak = new Path(basePath, s".compact-bak-$month")
@@ -316,10 +343,10 @@ object Merge {
           .write.mode("overwrite").parquet(tmp.toString)
         publish(fs, tmp, p.getPath, bak)
         fs.delete(bak, true)
-        compacted += 1
       }
     }
-    compacted
+    Parallel.all(spark, spark.sparkContext.defaultParallelism)(rewrites).foreach(_.get)
+    rewrites.size
   }
 
   /** The schema Spark stored in a parquet file's footer, read on the

@@ -11,7 +11,7 @@ import graft.clean.Clean
 import graft.config.PipelineConf
 import graft.merge.Merge
 import graft.schema.SchemaLoader.FieldSpec
-import graft.util.Checkpoints
+import graft.util.{Checkpoints, Parallel}
 
 /** The reference's event-driven pipeline (`main.py:18-63`) as one
   * Structured Streaming program:
@@ -36,7 +36,9 @@ import graft.util.Checkpoints
   *       `main.py:52-53`); or failed before its offset commits — the
   *       merge or notify threw, the query stops, and the restart replays
   *       the batch (same rows, idempotent merge). A merge that keeps
-  *       failing stops the stream until the base is repaired
+  *       failing stops the stream until the base is repaired. The merge
+  *       is staged while the load runs, and published only after the
+  *       load commits: a dead-lettered batch never touches the base
   *  ST6  post-update notification: one message file per merged batch
   *       in notifyDir, base64-encoded payload (`S9`/`S10` analog — a
   *       downstream `readStream` on notifyDir is the second trigger)
@@ -162,9 +164,16 @@ object StreamPipeline {
     * count, cutoff and months ([[graft.merge.Merge.batchStats]]).
     * Everything after reads the cached rows: the dated ones are the
     * cleaned batch, written as the cleaned CSV artifact and the staging
-    * table, and merged by [[graft.merge.Merge.mergeBatch]] with that
+    * table, and merged by [[graft.merge.Merge.stageMerge]] with that
     * pass's statistics — the one cutoff merge, `partitionedBase` naming
-    * the layout. */
+    * the layout. These three writes run at once
+    * ([[graft.util.Parallel.all]]), and the batch waits for all of them
+    * before it acts on any failure: a failed CSV or staging write
+    * dead-letters the upload and the staged merge is never published;
+    * a failed staged merge after a good load fails the batch; otherwise
+    * the merge is published, then compaction (when due) and notify
+    * run. The critical path is the pass, the slowest of the three
+    * writes, the publish, and notify. */
   def run(spark: SparkSession, fields: Seq[FieldSpec], conf: PipelineConf,
           dirs: StreamDirs): org.apache.spark.sql.streaming.StreamingQuery = {
     val stringSchema = StructType(
@@ -201,27 +210,36 @@ object StreamPipeline {
           val loaded = pass.flatMap { case (typed, stats, _) => Try {
             require(stats.kept > 0, "no dated row")
             val cleaned = Clean.dropUndated(conf)(typed).drop("__src")
-            // S4: durable cleaned artifact (reference writes the cleaned
-            // file to a second bucket, config.py:146) — inspectable
-            // between stages, overwritten per batch like the reference's
-            // fixed per-type uri2.
-            cleaned.write.mode("overwrite").option("header", true)
-              .csv(s"${dirs.basePath}_cleaned/${conf.name}")
-            // S5: truncate-load the staging table (WRITE_TRUNCATE,
-            // config.py:161-171); table_new survives the batch, queryable
-            Merge.overwriteAtomic(cleaned, staging)
+            // the three writes read only the cached batch, so they run at
+            // once; each returns what is left to publish, and only the
+            // merge leaves anything
+            val done = () => ()
+            val Seq(csv, table, merge) = Parallel.all(spark, 3)(Seq(
+              // S4: durable cleaned artifact (reference writes the cleaned
+              // file to a second bucket, config.py:146) — inspectable
+              // between stages, overwritten per batch like the reference's
+              // fixed per-type uri2.
+              () => { cleaned.write.mode("overwrite").option("header", true)
+                .csv(s"${dirs.basePath}_cleaned/${conf.name}"); done },
+              // S5: truncate-load the staging table (WRITE_TRUNCATE,
+              // config.py:161-171); table_new survives the batch, queryable
+              () => { Merge.overwriteAtomic(cleaned, staging); done },
+              () => Merge.stageMerge(spark, dirs.basePath, cleaned, conf.dateCol,
+                stats, dirs.partitionedBase)))
+            csv.get; table.get
             log.info(s"$tag staged ${stats.kept} rows at $staging")
-            (cleaned, stats)
+            (stats, merge)
           }}
           loaded match {
             case Failure(e) =>
+              // the staged merge is never published
               log.warn(s"$tag not loaded, dead-lettered: ${e.getMessage}")
               deadLetter(spark, files, dirs.errorDir)
-            case Success((cleaned, stats)) =>
-              // a merge or notify failure leaves foreachBatch: the offset
-              // does not commit, and the restart replays this batch
-              Merge.mergeBatch(spark, dirs.basePath, cleaned, conf.dateCol,
-                stats, dirs.partitionedBase)
+            case Success((stats, merge)) =>
+              // the load committed: publish the merge. A merge or notify
+              // failure leaves foreachBatch: the offset does not commit,
+              // and the restart replays this batch
+              merge.get.apply()
               log.info(s"$tag merged ${stats.kept} rows")
               if (dirs.partitionedBase && dirs.compactEveryBatches > 0 &&
                   (batchId + 1) % dirs.compactEveryBatches == 0)

@@ -15,12 +15,17 @@ import graft.streaming.StreamPipeline
 import graft.streaming.StreamPipeline.StreamDirs
 
 /** Fault sweep of one upload: every mutating filesystem call of the
-  * pipeline fails once, in turn, and a fault-free restart must converge. All dirs but the checkpoint live
-  * on [[FaultFs]], so the k-th call is the k-th step of the program
-  * (the window between a batch's work and its offset commit is
-  * StreamingSpec's replay test). For every k, one good and one
-  * poisoned upload run into each base layout (the partitioned one
-  * compacts after the good batch); after the restart:
+  * pipeline fails once, in turn, and a fault-free restart must converge.
+  * All dirs but the checkpoint live on [[FaultFs]], so every create,
+  * rename, delete and mkdirs of the program is counted (the window
+  * between a batch's work and its offset commit is StreamingSpec's
+  * replay test). An upload's cleaned CSV, staging and staged merge
+  * writes run at once, as do a compaction's month rewrites, so the
+  * k-th call names no fixed step: the count of a fault-free run must
+  * repeat, and each failure message names the call that failed. For
+  * every k, one good and one poisoned upload run into each base layout
+  * (the partitioned one compacts after the good batch); after the
+  * restart:
   *  - the base equals a [[Merge.merge]] fold of the uploads that were
   *    not dead-lettered;
   *  - no upload is both merged and dead-lettered: each upload is in
@@ -78,25 +83,25 @@ class FaultSweepSpec extends SparkSpec {
       new File(s"$root/upload", uploads(0)).lastModified() + 1000)
 
     FaultFs.arm(k)
-    val calls = try {
+    val (calls, failed) = try {
       try StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000)
       catch { case _: Exception if k > 0 => () } // the fault stops the query
-      FaultFs.calls
+      (FaultFs.calls, FaultFs.failed)
     } finally FaultFs.arm(0)
-    assert(StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000))
+    val at = s"k=$k (${failed.getOrElse("no call failed")}), partitioned=$partitioned"
+    assert(StreamPipeline.run(spark, fields, conf, dirs).awaitTermination(120000), at)
 
     val dead = Option(new File(s"$root/error").list()).map(_.toSet).getOrElse(Set.empty)
     val left = new File(s"$root/upload").list().toSet
-    uploads.foreach(u => assert(dead(u) != left(u), s"k=$k: $u in error=${dead(u)}, upload=${left(u)}"))
-    assert(dead("u1-poisoned.csv"), s"k=$k")
+    uploads.foreach(u => assert(dead(u) != left(u), s"$at: $u in error=${dead(u)}, upload=${left(u)}"))
+    assert(dead("u1-poisoned.csv"), at)
     val merged = uploads.filterNot(dead)
     val msgs = Option(new File(s"$root/notify").list()).getOrElse(Array.empty[String])
       .filter(_.endsWith(".msg"))
-    assert(msgs.length === merged.size, s"k=$k: messages ${msgs.toSeq}")
+    assert(msgs.length === merged.size, s"$at: messages ${msgs.toSeq}")
     val want = merged.map(u => if (u == uploads(0)) rows(good: _*) else rows())
       .foldLeft(seed)(Merge.merge(_, _, conf.dateCol))
-    assert(table(spark.read.parquet(s"$root/base")) === table(want),
-      s"k=$k, partitioned=$partitioned")
+    assert(table(spark.read.parquet(s"$root/base")) === table(want), at)
     if (partitioned && k == 0) assert(new File(s"$root/base/pmonth=2020-01").list()
       .count(_.endsWith(".parquet")) <= 8, "the good batch compacted January")
     calls
@@ -108,6 +113,7 @@ class FaultSweepSpec extends SparkSpec {
       val n = scenario(partitioned, 0)
       info(s"N = $n mutating calls in one fault-free run")
       assert(n > 0)
+      assert(scenario(partitioned, 0) === n, "the count of a fault-free run repeats")
       (1 to n).foreach(k => scenario(partitioned, k))
     }
   }
@@ -116,8 +122,9 @@ class FaultSweepSpec extends SparkSpec {
 /** The local filesystem under its own `faultfs:` scheme, for fault
   * injection. It keeps HDFS's rename contract (a missing source is
   * reported as `false`, not thrown), counts its mutating calls (create,
-  * rename, delete, mkdirs) and throws an `IOException` on the one that
-  * [[FaultFs.arm]] names. */
+  * rename, delete, mkdirs), throws an `IOException` on the one that
+  * [[FaultFs.arm]] names, and hands each call to [[FaultFs.before]]
+  * first. */
 class FaultFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
 
@@ -161,15 +168,28 @@ class FaultFs extends RawLocalFileSystem {
 object FaultFs {
   private val count = new AtomicInteger
   @volatile private var failAt = 0
+  @volatile private var failedCall: Option[String] = None
+
+  /** Runs before every mutating call, given its description (`create
+    * <path>`, `rename <src>`, …): a spec gates or fails calls by path
+    * with it. Reset it when done. */
+  @volatile var before: String => Unit = _ => ()
 
   /** Reset the count; the `k`-th mutating call from now on throws
     * (0: none does). */
-  def arm(k: Int): Unit = { failAt = 0; count.set(0); failAt = k }
+  def arm(k: Int): Unit = { failAt = 0; count.set(0); failedCall = None; failAt = k }
 
   /** Mutating calls since the last [[arm]]. */
   def calls: Int = count.get
 
-  private[graft] def tick(what: String): Unit =
-    if (count.incrementAndGet() == failAt)
+  /** The call the armed fault failed, once it has. */
+  def failed: Option[String] = failedCall
+
+  private[graft] def tick(what: String): Unit = {
+    before(what)
+    if (count.incrementAndGet() == failAt) {
+      failedCall = Some(what)
       throw new IOException(s"injected fault at mutating call $failAt: $what")
+    }
+  }
 }
