@@ -70,36 +70,56 @@ object Merge {
     }
   }
 
-  /** Converge an interrupted [[publish]]: `bak` without `live` is
-    * restored (the previous generation is the safe root; the rewrite
-    * re-runs); `bak` beside `live` is debris and deleted. Staging dirs
-    * are the caller's. True when `bak` was restored. */
-  def heal(fs: FileSystem, live: Path, bak: Path): Boolean =
-    fs.exists(bak) && {
-      if (fs.exists(live)) { fs.delete(bak, true); false }
-      else { rename(fs, bak, live); true }
+  /** THE partition swap: each staged `<root>/.merge-tmp/<col>=<k>` is
+    * swapped in by [[publish]], its old generation at `.compact-bak-<k>`
+    * until that swap is done, then `.merge-tmp` goes. Exactly `keys`
+    * are replaced; every other partition stays byte-identical. A failure
+    * at any step leaves a table that [[heal]] converges. The month base
+    * (merge and compaction) and every bucket store publish through it. */
+  def swapPartitions(fs: FileSystem, root: Path, col: String,
+                     keys: Iterable[Any]): Unit = {
+    val tmp = new Path(root, ".merge-tmp")
+    keys.foreach { k =>
+      val bak = new Path(root, s".compact-bak-$k")
+      publish(fs, new Path(tmp, s"$col=$k"), new Path(root, s"$col=$k"), bak)
+      fs.delete(bak, true)
     }
+    fs.delete(tmp, true)
+  }
 
-  /** [[heal]] every `<bakPrefix><k>` child of `root` against its
-    * `<livePrefix><k>` sibling — the per-partition form shared by the
-    * `pmonth=` and `bucket=` layouts. Returns the number restored. */
-  private[graft] def healChildren(fs: FileSystem, root: Path,
-                                  livePrefix: String, bakPrefix: String): Int =
-    healListed(fs, root, childNames(fs, root), livePrefix, bakPrefix)
-
-  /** [[healChildren]] over `names`, already listed from `root`. */
-  private def healListed(fs: FileSystem, root: Path, names: Seq[String],
-                         livePrefix: String, bakPrefix: String): Int =
-    names.filter(_.startsWith(bakPrefix)).count(name => heal(fs,
-      new Path(root, livePrefix + name.stripPrefix(bakPrefix)),
-      new Path(root, name)))
+  /** THE heal of a table path, either layout; `names` is its root
+    * listing ([[childNames]]). Converges an interrupted [[publish]]: a
+    * backup without its live dir is restored (the previous generation
+    * is the safe root; the rewrite re-runs), a backup beside its live
+    * dir is debris and deleted. The backups are `<root>.bak`
+    * ([[stageOverwrite]]) and each `.compact-bak-<k>`, against
+    * `<col>=<k>` ([[swapPartitions]]). The staged dirs `<root>.tmp` and
+    * `<root>/.merge-tmp` are deleted: incomplete, or never published.
+    * Every caller that reads a table before rewriting it runs this
+    * first: unhealed, a displaced generation reads as missing, and the
+    * rewrite's own backup delete destroys it. Returns the number of
+    * generations restored. */
+  def heal(fs: FileSystem, root: Path, col: String, names: Seq[String]): Int = {
+    def restore(live: Path, bak: Path): Boolean =
+      fs.exists(bak) && {
+        if (fs.exists(live)) { fs.delete(bak, true); false }
+        else { rename(fs, bak, live); true }
+      }
+    val restored = restore(root, new Path(s"$root.bak")) +:
+      names.filter(_.startsWith(".compact-bak-")).map(n =>
+        restore(new Path(root, s"$col=${n.stripPrefix(".compact-bak-")}"), new Path(root, n)))
+    fs.delete(new Path(s"$root.tmp"), true)
+    fs.delete(new Path(root, ".merge-tmp"), true)
+    restored.count(identity)
+  }
 
   /** `path`'s children (a file lists itself); None when it is missing. */
   private def listing(fs: FileSystem, path: Path): Option[Seq[FileStatus]] =
     try Some(fs.listStatus(path).toSeq)
     catch { case _: FileNotFoundException => None }
 
-  private def childNames(fs: FileSystem, dir: Path): Seq[String] =
+  /** The names of `dir`'s children; empty when it is missing. */
+  private[graft] def childNames(fs: FileSystem, dir: Path): Seq[String] =
     listing(fs, dir).getOrElse(Nil).map(_.getPath.getName)
 
   /** S7 — overwrite-own-input table rewrite. BigQuery's
@@ -107,28 +127,22 @@ object Merge {
     * the same table in one statement; Spark cannot overwrite a path it is
     * reading, so: write to the sibling `<path>.tmp` ([[stageOverwrite]]),
     * then [[publish]] it. The displaced old data survives at
-    * `<path>.bak` until the next rewrite — a cheap poor-man's version
-    * for rollback. */
+    * `<path>.bak` until the next rewrite or [[heal]] — a cheap
+    * poor-man's version for rollback. */
   def overwriteAtomic(df: DataFrame, path: String): Unit =
-    stageOverwrite(df, path)()
+    stageOverwrite(df.sparkSession, path)(df.write.mode("overwrite").parquet(_))()
 
-  /** The write half of [[overwriteAtomic]]: `df` written whole to
-    * `<path>.tmp` (a stale one deleted first); returns the [[publish]]
-    * that swaps it in. Until that runs, `path` is untouched. */
-  private def stageOverwrite(df: DataFrame, path: String): () => Unit = {
-    val fs = fsOf(df.sparkSession, path)
+  /** The write half of [[overwriteAtomic]]: `write` fills `<path>.tmp`
+    * (given its path; a stale one is deleted first); returns the
+    * [[publish]] that swaps it in. Until that runs, `path` is untouched. */
+  private[graft] def stageOverwrite(spark: SparkSession, path: String)(
+      write: String => Unit): () => Unit = {
+    val fs = fsOf(spark, path)
     val tmp = new Path(path + ".tmp")
     fs.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
+    write(tmp.toString)
     () => publish(fs, tmp, new Path(path), new Path(path + ".bak"))
   }
-
-  /** Heal an [[overwriteAtomic]] interrupted between its renames. Every
-    * caller that reads `path` before rewriting it runs this first:
-    * unhealed, the absent `path` reads as a missing (or empty) table and
-    * the rewrite's own `.bak` delete destroys the last good generation. */
-  def healOverwrite(spark: SparkSession, path: String): Unit =
-    heal(fsOf(spark, path), new Path(path), new Path(path + ".bak"))
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -210,13 +224,12 @@ object Merge {
   /** [[mergeBatch]] up to its publish, which it returns: the base stays
     * as it was until the returned step runs, so a caller can stage the
     * merge beside other writes and publish only once those committed
-    * (never running it leaves a staged dir that the next merge deletes
-    * before it writes).
-    *  1. Heal first — the whole table by [[healOverwrite]]'s rule, the
-    *     partitioned base by [[recoverCompaction]]'s, from the one root
-    *     listing that also yields the overlap months (unhealed, a month
-    *     a crashed compaction displaced is rewritten from the batch
-    *     alone and its rows below the cutoff are lost).
+    * (a caller that drops it runs [[heal]], which deletes the staged
+    * dir; the next merge would too).
+    *  1. [[heal]] first, from the one root listing that also yields the
+    *     overlap months (unhealed, a month a crashed compaction
+    *     displaced is rewritten from the batch alone and its rows below
+    *     the cutoff are lost).
     *  2. A missing base is an empty one: the first batch creates it.
     *  3. The base (partitioned: its cutoff month only) is read with its
     *     own footer schema — no inference job; differing columns fail
@@ -226,61 +239,55 @@ object Merge {
     *     and the batch to `.merge-tmp`. Either is read by the write and
     *     displaced only by the publish.
     *  5. The publish (returned). Whole table: [[publish]] of
-    *     `<base>.tmp`. Partitioned: each of the batch's months is swapped
-    *     in by [[publish]], its old generation at `.compact-bak-<m>`
-    *     until the swap is done: exactly the batch's months are
-    *     replaced, older ones stay byte-identical, and a failure at any
-    *     step leaves a base that step 1 heals and a re-run converges.
-    *     Overlap months the batch does not cover are deleted after the
-    *     swaps (a crash leaves at worst stale rows; re-running
-    *     converges). */
+    *     `<base>.tmp`. Partitioned: [[swapPartitions]] of exactly the
+    *     batch's months; older ones stay byte-identical. Overlap months
+    *     the batch does not cover are deleted after the swaps (a crash
+    *     leaves at worst stale rows; re-running converges). */
   private[graft] def stageMerge(spark: SparkSession, basePath: String,
                                 batch: DataFrame, dateCol: String,
                                 stats: BatchStats, partitioned: Boolean): () => Unit =
     stats.cut.fold(() => ()) { cut =>
       val fs = fsOf(spark, basePath)
       val root = new Path(basePath)
-      if (!partitioned) {
-        healOverwrite(spark, basePath)
-        stageOverwrite(mergeAt(readBase(spark, fs, root)
-          .getOrElse(batch.limit(0)), batch, dateCol, cut), basePath)
-      } else {
-        val names = childNames(fs, root)
-        healCompaction(fs, root, names)
+      val names = childNames(fs, root)
+      heal(fs, root, "pmonth", names)
+      if (!partitioned)
+        stageOverwrite(spark, basePath)(mergeAt(readBase(spark, fs, root)
+          .getOrElse(batch.limit(0)), batch, dateCol, cut).write.mode("overwrite").parquet(_))
+      else {
         val cutMonth = stats.months.min
         // a healed `.compact-bak-<m>` is `pmonth=<m>` again
         val overlap = names.collect {
           case n if n.startsWith("pmonth=") => n.stripPrefix("pmonth=")
           case n if n.startsWith(".compact-bak-") => n.stripPrefix(".compact-bak-")
         }.distinct.filter(_ >= cutMonth)
-        val tmp = new Path(root, ".merge-tmp")
-        fs.delete(tmp, true)
         overlap.find(_ == cutMonth)
           .flatMap(m => readBase(spark, fs, new Path(root, s"pmonth=$m")))
           .fold(batch)(_.filter(col(dateCol) < lit(cut)).unionByName(batch))
           .withColumn("pmonth", monthOf(dateCol))
-          .write.mode("overwrite").partitionBy("pmonth").parquet(tmp.toString)
+          .write.mode("overwrite").partitionBy("pmonth")
+          .parquet(new Path(root, ".merge-tmp").toString)
         () => {
-          stats.months.foreach { m =>
-            val bak = new Path(root, s".compact-bak-$m")
-            publish(fs, new Path(tmp, s"pmonth=$m"), new Path(root, s"pmonth=$m"), bak)
-            fs.delete(bak, true)
-          }
+          swapPartitions(fs, root, "pmonth", stats.months)
           overlap.filterNot(stats.months).foreach { m =>
             fs.delete(new Path(root, s"pmonth=$m"), true)
           }
-          fs.delete(tmp, true)
         }
       }
     }
 
   /** The parquet table at `path`, read with the schema Spark stored in
     * the footer of one of its files ([[sparkSchema]]; inferred only for
-    * files another writer produced). None when `path` is missing. */
-  private def readBase(spark: SparkSession, fs: FileSystem,
-                       path: Path): Option[DataFrame] =
-    listing(fs, path).map(files => readWithFooter(spark, path, files
-      .find(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)))
+    * files another writer produced). None when `path` is missing or
+    * holds only hidden entries (a table whose first write crashed). */
+  private[graft] def readBase(spark: SparkSession, fs: FileSystem,
+                              path: Path): Option[DataFrame] =
+    listing(fs, path).filter(_.exists(f => !hidden(f.getPath.getName)))
+      .map(files => readWithFooter(spark, path, files
+        .find(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)))
+
+  /** Names Spark's file listing skips: staged and backup dirs, markers. */
+  private def hidden(name: String) = name.startsWith(".") || name.startsWith("_")
 
   private def readWithFooter(spark: SparkSession, dir: Path,
                              file: Option[Path]): DataFrame =
@@ -294,22 +301,21 @@ object Merge {
     * open/footer costs. For every partition holding more than
     * `maxFiles` parquet files, rewrite it to ⌈bytes/targetBytes⌉ files
     * (a coalesce — no shuffle; rows within the partition just
-    * concatenate) and swap via rename. Returns the number of partitions
-    * compacted. Idempotent: a partition already at its target file
-    * count — `max(maxFiles, ⌈bytes/targetBytes⌉)` for partitions bigger
-    * than maxFiles·targetBytes — is skipped on re-run, so large healthy
+    * concatenate). Returns the number of partitions compacted.
+    * Idempotent: a partition already at its target file count —
+    * `max(maxFiles, ⌈bytes/targetBytes⌉)` for partitions bigger than
+    * maxFiles·targetBytes — is skipped on re-run, so large healthy
     * partitions are never re-rewritten.
     *
-    * The fragmented partitions are rewritten at once, on at most
-    * `defaultParallelism` threads ([[graft.util.Parallel.all]]); the
-    * first failure is thrown once every rewrite has ended.
+    * The fragmented partitions are written at once, each to
+    * `.merge-tmp/pmonth=<m>`, on at most `defaultParallelism` threads
+    * ([[graft.util.Parallel.all]]); once every write has ended, the
+    * first failure is thrown, else [[swapPartitions]] publishes them.
     *
-    * Crash contract: each partition is written to its own
-    * `.compact-tmp-<m>`, then swapped in by [[publish]], and every run
-    * begins with [[recoverCompaction]], so a kill at ANY point is
-    * healed by the next run. Temp/backup dirs are dot-prefixed, so
-    * partition discovery never lists them and a crashed run never
-    * double-counts rows.
+    * Crash contract: every run begins with [[heal]], so a kill at ANY
+    * point is healed by the next run. Staged and backup dirs are
+    * dot-prefixed, so partition discovery never lists them and a
+    * crashed run never double-counts rows.
     *
     * Reader contract (single-maintainer, like every rewrite here):
     * compaction of partition A never touches partition B — concurrent
@@ -323,29 +329,27 @@ object Merge {
                         maxFiles: Int = 8,
                         targetBytes: Long = 128L << 20): Int = {
     val fs = fsOf(spark, basePath)
-    recoverCompaction(spark, basePath)
-    val parts = fs.listStatus(new Path(basePath)).toSeq
+    val root = new Path(basePath)
+    heal(fs, root, "pmonth", childNames(fs, root))
+    val rewrites = fs.listStatus(root).toSeq
       .filter(_.isDirectory)
       .filter(_.getPath.getName.startsWith("pmonth="))
-    val rewrites = parts.flatMap { p =>
-      val files = fs.listStatus(p.getPath).toSeq.filter(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))
-      val n = math.max(1,
-        math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
-      Option.when(files.length > math.max(maxFiles, n)) { () =>
-        val month = p.getPath.getName.stripPrefix("pmonth=")
-        val tmp = new Path(basePath, s".compact-tmp-$month")
-        val bak = new Path(basePath, s".compact-bak-$month")
-        fs.delete(tmp, true)
-        // the write job reads the live partition while writing tmp; the
-        // source is only displaced by the renames after it completes
-        readWithFooter(spark, p.getPath, Some(files.head.getPath)).coalesce(n)
-          .write.mode("overwrite").parquet(tmp.toString)
-        publish(fs, tmp, p.getPath, bak)
-        fs.delete(bak, true)
+      .flatMap { p =>
+        val files = fs.listStatus(p.getPath).toSeq.filter(f =>
+          f.isFile && f.getPath.getName.endsWith(".parquet"))
+        val n = math.max(1,
+          math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
+        Option.when(files.length > math.max(maxFiles, n)) {
+          val month = p.getPath.getName.stripPrefix("pmonth=")
+          // the write job reads the live partition; the swap displaces it
+          month -> (() => readWithFooter(spark, p.getPath, Some(files.head.getPath))
+            .coalesce(n).write.mode("overwrite")
+            .parquet(new Path(root, s".merge-tmp/pmonth=$month").toString))
+        }
       }
-    }
-    Parallel.all(spark, spark.sparkContext.defaultParallelism)(rewrites).foreach(_.get)
+    Parallel.all(spark, spark.sparkContext.defaultParallelism)(rewrites.map(_._2))
+      .foreach(_.get)
+    swapPartitions(fs, root, "pmonth", rewrites.map(_._1))
     rewrites.size
   }
 
@@ -359,28 +363,6 @@ object Merge {
         .get("org.apache.spark.sql.parquet.row.metadata"))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
     finally reader.close()
-  }
-
-  /** Heal a month swap (a compaction's, or a partitioned merge's)
-    * interrupted by a crash: [[heal]] each
-    * `.compact-bak-<m>` against `pmonth=<m>` and delete every
-    * `.compact-tmp-<m>` (an incomplete or superseded write — when a
-    * backup was just restored, the next run simply re-compacts).
-    * Returns the number of partitions restored. Invoked as the first
-    * step of [[compactPartitions]]; public so a restarting pipeline
-    * can also heal without compacting. */
-  def recoverCompaction(spark: SparkSession, basePath: String): Int = {
-    val fs = fsOf(spark, basePath)
-    val root = new Path(basePath)
-    healCompaction(fs, root, childNames(fs, root))
-  }
-
-  /** [[recoverCompaction]] over `names`, already listed from `root`. */
-  private def healCompaction(fs: FileSystem, root: Path, names: Seq[String]): Int = {
-    val healed = healListed(fs, root, names, "pmonth=", ".compact-bak-")
-    names.filter(_.startsWith(".compact-tmp-"))
-      .foreach(n => fs.delete(new Path(root, n), true))
-    healed
   }
 
   /** Initial load for the partitioned layout. */

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   * clock here so replay at any order stays exact.)
   *
   * Store layout/merge: `pmod(key, N)` bucketed, touched-bucket
-  * union + re-reduce, [[graft.merge.Merge.publish]] per bucket — the
-  * shared [[BucketedMonoidStore]] contract. Per-batch work is
+  * union + re-reduce, published by [[graft.merge.Merge.swapPartitions]]
+  * — the shared [[BucketedMonoidStore]] contract. Per-batch work is
   * O(batch + touched buckets), independent of store size and log
   * depth; store size is |touched keys|, never log volume (the
   * per-batch map-side max_by collapses the log before anything is
@@ -53,7 +53,8 @@ object CdcStore {
   /** The store: latest-wins monoid on the shared touched-bucket
     * machinery ([[BucketedMonoidStore]]). */
   def store(storePath: String): BucketedMonoidStore =
-    new BucketedMonoidStore(storePath, latestPerKey, bucketOf)
+    new BucketedMonoidStore(storePath,
+      latestPerKey(_).withColumn("bucket", bucketOf), bucketOf)
 
   /** Fold one micro-batch of change rows (key, seq, tie, op, value)
     * into the latest-state store. Map-side collapse first: the store

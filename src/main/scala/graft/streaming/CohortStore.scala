@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Both stores are bucketed `pmod(user_id, N)` and merged only in the
   * buckets a batch touches (union + re-reduce, published by
-  * [[graft.merge.Merge.publish]] per bucket), so per-batch
+  * [[graft.merge.Merge.swapPartitions]]), so per-batch
   * work is O(batch + touched buckets) and redelivery is a value no-op.
   * Store sizes are |users| and |distinct (user, week)| — the same
   * bounds the batch operator's shuffles have, NOT event volume: the
@@ -71,7 +71,7 @@ object CohortStore {
                           reduce: DataFrame => DataFrame,
                           bucket: org.apache.spark.sql.Column = bucketOf)
       : Unit =
-    new BucketedMonoidStore(storePath, reduce, bucket)
+    new BucketedMonoidStore(storePath, reduce(_).withColumn("bucket", bucket), bucket)
       .merge(spark, batchRows)
 
   /** Wire the stream: event files under `uploadDir` → per-batch store

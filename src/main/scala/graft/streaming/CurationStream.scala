@@ -27,9 +27,15 @@ import graft.merge.Merge
   * form (atomic sibling-dir rewrite, `.bak` rollback);
   * [[mergeCuratedBatchPartitioned]] is the 100 TB form — the store
   * partitioned by the dedup key's hash bucket, each merge touching only
-  * delivered buckets, each swapped in by [[graft.merge.Merge.publish]]
-  * like every rewrite here. Checkpointed source offsets + an
-  * idempotent, order-independent, crash-recoverable merge ⇒
+  * delivered buckets ([[BucketedMonoidStore]]).
+  *
+  * Every store here publishes like every rewrite in this engine: a
+  * whole dir by [[graft.merge.Merge.overwriteAtomic]] (`<path>.tmp`,
+  * `<path>.bak`), touched buckets by
+  * [[graft.merge.Merge.swapPartitions]] (`<path>/.merge-tmp`,
+  * `.compact-bak-<b>`), and each mutator and reader of a store heals it
+  * first with [[graft.merge.Merge.heal]]. Checkpointed source offsets +
+  * an idempotent, order-independent, crash-recoverable merge ⇒
   * effectively-once, the same contract as the reference pipeline's
   * merge stage. Single-maintainer, like every rewrite in this engine.
   */
@@ -41,13 +47,10 @@ object CurationStream {
     * the corpus-wide min). */
   def mergeCuratedBatch(spark: SparkSession, batch: DataFrame,
                         storePath: String): Unit = {
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Merge.healOverwrite(spark, storePath)
-    val unioned =
-      if (fs.exists(new Path(storePath)))
-        spark.read.parquet(storePath).unionByName(batch)
-      else batch
+    val root = new Path(storePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, root, "bucket", Merge.childNames(fs, root))
+    val unioned = Merge.readBase(spark, fs, root).fold(batch)(_.unionByName(batch))
     // distinct() first: a redelivered row is byte-identical to its
     // store copy (scrub is deterministic), and dedupScrubbed's
     // survivor-join assumes unique doc_ids — without this, redelivery
@@ -75,19 +78,6 @@ object CurationStream {
         org.apache.spark.sql.functions.col("scrubbed"), 1, 40)),
     org.apache.spark.sql.functions.lit(storeBuckets.toLong))
 
-  /** Heal a partitioned-store merge interrupted by a crash:
-    * [[graft.merge.Merge.heal]] each `.merge-bak-<b>` against
-    * `bucket=<b>` and delete the staging dir. Returns the number of
-    * buckets restored. Runs at the start of every bucket-store merge. */
-  def recoverStore(spark: SparkSession, storePath: String): Int = {
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val healed =
-      Merge.healChildren(fs, new Path(storePath), "bucket=", ".merge-bak-")
-    fs.delete(new Path(storePath + ".merge-tmp"), true)
-    healed
-  }
-
   /** The O(delivered-buckets) merge — [[mergeCuratedBatch]]'s 100 TB
     * form, the `updateTablePartitioned` pattern with the dedup key's
     * hash bucket as the partition: the store lives as
@@ -101,61 +91,15 @@ object CurationStream {
     * Publish is NOT Spark's dynamic partition overwrite (whose
     * delete-then-rename commit can lose a bucket's prior survivors on a
     * crash, and whose session-conf toggle would race concurrent
-    * writers): see [[publishTouchedBuckets]]. Same convergence
-    * contract as the simple form: min per key over store∪batch,
-    * idempotent under redelivery, order-independent. */
+    * writers): it is [[BucketedMonoidStore]]'s, with the dedup as its
+    * monoid (`distinct()` first: a redelivered row is byte-identical to
+    * its store copy, and dedupScrubbed assumes unique doc_ids). Same
+    * convergence contract as the simple form: min per key over
+    * store∪batch, idempotent under redelivery, order-independent. */
   def mergeCuratedBatchPartitioned(spark: SparkSession, batch: DataFrame,
-                                   storePath: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStore(spark, storePath)
-    // checkpoint the gated/scrubbed/bucketed batch ONCE: both the
-    // touched-set collect and the merge union read it from cache
-    // instead of re-reading + re-gating the source files
-    val (withBucket, release) = graft.util.Checkpoints.checkpointTracked(
-      batch.withColumn("bucket", bucketOf))
-    try {
-      val touched = withBucket.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSet // bounded by storeBuckets
-      if (touched.isEmpty) return // fully-gated batch: nothing to merge
-      val existing =
-        if (fs.exists(new Path(storePath)))
-          Some(spark.read.parquet(storePath)
-            .filter(col("bucket").isInCollection(touched)))
-        else None
-      val unioned = existing.fold(withBucket)(withBucket.unionByName(_))
-      val merged = TextOps.dedupScrubbed(unioned.drop("bucket").distinct())
-        .withColumn("bucket", bucketOf)
-      publishTouchedBuckets(spark, storePath, merged, touched)
-    } finally release()
-  }
-
-  /** The recoverable touched-bucket publish shared by every
-    * bucket-partitioned store in the streaming pipeline (curated store,
-    * signature index): stage the new generation OUTSIDE the store dir
-    * (partition discovery never sees it), then swap each touched bucket
-    * in with [[graft.merge.Merge.publish]]; [[recoverStore]] heals an
-    * interrupted swap. `merged` must carry a `bucket` column and
-    * contain rows ONLY for the touched buckets (a touched bucket
-    * always stages non-empty: it holds at least the batch rows that
-    * made it touched). */
-  private[graft] def publishTouchedBuckets(
-      spark: SparkSession, storePath: String, merged: DataFrame,
-      touched: Set[Long]): Unit = {
-    val fs = new Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(storePath + ".merge-tmp")
-    fs.delete(tmp, true)
-    merged.write.partitionBy("bucket").parquet(tmp.toString)
-    touched.foreach { b =>
-      val bak = new Path(storePath, s".merge-bak-$b")
-      Merge.publish(fs, new Path(tmp, s"bucket=$b"),
-        new Path(storePath, s"bucket=$b"), bak)
-      fs.delete(bak, true)
-    }
-    fs.delete(tmp, true)
-  }
+                                   storePath: String): Unit =
+    new BucketedMonoidStore(storePath, df => TextOps.dedupScrubbed(df.distinct()),
+      bucketOf).merge(spark, batch)
 
   /** Incremental sequence packing — the streaming tail of the curation
     * pipeline: pack each micro-batch's chunks into the SAME global
@@ -348,26 +292,26 @@ object CurationStream {
                         partitionedSig: Boolean = false): Unit = {
     val fs = new Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(storePath))) return // fully-gated first batch
+    // None: a fully-gated first batch
+    val store = Merge.readBase(spark, fs, new Path(storePath)) match {
+      case Some(store) => store
+      case None => return
+    }
     val batchKeys = batch
       .select(substring(col("scrubbed"), 1, 40).as("key40")).distinct()
     // a fully-gated batch delivers no keys: nothing in the view can
     // change, so skip the store-sized sig/pairs rewrite entirely
     if (batchKeys.isEmpty) return
     // current winners of the delivered keys (post-merge store state)
-    val store = spark.read.parquet(storePath)
     val winners = store
       .withColumn("key40", substring(col("scrubbed"), 1, 40))
       .join(batchKeys, "key40")
     val (winnerSigs, releaseW) = graft.util.Checkpoints.checkpointTracked(
       signaturesOf(winners.select(col("doc_id"), col("scrubbed"))))
     try {
-      if (partitionedSig) recoverStore(spark, sigPath) // heal crash debris
-      else Merge.healOverwrite(spark, sigPath)
-      val oldSigs =
-        if (fs.exists(new Path(sigPath)))
-          Some(spark.read.parquet(sigPath).drop("bucket"))
-        else None
+      val sigRoot = new Path(sigPath)
+      Merge.heal(fs, sigRoot, "bucket", Merge.childNames(fs, sigRoot))
+      val oldSigs = Merge.readBase(spark, fs, sigRoot).map(_.drop("bucket"))
       // ids dethroned by this batch: had a delivered key, no longer win
       val removed = oldSigs.map(
         _.join(batchKeys, "key40")
@@ -418,11 +362,9 @@ object CurationStream {
               size(array_union(col("ga.gs"), col("gb.gs")))).as("jacc"))
           .filter(col("jacc") >= nearDupMinJaccard)
         // pair view: retire dethroned ids, fold in this batch's finds
-        Merge.healOverwrite(spark, pairsPath)
-        val oldPairs =
-          if (fs.exists(new Path(pairsPath)))
-            Some(spark.read.parquet(pairsPath))
-          else None
+        val pairsRoot = new Path(pairsPath)
+        Merge.heal(fs, pairsRoot, "bucket", Merge.childNames(fs, pairsRoot))
+        val oldPairs = Merge.readBase(spark, fs, pairsRoot)
         val kept = (oldPairs, removed) match {
           case (Some(p), Some(r)) =>
             p.join(r.withColumnRenamed("doc_id", "doc_a"),
@@ -446,11 +388,10 @@ object CurationStream {
           // if that scan ever dominates.
           val touched = batchKeys.select(sigBucketOf.as("b"))
             .distinct().collect().map(_.getLong(0)).toSet
-          if (touched.nonEmpty)
-            publishTouchedBuckets(spark, sigPath,
-              sigs.withColumn("bucket", sigBucketOf)
-                .filter(col("bucket").isInCollection(touched)),
-              touched)
+          sigs.withColumn("bucket", sigBucketOf)
+            .filter(col("bucket").isInCollection(touched))
+            .write.partitionBy("bucket").parquet(new Path(sigRoot, ".merge-tmp").toString)
+          Merge.swapPartitions(fs, sigRoot, "bucket", touched)
         } else Merge.overwriteAtomic(sigs, sigPath)
       } finally releaseS()
     } finally releaseW()
@@ -472,11 +413,13 @@ object CurationStream {
     * convergence proof verbatim. */
   def updateDupClusters(spark: SparkSession, pairsPath: String,
                         clustersPath: String): Unit = {
-    val fs = new Path(pairsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Merge.healOverwrite(spark, pairsPath)
-    if (!fs.exists(new Path(pairsPath))) return
-    val pairs = spark.read.parquet(pairsPath).select("doc_a", "doc_b")
+    val root = new Path(pairsPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, root, "bucket", Merge.childNames(fs, root))
+    val pairs = Merge.readBase(spark, fs, root) match {
+      case Some(pairs) => pairs.select("doc_a", "doc_b")
+      case None => return
+    }
     val clusters = graft.operators.ConnectedComponents
       .components(pairs, "doc_a", "doc_b")
       .select(col("node").as("doc_id"), col("component").as("cluster_id"),
@@ -582,29 +525,14 @@ object CurationStream {
   private def statsBucketOf =
     pmod(col("lh"), lit(storeBuckets.toLong))
 
+  /** The line- and window-stats stores' monoid: per-key lattice MIN of
+    * `mn` and MAX of `mx`. */
+  private val minMax = MonoidStore.aggReduce(Nil, Seq("mn"), Seq("mx")) _
+
   def mergeLineStatsBatch(spark: SparkSession, batch: DataFrame,
-                          statsPath: String): Unit = {
-    val fs = new Path(statsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStore(spark, statsPath)
-    val (batchStats, release) = graft.util.Checkpoints.checkpointTracked(
-      graft.ext.CorpusOps.lineStats(batch).withColumn("bucket", statsBucketOf))
-    try {
-      val touched = batchStats.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSet // bounded by storeBuckets
-      if (touched.isEmpty) return
-      val existing =
-        if (fs.exists(new Path(statsPath)))
-          Some(spark.read.parquet(statsPath)
-            .filter(col("bucket").isInCollection(touched)))
-        else None
-      val merged = existing.fold(batchStats)(batchStats.unionByName(_))
-        .groupBy("lh")
-        .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
-        .withColumn("bucket", statsBucketOf)
-      publishTouchedBuckets(spark, statsPath, merged, touched)
-    } finally release()
-  }
+                          statsPath: String): Unit =
+    new BucketedMonoidStore(statsPath, minMax, statsBucketOf)
+      .merge(spark, graft.ext.CorpusOps.lineStats(batch))
 
   /** The clean corpus as a VIEW over any (doc_id, text) frame and the
     * streamed line-stats store: equals the batch
@@ -654,30 +582,11 @@ object CurationStream {
   def mergeWindowStatsBatch(spark: SparkSession, batch: DataFrame,
                             statsPath: String,
                             k: Int = graft.ext.TextOps.substrK): Unit = {
-    val fs = new Path(statsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStore(spark, statsPath)
     val occKey = struct(col("doc_id"), col("p"))
-    val (batchStats, release) = graft.util.Checkpoints.checkpointTracked(
+    new BucketedMonoidStore(statsPath, minMax, winBucketOf).merge(spark,
       graft.ext.TextOps.windowHashes(batch, k)
         .groupBy("wh")
-        .agg(min(occKey).as("mn"), max(occKey).as("mx"))
-        .withColumn("bucket", winBucketOf))
-    try {
-      val touched = batchStats.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSet // bounded by storeBuckets
-      if (touched.isEmpty) return
-      val existing =
-        if (fs.exists(new Path(statsPath)))
-          Some(spark.read.parquet(statsPath)
-            .filter(col("bucket").isInCollection(touched)))
-        else None
-      val merged = existing.fold(batchStats)(batchStats.unionByName(_))
-        .groupBy("wh")
-        .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
-        .withColumn("bucket", winBucketOf)
-      publishTouchedBuckets(spark, statsPath, merged, touched)
-    } finally release()
+        .agg(min(occKey).as("mn"), max(occKey).as("mx")))
   }
 
   /** Exact-substring-deduplicated corpus as a VIEW over any (doc_id,
@@ -819,7 +728,7 @@ object CurationStream {
     * Batch work: probe = broadcast joins against the bounded bit
     * table (map-only over the batch), update = union of ≤ 3·batch
     * distinct positions into touched buckets
-    * ([[publishTouchedBuckets]]).
+    * ([[graft.merge.Merge.swapPartitions]]).
     *
     * Effectively-once: novel output goes to an overwrite-own-dir
     * `batch=<id>` with a marker written AFTER the data (the
@@ -883,38 +792,22 @@ object CurationStream {
     * construction): union with the touched `bucket=<cell>` partitions,
     * full-row distinct (vectors are immutable per vec_id, so a
     * redelivered row is byte-identical and distinct() makes the merge
-    * idempotent; set union makes it order-independent), republished by
-    * [[publishTouchedBuckets]]. Serving reads the store through
+    * idempotent; set union makes it order-independent) — the
+    * [[BucketedMonoidStore]] merge, whose heal also converges an
+    * interrupted [[refitAnnStore]]. Serving reads the store through
     * [[annStoreIndex]] at any moment — a query between batches sees a
     * complete, partition-pruned index that is merely missing the
     * not-yet-delivered vectors. */
   def appendAnnBatch(spark: SparkSession, batch: DataFrame,
                      annPath: String,
                      centroids: Array[Array[Double]],
-                     model: graft.ext.Similarity.PqModel): Unit = {
-    import org.apache.spark.sql.functions._
-    val fs = new Path(annPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefit(spark, annPath)
-    recoverStore(spark, annPath)
-    val (coded, release) = graft.util.Checkpoints.checkpointTracked(
+                     model: graft.ext.Similarity.PqModel): Unit =
+    // the cell is the bucket: batch rows arrive bucketed
+    new BucketedMonoidStore(annPath, _.distinct(), col("bucket")).merge(spark,
       graft.ext.Similarity.ivfAssign(batch, centroids)
         .join(graft.ext.Similarity.pqEncode(batch, model), "vec_id")
         .select(col("vec_id"), col("embedding"), col("code"),
           col("cell").cast("long").as("bucket")))
-    try {
-      val touched = coded.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSet // ≤ k cells
-      if (touched.isEmpty) return
-      val existing =
-        if (fs.exists(new Path(annPath)))
-          Some(spark.read.parquet(annPath)
-            .filter(col("bucket").isInCollection(touched)))
-        else None
-      val merged = existing.fold(coded)(coded.unionByName(_)).distinct()
-      publishTouchedBuckets(spark, annPath, merged, touched)
-    } finally release()
-  }
 
   /** The serving view over the store: (cellCodes, emb) in exactly the
     * shapes [[graft.ext.Similarity.ivfPqQuery]] consumes — the cell
@@ -934,12 +827,14 @@ object CurationStream {
     * as the stream outgrows the frozen centroids. Metadata-only: one
     * marker-file listing plus a store count. */
   def annStaleness(spark: SparkSession, annPath: String): Double = {
-    val fs = new Path(annPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefit(spark, annPath)
-    if (!fs.exists(new Path(annPath))) return 0.0
-    val fit = fs.listStatus(new Path(annPath)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("_fit-"))
+    val root = new Path(annPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, root, "bucket", Merge.childNames(fs, root))
+    val store = Merge.readBase(spark, fs, root) match {
+      case Some(store) => store
+      case None => return 0.0
+    }
+    val fit = Merge.childNames(fs, root).filter(_.startsWith("_fit-"))
       .map(_.stripPrefix("_fit-").toLong) match {
       case Seq(one) => one
       case Seq() => 0L // stream-only store, never fit: fully stale
@@ -947,7 +842,7 @@ object CurationStream {
         s"$annPath has ${other.size} fit markers (expected exactly 1) — " +
           "bootstrap the store with initAnnStore")
     }
-    val total = spark.read.parquet(annPath).count()
+    val total = store.count()
     if (total == 0) 0.0
     else (total - math.min(fit, total)).toDouble / total
   }
@@ -982,18 +877,19 @@ object CurationStream {
     * parallel; the swap is O(1) metadata. A refit never touches the
     * source corpus — the store IS the corpus of record for serving.
     *
-    * Crash posture: the swap is [[graft.merge.Merge.publish]] with
-    * `.refit-bak` as its backup, healed by [[recoverRefit]]; the marker
-    * is written into the staged store BEFORE the swap, so the
-    * published store is always complete-with-marker. */
+    * Crash posture: the store is staged and published whole
+    * ([[graft.merge.Merge.stageOverwrite]]: `<path>.tmp`, `<path>.bak`)
+    * and healed by [[graft.merge.Merge.heal]], which every reader and
+    * mutator of the store runs first; the marker is written into the
+    * staged store BEFORE the swap, so the published store is always
+    * complete-with-marker. */
   def refitAnnStore(spark: SparkSession, annPath: String, k: Int = 16,
                     fitSample: Double = 1.0)
       : (Array[Array[Double]], graft.ext.Similarity.PqModel) = {
     import org.apache.spark.sql.functions._
-    val fs = new Path(annPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRefit(spark, annPath)
-    recoverStore(spark, annPath)
+    val root = new Path(annPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, root, "bucket", Merge.childNames(fs, root))
     // freeze ONE corpus snapshot for fit + re-encode (batches may keep
     // landing in the old store meanwhile — they are re-absorbed by the
     // relaunched stream's replay, not lost: the checkpoint's last
@@ -1003,33 +899,18 @@ object CurationStream {
     try {
       val centroids = graft.ext.Similarity.fitCentroids(live, k, fitSample)
       val model = graft.ext.Similarity.trainPq(live, fitSample = fitSample)
-      val staged = new Path(annPath + ".refit-tmp")
-      fs.delete(staged, true)
-      graft.ext.Similarity.ivfAssign(live, centroids)
-        .join(graft.ext.Similarity.pqEncode(live, model), "vec_id")
-        .select(col("vec_id"), col("embedding"), col("code"),
-          col("cell").cast("long").as("bucket"))
-        .write.partitionBy("bucket").parquet(staged.toString)
-      val n = spark.read.parquet(staged.toString).count()
-      fs.create(new Path(staged, annFitMarker(n)), true).close()
-      val bak = new Path(annPath + ".refit-bak")
-      Merge.publish(fs, staged, new Path(annPath), bak)
-      fs.delete(bak, true)
+      Merge.stageOverwrite(spark, annPath) { staged =>
+        graft.ext.Similarity.ivfAssign(live, centroids)
+          .join(graft.ext.Similarity.pqEncode(live, model), "vec_id")
+          .select(col("vec_id"), col("embedding"), col("code"),
+            col("cell").cast("long").as("bucket"))
+          .write.partitionBy("bucket").parquet(staged)
+        val n = spark.read.parquet(staged).count()
+        fs.create(new Path(staged, annFitMarker(n)), true).close()
+      }()
+      fs.delete(new Path(annPath + ".bak"), true)
       (centroids, model)
     } finally release()
-  }
-
-  /** Heal a [[refitAnnStore]] swap interrupted by a crash:
-    * [[graft.merge.Merge.heal]] the store against `.refit-bak` and
-    * delete the `.refit-tmp` stage. Runs at the start of every
-    * [[refitAnnStore]], [[appendAnnBatch]] and [[annStaleness]], so
-    * every reader/mutator of the store heals the swap before trusting
-    * it. */
-  def recoverRefit(spark: SparkSession, annPath: String): Unit = {
-    val fs = new Path(annPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Merge.heal(fs, new Path(annPath), new Path(annPath + ".refit-bak"))
-    fs.delete(new Path(annPath + ".refit-tmp"), true)
   }
 
   /** Wire the index-maintenance stream: vector files under `uploadDir`
@@ -1052,9 +933,9 @@ object CurationStream {
                        novelPath: String, bitsPath: String,
                        batchId: Long): Unit = {
     import graft.operators.BloomProbe.{detBit, detBloomProbes}
-    val fs = new Path(bitsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStore(spark, bitsPath)
+    val root = new Path(bitsPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, root, "bucket", Merge.childNames(fs, root))
     // within-batch first-seen representative per fingerprint, with the
     // probe positions computed once — checkpointed: the probe, the
     // output write, and the bit merge all read it
@@ -1067,14 +948,13 @@ object CurationStream {
         .withColumns((1 to detBloomProbes)
           .map(i => s"p$i" -> detBit(col("fp"), i)).toMap))
     try {
-      val bitsExist = fs.exists(new Path(bitsPath))
+      val stored = Merge.readBase(spark, fs, root)
       val marker = new Path(novelPath, s"_novel-$batchId")
       if (!new Path(novelPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(marker)) {
-        val bits =
-          if (bitsExist) spark.read.parquet(bitsPath).select("bit")
-          else spark.emptyDataFrame.select(lit(0L).as("bit")).limit(0)
+        val bits = stored.fold(spark.emptyDataFrame.select(lit(0L).as("bit")).limit(0))(
+          _.select("bit"))
         val probed = (1 to detBloomProbes).foldLeft(reps) { (df, i) =>
           df.join(broadcast(bits.withColumnRenamed("bit", s"b$i")),
             col(s"p$i") === col(s"b$i"), "left")
@@ -1096,14 +976,12 @@ object CurationStream {
       val touched = batchBits.select("bucket").distinct()
         .collect().map(_.getLong(0)).toSet
       if (touched.nonEmpty) {
-        val existing =
-          if (bitsExist) Some(spark.read.parquet(bitsPath)
-            .filter(col("bucket").isInCollection(touched)))
-          else None
-        val merged = existing.fold(batchBits)(batchBits.unionByName(_))
+        stored.fold(batchBits)(s => batchBits.unionByName(
+            s.filter(col("bucket").isInCollection(touched))))
           .select("bit").distinct()
           .withColumn("bucket", bitBucketOf)
-        publishTouchedBuckets(spark, bitsPath, merged, touched)
+          .write.partitionBy("bucket").parquet(new Path(root, ".merge-tmp").toString)
+        Merge.swapPartitions(fs, root, "bucket", touched)
       }
     } finally release()
   }

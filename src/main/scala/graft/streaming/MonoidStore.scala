@@ -1,7 +1,9 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.merge.Merge
 
 /** THE PER-BATCH-DELTA STORE, defined once — the contract that
   * [[SkewStore]], [[HistogramStore]], [[Bm25Store]], [[ProfileStore]]
@@ -85,46 +87,47 @@ final class MonoidStore(val path: String,
 
 /** THE TOUCHED-BUCKET SIBLING of [[MonoidStore]] — for IDEMPOTENT
   * monoids whose state is a keyed table re-reduced IN PLACE
-  * (latest-wins max_by, set union, lattice min, bottom-k) rather than
-  * per-batch delta dirs folded at read time. Sum is the one monoid
-  * that needs the delta layout for replay safety; an idempotent reduce
-  * makes redelivery a value no-op, so the store can BE the merged
-  * view: `pmod(key, N)`-bucketed parquet, and a batch unions into only
-  * the buckets it touches (union + re-reduce + a
-  * [[graft.merge.Merge.publish]] per bucket). Per-batch work is
+  * (latest-wins max_by, set union, lattice min, bottom-k, the curated
+  * store's min-doc_id dedup) rather than per-batch delta dirs folded at
+  * read time. Sum is the one monoid that needs the delta layout for
+  * replay safety; an idempotent reduce makes redelivery a value no-op,
+  * so the store can BE the merged view: `bucket=<k>` partitioned
+  * parquet, and a batch unions into only the buckets it touches (union
+  * + re-reduce, staged in the store's `.merge-tmp` and published by
+  * [[graft.merge.Merge.swapPartitions]]). Per-batch work is
   * O(batch + touched buckets), independent of store size; the read
   * side pays zero fold cost.
   *
-  * Previously hand-rolled identically by CdcStore, CohortStore and
-  * KmvStore — defined once here, with each store contributing only its
-  * monoid and bucket key. */
+  * Defined once here for every bucket store (CdcStore, CohortStore,
+  * KmvStore and CurationStream's curated, line-stats, window-stats and
+  * ANN stores), with each store contributing only its monoid and
+  * bucket key. */
 final class BucketedMonoidStore(val path: String,
                                 val reduce: DataFrame => DataFrame,
                                 val bucket: org.apache.spark.sql.Column) {
 
   /** Union `batchRows` (already reduced map-side by the caller) into
-    * the touched buckets and republish them. `reduce` must be the
-    * store's monoid over (store ∪ batch) — idempotent and
-    * order-independent, which is the replay-safety contract here. */
+    * the touched buckets and republish them. `bucket` buckets the batch
+    * rows; `reduce` is the store's monoid over (store ∪ batch), whose
+    * rows both carry `bucket`, and must yield it — idempotent and
+    * order-independent, which is the replay-safety contract here. The
+    * store is healed first ([[graft.merge.Merge.heal]]); a store that
+    * is missing, or empty after a crashed first merge, is empty. */
   def merge(spark: SparkSession, batchRows: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    CurationStream.recoverStore(spark, path)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Merge.heal(fs, root, "bucket", Merge.childNames(fs, root))
     val (staged, release) = graft.util.Checkpoints.checkpointTracked(
       batchRows.withColumn("bucket", bucket))
     try {
       val touched = staged.select("bucket").distinct()
         .collect().map(_.getLong(0)).toSet // ≤ storeBuckets
-      if (touched.isEmpty) return
-      val existing =
-        if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-          Some(spark.read.parquet(path)
-            .filter(col("bucket").isInCollection(touched)))
-        else None
-      val merged = reduce(
-        existing.fold(staged)(staged.unionByName(_)).drop("bucket"))
-        .withColumn("bucket", bucket)
-      CurationStream.publishTouchedBuckets(spark, path, merged, touched)
+      if (touched.nonEmpty) {
+        reduce(Merge.readBase(spark, fs, root)
+          .fold(staged)(s => staged.unionByName(s.filter(col("bucket").isInCollection(touched)))))
+          .write.partitionBy("bucket").parquet(new Path(root, ".merge-tmp").toString)
+        Merge.swapPartitions(fs, root, "bucket", touched)
+      }
     } finally release()
   }
 

@@ -38,7 +38,8 @@ import graft.util.{Checkpoints, Parallel}
   *       the batch (same rows, idempotent merge). A merge that keeps
   *       failing stops the stream until the base is repaired. The merge
   *       is staged while the load runs, and published only after the
-  *       load commits: a dead-lettered batch never touches the base
+  *       load commits: a dead-lettered batch leaves the base as it was
+  *       and deletes its staged merge
   *  ST6  post-update notification: one message file per merged batch
   *       in notifyDir, base64-encoded payload (`S9`/`S10` analog — a
   *       downstream `readStream` on notifyDir is the second trigger)
@@ -169,7 +170,8 @@ object StreamPipeline {
     * the layout. These three writes run at once
     * ([[graft.util.Parallel.all]]), and the batch waits for all of them
     * before it acts on any failure: a failed CSV or staging write
-    * dead-letters the upload and the staged merge is never published;
+    * dead-letters the upload, and the staged merge is deleted unpublished
+    * ([[graft.merge.Merge.heal]]);
     * a failed staged merge after a good load fails the batch; otherwise
     * the merge is published, then compaction (when due) and notify
     * run. The critical path is the pass, the slowest of the three
@@ -232,8 +234,11 @@ object StreamPipeline {
           }}
           loaded match {
             case Failure(e) =>
-              // the staged merge is never published
+              // the staged merge is never published: the heal deletes it
               log.warn(s"$tag not loaded, dead-lettered: ${e.getMessage}")
+              val base = new Path(dirs.basePath)
+              val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              Merge.heal(fs, base, "pmonth", Merge.childNames(fs, base))
               deadLetter(spark, files, dirs.errorDir)
             case Success((stats, merge)) =>
               // the load committed: publish the merge. A merge or notify

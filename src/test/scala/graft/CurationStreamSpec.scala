@@ -771,7 +771,7 @@ class CurationStreamSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet === all.keySet)
 
     // CRASH WINDOW between the two swap renames: the live store is
-    // displaced to .refit-bak and nothing was published. Every
+    // displaced to .bak and nothing was published. Every
     // reader/mutator must HEAL this (restore the complete old store)
     // before trusting fs state — without it, the next append would
     // silently recreate a one-batch store and a later refit's
@@ -779,16 +779,17 @@ class CurationStreamSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(annPath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(annPath),
-      new org.apache.hadoop.fs.Path(annPath + ".refit-bak")))
+      new org.apache.hadoop.fs.Path(annPath + ".bak")))
     assert(CurationStream.annStaleness(spark, annPath) === 0.0) // healed
     assert(fs.exists(new org.apache.hadoop.fs.Path(annPath)))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(annPath + ".refit-bak")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(annPath + ".bak")))
     assert(spark.read.parquet(annPath).select("vec_id")
       .collect().map(_.getLong(0)).toSet === all.keySet)
     // post-publish debris (bak present AND live present) is deleted
-    fs.mkdirs(new org.apache.hadoop.fs.Path(annPath + ".refit-bak"))
-    CurationStream.recoverRefit(spark, annPath)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(annPath + ".refit-bak")))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(annPath + ".bak"))
+    val annRoot = new org.apache.hadoop.fs.Path(annPath)
+    graft.merge.Merge.heal(fs, annRoot, "bucket", graft.merge.Merge.childNames(fs, annRoot))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(annPath + ".bak")))
   }
 
   test("simple store: a republish that died between its renames keeps " +

@@ -172,14 +172,19 @@ class MergeSpec extends SparkSpec {
     val want = baseRows()
     val live = new java.io.File(s"$basePath/pmonth=2020-01")
     val bak = new java.io.File(s"$basePath/.compact-bak-2020-01")
-    val tmp = new java.io.File(s"$basePath/.compact-tmp-2020-01")
+    val tmp = new java.io.File(s"$basePath/.merge-tmp/pmonth=2020-01")
+    def heal(): Int = {
+      val root = new org.apache.hadoop.fs.Path(basePath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Merge.heal(fs, root, "pmonth", Merge.childNames(fs, root))
+    }
 
     // crash BETWEEN the renames: partition displaced to bak, tmp written
     // but unpublished — the month is invisible until recovery runs
     df(rows).coalesce(1).write.parquet(tmp.getAbsolutePath)
     assert(live.renameTo(bak))
     assert(!live.exists())
-    assert(Merge.recoverCompaction(spark, basePath) === 1)
+    assert(heal() === 1)
     assert(live.exists() && !bak.exists() && !tmp.exists())
     assert(baseRows() === want)
 
@@ -187,7 +192,7 @@ class MergeSpec extends SparkSpec {
     // stale bak + tmp left behind — recovery just cleans them up
     df(rows).coalesce(1).write.parquet(bak.getAbsolutePath)
     df(rows).coalesce(1).write.parquet(tmp.getAbsolutePath)
-    assert(Merge.recoverCompaction(spark, basePath) === 0)
+    assert(heal() === 0)
     assert(live.exists() && !bak.exists() && !tmp.exists())
     assert(baseRows() === want)
 
@@ -243,7 +248,7 @@ class MergeSpec extends SparkSpec {
     Merge.writePartitioned(df(rows), basePath, "d")
     // crash between compaction's renames: January displaced to its
     // backup, a complete rewrite left unpublished
-    df(rows.take(10)).coalesce(1).write.parquet(s"$basePath/.compact-tmp-2020-01")
+    df(rows.take(10)).coalesce(1).write.parquet(s"$basePath/.merge-tmp/pmonth=2020-01")
     assert(new java.io.File(s"$basePath/pmonth=2020-01")
       .renameTo(new java.io.File(s"$basePath/.compact-bak-2020-01")))
     // the cutoff (January 5th) falls inside the displaced month
@@ -252,6 +257,7 @@ class MergeSpec extends SparkSpec {
       .collect().map(r => r.getDate(0).toString -> r.getInt(1)).toSeq.sorted
     assert(got === (1 to 4).map(d => (f"2020-01-$d%02d", d)) :+ ("2020-01-05" -> 50))
     assert(!new java.io.File(basePath).list().exists(_.startsWith(".compact-")))
+    assert(!new java.io.File(s"$basePath/.merge-tmp").exists())
   }
 
   test("a base whose columns differ from the batch's fails the merge, both layouts") {

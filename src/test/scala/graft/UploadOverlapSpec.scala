@@ -111,8 +111,10 @@ class UploadOverlapSpec extends SparkSpec {
       assert(list(s"$root/error") === Set("u0.csv"))
       assert(snapshot(root) === before, "the base changed")
       assert(messages(root).isEmpty)
+      // the dead-letter path deleted the staged merge
+      assert(!new File(s"$root/base/.merge-tmp").exists())
+      assert(!new File(s"$root/base.tmp").exists())
 
-      // the next good upload's merge removes the leftover staged write
       upload(root, "u1.csv", "P6,2020-02-16,6.0")
       run(dirs)
       assert(messages(root) === Set("batch-1.msg"))
