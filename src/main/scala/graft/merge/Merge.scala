@@ -130,18 +130,18 @@ object Merge {
     * `<path>.bak` until the next rewrite or [[heal]] — a cheap
     * poor-man's version for rollback. */
   def overwriteAtomic(df: DataFrame, path: String): Unit =
-    stageOverwrite(df.sparkSession, path)(df.write.mode("overwrite").parquet(_))()
+    stageOverwrite(df.sparkSession, path)(df.write.mode("overwrite").parquet(_))
 
-  /** The write half of [[overwriteAtomic]]: `write` fills `<path>.tmp`
-    * (given its path; a stale one is deleted first); returns the
-    * [[publish]] that swaps it in. Until that runs, `path` is untouched. */
+  /** [[overwriteAtomic]] for any writer: `write` fills `<path>.tmp`
+    * (given its path; a stale one is deleted first), then [[publish]]
+    * swaps it in. A failed write leaves `path` untouched. */
   private[graft] def stageOverwrite(spark: SparkSession, path: String)(
-      write: String => Unit): () => Unit = {
+      write: String => Unit): Unit = {
     val fs = fsOf(spark, path)
     val tmp = new Path(path + ".tmp")
     fs.delete(tmp, true)
     write(tmp.toString)
-    () => publish(fs, tmp, new Path(path), new Path(path + ".bak"))
+    publish(fs, tmp, new Path(path), new Path(path + ".bak"))
   }
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
@@ -214,18 +214,6 @@ object Merge {
   /** THE cutoff merge, both layouts: publish (base rows below the
     * batch's cutoff) ∪ `batch`. `batch` is cached and `stats` is its
     * [[batchStats]]: nothing re-derives the cutoff; no dated row, no-op.
-    * [[stageMerge]] heals and writes the merged rows beside the base,
-    * then its publish step swaps them in. */
-  private[graft] def mergeBatch(spark: SparkSession, basePath: String,
-                                batch: DataFrame, dateCol: String,
-                                stats: BatchStats, partitioned: Boolean): Unit =
-    stageMerge(spark, basePath, batch, dateCol, stats, partitioned)()
-
-  /** [[mergeBatch]] up to its publish, which it returns: the base stays
-    * as it was until the returned step runs, so a caller can stage the
-    * merge beside other writes and publish only once those committed
-    * (a caller that drops it runs [[heal]], which deletes the staged
-    * dir; the next merge would too).
     *  1. [[heal]] first, from the one root listing that also yields the
     *     overlap months (unhealed, a month a crashed compaction
     *     displaced is rewritten from the batch alone and its rows below
@@ -234,19 +222,18 @@ object Merge {
     *  3. The base (partitioned: its cutoff month only) is read with its
     *     own footer schema — no inference job; differing columns fail
     *     the union loudly.
-    *  4. The staged write. Whole table: [[mergeAt]] to `<base>.tmp`
-    *     ([[stageOverwrite]]). Partitioned: the cutoff month's survivors
-    *     and the batch to `.merge-tmp`. Either is read by the write and
-    *     displaced only by the publish.
-    *  5. The publish (returned). Whole table: [[publish]] of
-    *     `<base>.tmp`. Partitioned: [[swapPartitions]] of exactly the
-    *     batch's months; older ones stay byte-identical. Overlap months
-    *     the batch does not cover are deleted after the swaps (a crash
-    *     leaves at worst stale rows; re-running converges). */
-  private[graft] def stageMerge(spark: SparkSession, basePath: String,
+    *  4. Whole table: [[mergeAt]] through [[stageOverwrite]]
+    *     (`<base>.tmp`, then [[publish]]). Partitioned: the cutoff
+    *     month's survivors and the batch are written to `.merge-tmp`,
+    *     then [[swapPartitions]] swaps in exactly the batch's months;
+    *     older ones stay byte-identical. Overlap months the batch does
+    *     not cover are deleted after the swaps (a crash leaves at worst
+    *     stale rows; re-running converges). Either staged dir is read by
+    *     the write and displaced only by the publish. */
+  private[graft] def mergeBatch(spark: SparkSession, basePath: String,
                                 batch: DataFrame, dateCol: String,
-                                stats: BatchStats, partitioned: Boolean): () => Unit =
-    stats.cut.fold(() => ()) { cut =>
+                                stats: BatchStats, partitioned: Boolean): Unit =
+    stats.cut.foreach { cut =>
       val fs = fsOf(spark, basePath)
       val root = new Path(basePath)
       val names = childNames(fs, root)
@@ -267,11 +254,9 @@ object Merge {
           .withColumn("pmonth", monthOf(dateCol))
           .write.mode("overwrite").partitionBy("pmonth")
           .parquet(new Path(root, ".merge-tmp").toString)
-        () => {
-          swapPartitions(fs, root, "pmonth", stats.months)
-          overlap.filterNot(stats.months).foreach { m =>
-            fs.delete(new Path(root, s"pmonth=$m"), true)
-          }
+        swapPartitions(fs, root, "pmonth", stats.months)
+        overlap.filterNot(stats.months).foreach { m =>
+          fs.delete(new Path(root, s"pmonth=$m"), true)
         }
       }
     }

@@ -907,7 +907,7 @@ object CurationStream {
           .write.partitionBy("bucket").parquet(staged)
         val n = spark.read.parquet(staged).count()
         fs.create(new Path(staged, annFitMarker(n)), true).close()
-      }()
+      }
       fs.delete(new Path(annPath + ".bak"), true)
       (centroids, model)
     } finally release()

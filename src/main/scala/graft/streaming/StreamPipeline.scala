@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.slf4j.LoggerFactory
-import scala.util.{Failure, Success, Try}
+import scala.util.{Success, Try}
 import graft.clean.Clean
 import graft.config.PipelineConf
 import graft.merge.Merge
@@ -29,17 +29,18 @@ import graft.util.{Checkpoints, Parallel}
   *       base table)
   *  ST4  late/overlapping data: staging rows win the overlap window
   *       (Merge semantics)
-  *  ST5  each micro-batch ends in one of three ways: merged (merge,
-  *       then notify); dead-lettered — the load (the pass, the cleaned
-  *       CSV, staging) failed or no row is dated, and the raw file(s)
-  *       move into errorDir (`S8`, reference `config.py:223-234`,
-  *       `main.py:52-53`); or failed before its offset commits — the
-  *       merge or notify threw, the query stops, and the restart replays
-  *       the batch (same rows, idempotent merge). A merge that keeps
-  *       failing stops the stream until the base is repaired. The merge
-  *       is staged while the load runs, and published only after the
-  *       load commits: a dead-lettered batch leaves the base as it was
-  *       and deletes its staged merge
+  *  ST5  each micro-batch ends in one of three ways, decided once,
+  *       right after the pass: dead-lettered — the pass failed or no row
+  *       is dated, and the raw file(s) move into errorDir before any
+  *       write starts (`S8`, reference `config.py:223-234`,
+  *       `main.py:52-53`); merged (the writes, then notify); or failed
+  *       before its offset commits — any later step threw (the cleaned
+  *       CSV, staging, the merge, notify), the query stops, and the
+  *       restart replays the batch (same rows, idempotent merge). A
+  *       write that keeps failing stops the stream until it is
+  *       repaired. One window needs two faults: a replay whose pass then
+  *       fails dead-letters an upload an earlier attempt already merged
+  *       (a failed notify's replay already could)
   *  ST6  post-update notification: one message file per merged batch
   *       in notifyDir, base64-encoded payload (`S9`/`S10` analog — a
   *       downstream `readStream` on notifyDir is the second trigger)
@@ -162,20 +163,18 @@ object StreamPipeline {
     * ([[graft.clean.Clean.typed]], each row's source file still
     * attached, undated rows kept) are checkpointed, and the pass that
     * fills that checkpoint also yields the batch's files, dated-row
-    * count, cutoff and months ([[graft.merge.Merge.batchStats]]).
-    * Everything after reads the cached rows: the dated ones are the
-    * cleaned batch, written as the cleaned CSV artifact and the staging
-    * table, and merged by [[graft.merge.Merge.stageMerge]] with that
-    * pass's statistics — the one cutoff merge, `partitionedBase` naming
-    * the layout. These three writes run at once
-    * ([[graft.util.Parallel.all]]), and the batch waits for all of them
-    * before it acts on any failure: a failed CSV or staging write
-    * dead-letters the upload, and the staged merge is deleted unpublished
-    * ([[graft.merge.Merge.heal]]);
-    * a failed staged merge after a good load fails the batch; otherwise
-    * the merge is published, then compaction (when due) and notify
-    * run. The critical path is the pass, the slowest of the three
-    * writes, the publish, and notify. */
+    * count, cutoff and months ([[graft.merge.Merge.batchStats]]). A
+    * batch whose pass threw or kept no dated row is dead-lettered there,
+    * before any write. Otherwise everything after reads the cached rows:
+    * the dated ones are the cleaned batch, written as the cleaned CSV
+    * artifact and the staging table, and merged by
+    * [[graft.merge.Merge.mergeBatch]] with that pass's statistics — the
+    * one cutoff merge, `partitionedBase` naming the layout. These three
+    * writes run at once ([[graft.util.Parallel.all]]); the batch waits
+    * for all of them, then the first failure fails the batch, and the
+    * restart replays it. Otherwise compaction (when due) and notify run.
+    * The critical path is the pass, the slowest of the three writes,
+    * and notify. */
   def run(spark: SparkSession, fields: Seq[FieldSpec], conf: PipelineConf,
           dirs: StreamDirs): org.apache.spark.sql.streaming.StreamingQuery = {
     val stringSchema = StructType(
@@ -201,63 +200,47 @@ object StreamPipeline {
         val pass = Try(Checkpoints.checkpointTrackedWith(
           Clean.typed(fields, conf, carry = Seq("__src"))(batch))(
           Merge.batchStats(_, conf.dateCol, srcCol = Some("__src"))))
-        // a failed pass listed no files: list them alone to dead-letter
-        val files = pass.map(_._2.files.toSeq).getOrElse(
-          batch.select("__src").distinct().collect().map(_.getString(0)).toSeq)
-        log.info(s"$tag: ${files.size} file(s)")
-        try {
-          // the load (main.py:52-53): with no dated row — every row failed
-          // cleaning, or a replayed batch whose file was already moved —
-          // nothing stages; a failure or an empty batch dead-letters
-          val loaded = pass.flatMap { case (typed, stats, _) => Try {
-            require(stats.kept > 0, "no dated row")
+        try pass match {
+          case Success((typed, stats, _)) if stats.kept > 0 =>
+            log.info(s"$tag: ${stats.files.size} file(s), ${stats.kept} dated rows")
             val cleaned = Clean.dropUndated(conf)(typed).drop("__src")
             // the three writes read only the cached batch, so they run at
-            // once; each returns what is left to publish, and only the
-            // merge leaves anything
-            val done = () => ()
-            val Seq(csv, table, merge) = Parallel.all(spark, 3)(Seq(
+            // once. A failure leaves foreachBatch once all have ended: the
+            // offset does not commit, and the restart replays this batch
+            Parallel.all(spark, 3)(Seq(
               // S4: durable cleaned artifact (reference writes the cleaned
               // file to a second bucket, config.py:146) — inspectable
               // between stages, overwritten per batch like the reference's
               // fixed per-type uri2.
-              () => { cleaned.write.mode("overwrite").option("header", true)
-                .csv(s"${dirs.basePath}_cleaned/${conf.name}"); done },
+              () => cleaned.write.mode("overwrite").option("header", true)
+                .csv(s"${dirs.basePath}_cleaned/${conf.name}"),
               // S5: truncate-load the staging table (WRITE_TRUNCATE,
               // config.py:161-171); table_new survives the batch, queryable
-              () => { Merge.overwriteAtomic(cleaned, staging); done },
-              () => Merge.stageMerge(spark, dirs.basePath, cleaned, conf.dateCol,
-                stats, dirs.partitionedBase)))
-            csv.get; table.get
-            log.info(s"$tag staged ${stats.kept} rows at $staging")
-            (stats, merge)
-          }}
-          loaded match {
-            case Failure(e) =>
-              // the staged merge is never published: the heal deletes it
-              log.warn(s"$tag not loaded, dead-lettered: ${e.getMessage}")
-              val base = new Path(dirs.basePath)
-              val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              Merge.heal(fs, base, "pmonth", Merge.childNames(fs, base))
-              deadLetter(spark, files, dirs.errorDir)
-            case Success((stats, merge)) =>
-              // the load committed: publish the merge. A merge or notify
-              // failure leaves foreachBatch: the offset does not commit,
-              // and the restart replays this batch
-              merge.get.apply()
-              log.info(s"$tag merged ${stats.kept} rows")
-              if (dirs.partitionedBase && dirs.compactEveryBatches > 0 &&
-                  (batchId + 1) % dirs.compactEveryBatches == 0)
-                try {
-                  val n = Merge.compactPartitions(spark, dirs.basePath)
-                  log.info(s"$tag compacted $n partition(s)")
-                } catch {
-                  case e: Throwable =>
-                    log.warn(s"$tag compaction failed " +
-                      s"(data unaffected, retried next trigger): ${e.getMessage}")
-                }
-              notify(spark, dirs.notifyDir, batchId, conf.name)
-          }
+              () => Merge.overwriteAtomic(cleaned, staging),
+              () => Merge.mergeBatch(spark, dirs.basePath, cleaned, conf.dateCol,
+                stats, dirs.partitionedBase))).foreach(_.get)
+            log.info(s"$tag staged at $staging and merged")
+            if (dirs.partitionedBase && dirs.compactEveryBatches > 0 &&
+                (batchId + 1) % dirs.compactEveryBatches == 0)
+              try {
+                val n = Merge.compactPartitions(spark, dirs.basePath)
+                log.info(s"$tag compacted $n partition(s)")
+              } catch {
+                case e: Throwable =>
+                  log.warn(s"$tag compaction failed " +
+                    s"(data unaffected, retried next trigger): ${e.getMessage}")
+              }
+            notify(spark, dirs.notifyDir, batchId, conf.name)
+          case _ =>
+            // the load (main.py:52-53) is decided here, before any write:
+            // the pass threw, or no row is dated — every row failed
+            // cleaning, or a replayed batch whose file was already moved.
+            // A failed pass listed no files: list them alone
+            val files = pass.map(_._2.files.toSeq).getOrElse(
+              batch.select("__src").distinct().collect().map(_.getString(0)).toSeq)
+            log.warn(s"$tag: ${files.size} file(s) not loaded, dead-lettered: " +
+              pass.fold(_.getMessage, _ => "no dated row"))
+            deadLetter(spark, files, dirs.errorDir)
         } finally pass.foreach(_._3())
       }
       .start()

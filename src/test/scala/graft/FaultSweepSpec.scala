@@ -19,18 +19,21 @@ import graft.streaming.StreamPipeline.StreamDirs
   * All dirs but the checkpoint live on [[FaultFs]], so every create,
   * rename, delete and mkdirs of the program is counted (the window
   * between a batch's work and its offset commit is StreamingSpec's
-  * replay test). An upload's cleaned CSV, staging and staged merge
-  * writes run at once, as do a compaction's month rewrites, so the
-  * k-th call names no fixed step: the count of a fault-free run must
-  * repeat, and each failure message names the call that failed. For
-  * every k, one good and one poisoned upload run into each base layout
-  * (the partitioned one compacts after the good batch); after the
-  * restart:
-  *  - the base equals a [[Merge.merge]] fold of the uploads that were
-  *    not dead-lettered;
-  *  - no upload is both merged and dead-lettered: each upload is in
-  *    errorDir or still in uploadDir, never both;
-  *  - each merged upload has exactly one notify message. */
+  * replay test). An upload's cleaned CSV, staging and merge writes run
+  * at once, as do a compaction's month rewrites, so the k-th call names
+  * no fixed step: the count of a fault-free run must repeat, and each
+  * failure message names the call that failed. For every k, one good
+  * and one poisoned upload run into each base layout (the partitioned
+  * one compacts after the good batch). The dead-letter is decided by
+  * the pass, before any write, so no filesystem fault can dead-letter
+  * the good upload; after the restart:
+  *  - the good upload is merged and still in uploadDir, never in
+  *    errorDir, and the poisoned one is in errorDir only;
+  *  - the base equals a [[Merge.merge]] of the good upload into the
+  *    seed;
+  *  - the good upload has exactly one notify message.
+  * A compaction of two fragmented months is swept the same way, on its
+  * own. */
 class FaultSweepSpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,7 +57,6 @@ class FaultSweepSpec extends SparkSpec {
   /** the good upload: cuts February at the 15th, replaces P3 and P4 */
   private val good = Seq(("P3", "2020-02-20", 30.0), ("P5", "2020-03-01", 5.0),
     ("P6", "2020-02-15", 6.0))
-  private val uploads = Seq("u0-good.csv", "u1-poisoned.csv")
 
   private def table(df: DataFrame): Seq[(String, String, Double)] =
     df.select("PolicyNumber", "PolicyExpiryDate", "Amount").collect()
@@ -74,13 +76,13 @@ class FaultSweepSpec extends SparkSpec {
     if (partitioned) Merge.writePartitioned(seed.repartition(12), s"$root/base", conf.dateCol)
     else seed.write.parquet(s"$root/base")
     new File(s"$root/upload").mkdirs()
-    Files.write(new File(s"$root/upload", uploads(0)).toPath,
+    Files.write(new File(s"$root/upload", "u0-good.csv").toPath,
       ("PolicyNumber,PolicyExpiryDate,Amount\n" +
         good.map { case (p, d, a) => s"$p,$d,$a" }.mkString("\n")).getBytes("UTF-8"))
-    Files.write(new File(s"$root/upload", uploads(1)).toPath,
+    Files.write(new File(s"$root/upload", "u1-poisoned.csv").toPath,
       "a,b,c\nx,y,z\n".getBytes("UTF-8"))
-    new File(s"$root/upload", uploads(1)).setLastModified(
-      new File(s"$root/upload", uploads(0)).lastModified() + 1000)
+    new File(s"$root/upload", "u1-poisoned.csv").setLastModified(
+      new File(s"$root/upload", "u0-good.csv").lastModified() + 1000)
 
     FaultFs.arm(k)
     val (calls, failed) = try {
@@ -93,15 +95,13 @@ class FaultSweepSpec extends SparkSpec {
 
     val dead = Option(new File(s"$root/error").list()).map(_.toSet).getOrElse(Set.empty)
     val left = new File(s"$root/upload").list().toSet
-    uploads.foreach(u => assert(dead(u) != left(u), s"$at: $u in error=${dead(u)}, upload=${left(u)}"))
-    assert(dead("u1-poisoned.csv"), at)
-    val merged = uploads.filterNot(dead)
+    assert(!dead("u0-good.csv") && left("u0-good.csv"), s"$at: the good upload was dead-lettered")
+    assert(dead("u1-poisoned.csv") && !left("u1-poisoned.csv"), at)
     val msgs = Option(new File(s"$root/notify").list()).getOrElse(Array.empty[String])
       .filter(_.endsWith(".msg"))
-    assert(msgs.length === merged.size, s"$at: messages ${msgs.toSeq}")
-    val want = merged.map(u => if (u == uploads(0)) rows(good: _*) else rows())
-      .foldLeft(seed)(Merge.merge(_, _, conf.dateCol))
-    assert(table(spark.read.parquet(s"$root/base")) === table(want), at)
+    assert(msgs.length === 1, s"$at: messages ${msgs.toSeq}")
+    assert(table(spark.read.parquet(s"$root/base")) ===
+      table(Merge.merge(seed, rows(good: _*), conf.dateCol)), at)
     if (partitioned && k == 0) assert(new File(s"$root/base/pmonth=2020-01").list()
       .count(_.endsWith(".parquet")) <= 8, "the good batch compacted January")
     calls
@@ -116,6 +116,48 @@ class FaultSweepSpec extends SparkSpec {
       assert(scenario(partitioned, 0) === n, "the count of a fault-free run repeats")
       (1 to n).foreach(k => scenario(partitioned, k))
     }
+  }
+
+  /** January and February, twelve one-row files each */
+  private def fragmented: DataFrame = spark.range(0, 24, 1, 24).select(
+    concat(lit("C"), $"id").as("PolicyNumber"),
+    expr("date_add(DATE'2020-01-01', CAST(id AS INT) + IF(id >= 12, 19, 0))")
+      .as("PolicyExpiryDate"),
+    $"id".cast("double").as("Amount"))
+
+  /** One compaction of a fragmented base with call `k` failing (0:
+    * none), then a fault-free one. Returns the faulted run's count of
+    * mutating calls. */
+  private def compaction(k: Int): Int = {
+    val root = tempDir("compact-sweep").toFile.getAbsolutePath
+    Merge.writePartitioned(fragmented, s"$root/base", conf.dateCol)
+    FaultFs.arm(k)
+    val (calls, failed) = try {
+      try Merge.compactPartitions(spark, s"faultfs:$root/base")
+      catch { case _: Exception if k > 0 => () } // the fault fails the compaction
+      (FaultFs.calls, FaultFs.failed)
+    } finally FaultFs.arm(0)
+    val at = s"k=$k (${failed.getOrElse("no call failed")})"
+    Merge.compactPartitions(spark, s"faultfs:$root/base")
+    val names = new File(s"$root/base").list().toSeq
+    assert(!names.contains(".merge-tmp"), s"$at: $names")
+    assert(!names.exists(_.startsWith(".compact-bak-")), s"$at: $names")
+    Seq("2020-01", "2020-02").foreach { m =>
+      val files = new File(s"$root/base/pmonth=$m").list().count(_.endsWith(".parquet"))
+      assert(files <= 8, s"$at: pmonth=$m holds $files files")
+    }
+    assert(table(spark.read.parquet(s"$root/base")) === table(fragmented), at)
+    calls
+  }
+
+  test("fault sweep, compaction: a failed call at any step converges on re-run") {
+    // the two months' writes race to create `.merge-tmp` (a recursive
+    // mkdirs creates a missing parent), so a run may make one call more
+    val ns = Seq(compaction(0), compaction(0), compaction(0))
+    info(s"N = ${ns.mkString(", ")} mutating calls in three fault-free compactions")
+    assert(ns.min > 0)
+    assert(ns.max - ns.min <= 1, "the count of a fault-free run repeats, but for the race")
+    (1 to ns.max).foreach(compaction)
   }
 }
 

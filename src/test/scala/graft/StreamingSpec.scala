@@ -100,7 +100,7 @@ class StreamingSpec extends SparkSpec {
       Seq("PolicyNumber", "PolicyExpiryDate", "Amount"))
   }
 
-  test("S5: merge failure leaves staging committed; updateFromStaging retries") {
+  test("S5: updateTable retries a merge from the persisted staging table") {
     val root = tempDir("stream-spec3").toFile.getAbsolutePath
     val basePath = s"$root/base"
     val stagingPath = s"$root/base_update"

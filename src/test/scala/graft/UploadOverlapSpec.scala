@@ -3,8 +3,9 @@ package graft
 import java.io.{File, IOException}
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import graft.config.PipelineConf
 import graft.merge.Merge
 import graft.schema.SchemaLoader.FieldSpec
@@ -12,10 +13,10 @@ import graft.streaming.StreamPipeline
 import graft.streaming.StreamPipeline.StreamDirs
 
 /** The three writes of one upload — the cleaned CSV, staging and the
-  * staged merge — run at once, and the merge is published only after
-  * the load (the CSV and staging) commits. Every dir but the checkpoint
-  * lives on [[FaultFs]], whose [[FaultFs.before]] hook gates or fails
-  * the writes by path. */
+  * merge — run at once, and a failed one fails the batch before its
+  * offset commits: the restart replays it, and nothing is dead-lettered.
+  * Every dir but the checkpoint lives on [[FaultFs]], whose
+  * [[FaultFs.before]] hook gates or fails the writes by path. */
 class UploadOverlapSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,12 +32,16 @@ class UploadOverlapSpec extends SparkSpec {
   spark.sparkContext.hadoopConfiguration
     .set("fs.faultfs.impl", classOf[FaultFs].getName)
 
+  private def rows(rs: (String, String, Double)*): DataFrame =
+    rs.toDF("PolicyNumber", "PolicyExpiryDate", "Amount")
+      .withColumn("PolicyExpiryDate", to_date($"PolicyExpiryDate"))
+
+  private val seed = rows(("P1", "2020-01-05", 1.0), ("P2", "2020-02-01", 2.0),
+    ("P3", "2020-02-20", 3.0))
+
   /** A seeded base of either layout and its dirs, all on `faultfs:`. */
   private def setup(prefix: String, partitioned: Boolean): (String, StreamDirs) = {
     val root = tempDir(prefix).toFile.getAbsolutePath
-    val seed = Seq(("P1", "2020-01-05", 1.0), ("P2", "2020-02-01", 2.0),
-      ("P3", "2020-02-20", 3.0)).toDF("PolicyNumber", "PolicyExpiryDate", "Amount")
-      .withColumn("PolicyExpiryDate", to_date($"PolicyExpiryDate"))
     if (partitioned) Merge.writePartitioned(seed, s"$root/base", conf.dateCol)
     else seed.write.parquet(s"$root/base")
     new File(s"$root/upload").mkdirs()
@@ -61,24 +66,13 @@ class UploadOverlapSpec extends SparkSpec {
     spark.read.parquet(s"$root/base").collect()
       .map(r => r.getAs[String]("PolicyNumber") -> r.getAs[Double]("Amount")).toSet
 
-  /** Every visible file of the base, by relative path, with its bytes
-    * (dot-prefixed staged and backup dirs are not the table). */
-  private def snapshot(root: String): Map[String, Seq[Byte]] = {
-    val base = new File(s"$root/base").toPath
-    val files = Files.walk(base)
-    try files.iterator().asScala.filter(Files.isRegularFile(_)).map(base.relativize)
-      .filterNot(_.iterator().asScala.exists(_.toString.startsWith(".")))
-      .map(p => p.toString -> Files.readAllBytes(base.resolve(p)).toSeq).toMap
-    finally files.close()
-  }
-
   test("an upload's cleaned CSV and staging writes run at once") {
     val (root, dirs) = setup("overlap", partitioned = true)
     upload(root, "u0.csv", "P4,2020-02-15,4.0", "P5,2020-03-01,5.0")
     // each write's first file create waits, up to 30 s, until the other
-    // write has created its first file too: serial writes time out and
-    // the upload is dead-lettered. Only two writes are gated, so the
-    // two task slots of the test session cannot starve.
+    // write has created its first file too: serial writes time out, and
+    // the failed batch stops the query. Only two writes are gated, so
+    // the two task slots of the test session cannot starve.
     val targets = Seq(s"$root/base_cleaned/", s"$root/base_update.tmp/")
     val gate = new CountDownLatch(2)
     val passed = ConcurrentHashMap.newKeySet[String]()
@@ -96,29 +90,30 @@ class UploadOverlapSpec extends SparkSpec {
     assert(passed.size === 2)
   }
 
-  Seq(false, true).foreach { partitioned =>
+  for {
+    partitioned <- Seq(false, true)
+    (write, target) <- Seq("staging" -> "base_update.tmp/", "CSV" -> "base_cleaned/")
+  } {
     val layout = if (partitioned) "partitioned" else "whole-table"
-    test(s"$layout base: a failed staging write never publishes the staged merge") {
+    test(s"$layout base: a failed $write write is retried by the restart") {
       val (root, dirs) = setup(s"load-fails-$layout", partitioned)
-      val before = snapshot(root)
       upload(root, "u0.csv", "P4,2020-02-15,4.0", "P5,2020-03-01,5.0")
-      // staging fails by path, so the staged merge, running beside it,
-      // still completes
+      // the write fails by path, so the merge, running beside it, may
+      // publish: the replay re-derives the same base
       FaultFs.before = what =>
-        if (what.startsWith("create ") && what.contains(s"$root/base_update.tmp/"))
-          throw new IOException(s"staging refused: $what")
-      try run(dirs) finally FaultFs.before = _ => ()
-      assert(list(s"$root/error") === Set("u0.csv"))
-      assert(snapshot(root) === before, "the base changed")
+        if (what.startsWith("create ") && what.contains(s"$root/$target"))
+          throw new IOException(s"$write refused: $what")
+      try intercept[StreamingQueryException](run(dirs))
+      finally FaultFs.before = _ => ()
+      assert(list(s"$root/upload") === Set("u0.csv"))
+      assert(list(s"$root/error").isEmpty, "the upload was dead-lettered")
       assert(messages(root).isEmpty)
-      // the dead-letter path deleted the staged merge
-      assert(!new File(s"$root/base/.merge-tmp").exists())
-      assert(!new File(s"$root/base.tmp").exists())
 
-      upload(root, "u1.csv", "P6,2020-02-16,6.0")
       run(dirs)
-      assert(messages(root) === Set("batch-1.msg"))
-      assert(baseRows(root) === Set("P1" -> 1.0, "P2" -> 2.0, "P6" -> 6.0))
+      val want = Merge.merge(seed, rows(("P4", "2020-02-15", 4.0), ("P5", "2020-03-01", 5.0)),
+        conf.dateCol).collect().map(r => r.getString(0) -> r.getDouble(2)).toSet
+      assert(baseRows(root) === want)
+      assert(messages(root) === Set("batch-0.msg"))
       assert(!new File(s"$root/base/.merge-tmp").exists())
       assert(!new File(s"$root/base.tmp").exists())
     }
